@@ -1,6 +1,22 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** One bench row: name, seconds (-1 when it failed), error text. */
+  type Timing = (String, Double, Option[String])
+
+  /** One-line error text for a bench row. */
+  def errorText(e: Throwable): String =
+    e.getClass.getSimpleName + ": " +
+      String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(120)
+
+  /** Runs one block of bench rows. A block that throws yields ONE error
+    * row named `name` instead of vanishing (a failed load used to just
+    * shrink `n`); fatal errors (OOM, interrupts) propagate. */
+  def block(name: String)(body: => Seq[Timing]): Seq[Timing] =
+    try body
+    catch { case NonFatal(e) => Seq((name, -1.0, Some(errorText(e)))) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine, not a constant: an unset env var used to
@@ -56,7 +72,7 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // untimed warm-up: JIT/codegen/shuffle-machinery spin-up otherwise
     // lands entirely on whichever query sorts first (~8 s of noise)
-    try {
+    val warmup = block("warmup") {
       SparkEntry.entry(spark).count()
       // build the write-time ANN partition layout outside the timings,
       // like the BerlinMOD load below (index builds are load phase — the
@@ -70,7 +86,8 @@ object Bench {
       graft.operators.Similarity.buildIvfSq8Layout(spark, sfDir)
       graft.operators.Retrieval.buildPostingLayout(spark, sfDir)
       spark.catalog.clearCache()
-    } catch { case _: Throwable => () }
+      Seq.empty
+    }
     // fixed order + cache isolation so one query's cached/cached-adjacent
     // state cannot inflate the next one's wall clock. berlinmod_e2e is
     // skipped here: the brussels-scale per-query timings below replace it.
@@ -117,7 +134,7 @@ object Bench {
         "65536"
       else "128"
     def timed(work: Seq[(String, () => Unit)], clear: Boolean = true,
-              passes: Int = 2): Seq[(String, Double, Option[String])] =
+              passes: Int = 2): Seq[Timing] =
       for (pass <- 0 until passes; (name, run) <- work) yield {
         metrics.reset(name)
         spark.conf.set(FallbackKey, aggThreshold(name))
@@ -126,9 +143,7 @@ object Bench {
         val (u0, s0) = cpuStat(); val g0 = gcMs
         val t0 = System.nanoTime()
         val err = try { run(); None } catch {
-          case e: Throwable =>
-            Some(e.getClass.getSimpleName + ": " +
-              String.valueOf(e.getMessage).replaceAll("\\s+", " ").take(120))
+          case e: Throwable => Some(errorText(e))
         }
         val dt = (System.nanoTime() - t0) / 1e9
         val (u1, s1) = cpuStat()
@@ -146,8 +161,7 @@ object Bench {
       }
     // min over the passes that SUCCEEDED; a query with no successful pass
     // surfaces as sec=-1 plus an "err" entry
-    def minPerQuery(ts: Seq[(String, Double, Option[String])])
-        : Seq[(String, Double, Option[String])] =
+    def minPerQuery(ts: Seq[Timing]): Seq[Timing] =
       ts.groupBy(_._1).map { case (n, xs) =>
         val ok = xs.filter(_._3.isEmpty)
         if (ok.nonEmpty) (n, ok.map(_._2).min, None)
@@ -161,7 +175,7 @@ object Bench {
         }))
     // BerlinMOD at the reference's brussels scale (141 vehicles,
     // ~1600 trips — BASELINE.md) for a direct per-query comparison
-    val bmTimes = try {
+    val bmTimes = block("berlinmod_1x") {
       // settle before the block the judge reads against BASELINE.md:
       // the 120 preceding queries leave heap/GC debris that r7 measured
       // as ~1.3x drift on these rows with no code change
@@ -190,13 +204,13 @@ object Bench {
         graft.berlinmod.BerlinMod.queries(spark).map { case (n, df) =>
           s"berlinmod_$n" -> (() => { df.count(); () })
         }, clear = false, passes = 3))
-    } catch { case _: Throwable => Seq.empty }
+    }
     // Scale curve: same workload at 10x vehicles in the SAME city area.
     // With the (hour, cell) segment join key, pair work grows with local
     // density (~linear in fleet at fixed area x duration), not fleet^2 —
     // these four timings vs their 1x rows are the evidence. Load stays
     // untimed, like the 1x block.
-    val bm10Times = try {
+    val bm10Times = block("berlinmod_10x") {
       spark.catalog.clearCache() // drop the 1x load artifacts first
       spark.conf.set(FallbackKey, "128")
       graft.berlinmod.BerlinMod.load(spark, nVehicles = 1410,
@@ -214,7 +228,7 @@ object Bench {
           .filter(p => wanted(p._1)).map { case (n, df) =>
             s"berlinmod_${n}_10x" -> (() => { df.count(); () })
           }, clear = false))
-    } catch { case _: Throwable => Seq.empty }
+    }
     // 100x (14 100 vehicles, same area): the second decade of the scale
     // curve. Generation goes distributed above the BigFleet threshold
     // (the driver never holds the ~11.6M points — fits the default 8 GB
@@ -223,7 +237,7 @@ object Bench {
     // queries to a few seconds, so the min-of-two contention defense
     // (observed 8-22 s swings for the same work on this shared box) now
     // costs less than the noise it removes.
-    val bm100Times = try {
+    val bm100Times = block("berlinmod_100x") {
       spark.catalog.clearCache()
       // drop debris from the 120 preceding queries before the timed
       // block: in r6 the in-bench 100x rows read up to 3x above the
@@ -243,14 +257,14 @@ object Bench {
           .filter(p => wanted(p._1)).map { case (n, df) =>
             s"berlinmod_${n}_100x" -> (() => { df.count(); () })
           }, clear = false, passes = 3))
-    } catch { case _: Throwable => Seq.empty }
+    }
     // Pipeline-operator scale curve (r6 verdict #1): synthetic corpus
     // ([[graft.scale.SynthCorpus]] — Heaps-law vocabulary growth,
     // planted dups) at 10x/100x the sf0.1 base, timing the six
     // operators whose 100 TB story needs measured decades, through the
     // UNCHANGED gate entries. Generation is untimed load phase, like
     // the BerlinMOD and ANN-layout builds.
-    val pipeScaleTimes = try {
+    val pipeScaleTimes = block("pipeline_scale") {
       spark.catalog.clearCache()
       System.gc()
       (for (mult <- Seq(10, 100)) yield {
@@ -270,8 +284,8 @@ object Bench {
               (() => { SparkEntry.queries(n)(spark, dir).count(); () })
           }))
       }).flatten
-    } catch { case _: Throwable => Seq.empty }
-    val results = (results0 ++ bmTimes ++ bm10Times ++ bm100Times ++
+    }
+    val results = (warmup ++ results0 ++ bmTimes ++ bm10Times ++ bm100Times ++
       pipeScaleTimes).sortBy(_._1)
     // r4's official artifact died because the single stdout line carried
     // 96 queries at full double precision (~4 KB) and overflowed the

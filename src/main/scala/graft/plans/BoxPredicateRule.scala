@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.{MobCall, MobCodec, MobSchemas, VSpan, VSpanF, VSTBox, VTBox}
@@ -19,22 +20,50 @@ import graft.functions.{MobCall, MobCodec, MobSchemas, VSpan, VSpanF, VSTBox, VT
   *     b.xmax >= cXmin AND b.ymin <= cYmax AND ... (time likewise)
   *
   * The original predicate is kept (exact bound-inclusivity semantics);
-  * the derived conjuncts are a superset filter that Catalyst's
-  * PushDownPredicates (same fixed-point batch) pushes into the parquet
-  * scan, where nested-column min/max statistics prune row groups — a
-  * user writing the natural box predicate gets pruning without
-  * hand-flattened columns. Spans (tstzspan etc.) get the same
-  * treatment on lower/upper.
+  * the derived conjuncts are a superset filter that PushDownPredicates
+  * pushes into the parquet scan, where nested-column min/max statistics
+  * prune row groups — a user writing the natural box predicate gets
+  * pruning without hand-flattened columns. Spans (tstzspan etc.) get the
+  * same treatment on lower/upper.
+  *
+  * Idempotence contract: each `op_overlaps` conjunct is expanded exactly
+  * once, and a Filter whose box conjuncts are all expanded is returned
+  * unchanged, so the operator-optimization batches reach their fixed
+  * point instead of running to `spark.sql.optimizer.maxIterations`. The
+  * rule cannot recognise its own output by shape: BooleanSimplification
+  * and SimplifyBinaryComparison rewrite the `hasX = false OR cmp` guards
+  * (to `NOT hasX OR cmp`, then factor them together) in the same batch.
+  * Instead the expanded conjunct is replaced by a COPY carrying the
+  * `Expanded` tag, which Catalyst's transforms carry along when they
+  * rebuild the node (filter pushdown through a view's Project, constant
+  * folding of the literal box). The tag goes on a copy, never on the
+  * analyzed plan's instance, because the layout writer re-optimizes the
+  * same analyzed plan under another session and must derive again.
   */
 object BoxPredicateRule extends Rule[LogicalPlan] {
+
+  /** Marks an `op_overlaps` conjunct whose ranges are already in its Filter. */
+  private val Expanded = TreeNodeTag[Unit]("graft.boxPredicateExpanded")
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, child) =>
       val conjuncts = split(cond)
-      val derived = conjuncts.flatMap(ranges)
-        .filterNot(d => conjuncts.exists(_.semanticEquals(d)))
-      if (derived.isEmpty) f
-      else Filter(derived.foldLeft(cond)(And), child)
+      val expanded = conjuncts.map { c =>
+        c -> (if (c.getTagValue(Expanded).isDefined) Nil else ranges(c))
+      }
+      if (expanded.forall(_._2.isEmpty)) f
+      else {
+        val derived = expanded.flatMap(_._2).distinct
+          .filterNot(d => conjuncts.exists(_.semanticEquals(d)))
+        val kept = expanded.map {
+          case (c, Nil) => c
+          case (c, _) =>
+            val marked = c.clone()
+            marked.setTagValue(Expanded, ())
+            marked
+        }
+        Filter((kept ++ derived).reduceLeft(And), child)
+      }
   }
 
   private def split(e: Expression): Seq[Expression] = e match {
@@ -133,8 +162,14 @@ object FastRoundRule extends Rule[LogicalPlan] {
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
   * `SparkSession.builder.withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => BoxPredicateRule)
-    e.injectOptimizerRule(_ => FastRoundRule)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
+}
+
+object GraftExtensions {
+  /** Every optimizer rule the extension injects. Each one runs inside
+    * Catalyst's fixed-point operator-optimization batches, so each must
+    * be idempotent: a rule that changes the plan on every iteration runs
+    * its batch to `spark.sql.optimizer.maxIterations`. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(BoxPredicateRule, FastRoundRule)
 }
