@@ -17,6 +17,12 @@ object Bench {
     try body
     catch { case NonFatal(e) => Seq((name, -1.0, Some(errorText(e)))) }
 
+  /** Runs one bench query: None, or the error text of a non-fatal
+    * failure; fatal errors propagate as in [[block]]. */
+  def attempt(run: => Unit): Option[String] =
+    try { run; None }
+    catch { case NonFatal(e) => Some(errorText(e)) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the machine, not a constant: an unset env var used to
@@ -142,9 +148,7 @@ object Bench {
           interruptOnCancel = false)
         val (u0, s0) = cpuStat(); val g0 = gcMs
         val t0 = System.nanoTime()
-        val err = try { run(); None } catch {
-          case e: Throwable => Some(errorText(e))
-        }
+        val err = attempt(run())
         val dt = (System.nanoTime() - t0) / 1e9
         val (u1, s1) = cpuStat()
         System.err.println(f"[bench] $name%-28s ${dt}%7.2f s " +

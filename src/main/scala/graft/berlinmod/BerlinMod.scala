@@ -598,7 +598,7 @@ object BerlinMod {
       "q6" -> s.sql(q6Sql(cells = true)),
       "q7" -> s.sql(
         // Semantics note: atGeometry(trip, POINT) restricts to instants
-        // whose position equals the point exactly (MobRuntime atvalues),
+        // whose position equals the point exactly (MobRestriction's atValues),
         // so MIN(startTimestamp(...)) = MIN t over exact instant matches;
         // groups where every trip contributed NULL are eliminated by the
         // `Instant <= mi` join below in the original formulation too.

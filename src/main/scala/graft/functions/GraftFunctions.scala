@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Registers every mobility function name as a [[MobCall]] builder in the
+/** Registers every [[MobFunctions]] name as a [[MobCall]] builder in the
   * session's function registry — the Spark equivalent of the reference's
   * `RegisterScalarFunction` block (ref src/mobilityduck_extension.cpp:102-138).
   * Call `GraftFunctions.register(spark)` once per session; then
@@ -13,66 +13,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * and `functions.call_function("attime", col, col)` both work.
   */
 object GraftFunctions {
-
-  /** Every registered function name (dispatch in [[MobRuntime]]). */
-  val names: Seq[String] = Seq(
-    // constructors / parsers
-    "tint", "tbool", "tfloat", "ttext", "tgeompoint", "tgeogpoint",
-    "intspan", "bigintspan", "floatspan", "datespan", "tstzspan", "period",
-    "intset", "bigintset", "floatset", "textset", "dateset", "tstzset",
-    "intspanset", "bigintspanset", "floatspanset", "datespanset", "tstzspanset",
-    "textspanset",
-    "spanset", "set", "tbox", "stbox",
-    "tintseq", "tboolseq", "tfloatseq", "tintseqset", "tboolseqset",
-    "tfloatseqset", "tgeompointseq", "tgeompointseqset",
-    "tgeometry", "tgeometryseq", "tgeometryinst", "merge", "geomset", "geogset",
-    // output
-    "astext", "asewkt", "st_astext", "tempsubtype", "interp",
-    // accessors
-    "memsize", "numvalues", "numinstants", "numtimestamps",
-    "startvalue", "endvalue", "minvalue", "maxvalue", "valuen", "getvalue",
-    "getvalues", "mininstant", "maxinstant", "instantn", "startinstant",
-    "endinstant", "gettimestamp", "starttimestamp", "endtimestamp",
-    "gettime", "duration", "timespan", "valuespan", "valueset",
-    "sequences", "numsequences", "sequencen", "startsequence", "endsequence",
-    "lower", "upper", "lowerinc", "upperinc", "width", "numspans",
-    "startspan", "endspan", "spann",
-    "hasx", "hast", "hasz", "xmin", "xmax", "ymin", "ymax", "zmin", "zmax",
-    "xmininc", "xmaxinc", "tmin", "tmax", "tmininc", "tmaxinc",
-    "area", "isgeodetic", "srid",
-    // transforms
-    "shift", "scale", "shiftscale", "round", "floor", "ceil",
-    "radians", "degrees", "initcap", "asbinary", "stboxfrombinary",
-    "shiftvalue", "scalevalue", "shiftscalevalue", "shifttime", "scaletime",
-    "shiftscaletime",
-    "expandvalue", "expandtime", "expandspace", "setsrid", "transform",
-    "setinterp",
-    // restriction
-    "attime", "atvalues", "valueattimestamp", "atgeometry", "whentrue",
-    // spatial
-    "length", "speed", "trajectory", "edwithin", "adisjoint", "tdwithin",
-    "mindistance", "st_point", "st_transform", "st_x", "st_y",
-    "st_geomfromtext",
-    "st_intersects", "st_contains", "st_distance", "st_collect",
-    // r13 spatial-measure tier (duckdb-spatial subset — r12 missing #3)
-    "st_area", "st_perimeter", "st_length", "st_npoints", "st_isvalid",
-    "st_centroid", "st_envelope", "st_buffer", "st_makepolygon",
-    // r14 clipping tier (convex-window Sutherland–Hodgman — verdict #3 —
-    // plus the per-segment Liang–Barsky trajectory tile-clip)
-    "st_clip_rect", "st_intersection", "st_union_area",
-    "st_makeline", "st_ngeometries", "st_diff_rect",
-    "set_elements",
-    // the reference benchmark q5's _gs spellings (aliased in MobRuntime)
-    "collect_gs", "trajectory_gs", "distance_gs",
-    // topological operators (SQL spellings && / @> / <@ are rewritten to
-    // these names by the query translation layer — SURVEY §2.2 note)
-    "op_overlaps", "op_contains", "op_contained", "op_adjacent",
-    // casts (:: rewrites)
-    "to_stbox", "to_tbox", "to_tstzspan", "to_intspan", "to_bigintspan",
-    "to_datespan", "to_floatspan", "to_tstzspanset", "to_intspanset",
-    "to_bigintspanset", "to_datespanset", "to_floatspanset", "to_tfloat",
-    "to_tstzset", "to_intset", "to_dateset", "to_floatset", "to_textset",
-    "to_geometry", "geometry", "span")
 
   // Register once per session: re-registering is harmless but makes
   // SimpleFunctionRegistry log a replace-WARN per name per call — hundreds
@@ -138,7 +78,7 @@ object GraftFunctions {
       (e: Seq[Expression]) => UnicodeNormalize(e(0), "NFKC"), "built-in")
     registry.createOrReplaceTempFunction("strip_accents",
       (e: Seq[Expression]) => StripAccents(e(0)), "built-in")
-    names.foreach { n =>
+    MobFunctions.table.keys.toSeq.sorted.foreach { n =>
       // In Spark 4 even the Column API (functions.round etc.) resolves
       // through the session registry, so a name like `round`/`length`/
       // `lower` must keep its builtin behavior for non-mobility inputs:

@@ -166,49 +166,20 @@ object MobSchemas {
 
   private def names(st: StructType): Seq[String] = st.fields.toSeq.map(_.name)
 
+  private lazy val signatures: Seq[(Seq[String], String)] = Seq(
+    span -> "span", spanF -> "spanF", set -> "set", setF -> "setF",
+    setS -> "setS", spanSet -> "spanSet", spanSetF -> "spanSetF",
+    tnumI -> "tnumI", tnumF -> "tnumF", tnumB -> "tnumB", ttext -> "ttext",
+    tpoint -> "tpoint", tgeom -> "tgeom", spanSetS -> "spanSetS",
+    gset -> "gset", tbox -> "tbox", stbox -> "stbox")
+    .map { case (st, k) => names(st) -> k }
+
   /** Identify one of our schemas (by field-name signature). */
   def kindOf(dt: DataType): Option[String] = dt match {
     case st: StructType =>
       val n = names(st)
-      if (n == names(span)) Some("span")
-      else if (n == names(spanF)) Some("spanF")
-      else if (n == names(set)) Some("set")
-      else if (n == names(setF)) Some("setF")
-      else if (n == names(setS)) Some("setS")
-      else if (n == names(spanSet)) Some("spanSet")
-      else if (n == names(spanSetF)) Some("spanSetF")
-      else if (n == names(tnumI)) Some("tnumI")
-      else if (n == names(tnumF)) Some("tnumF")
-      else if (n == names(tnumB)) Some("tnumB")
-      else if (n == names(ttext)) Some("ttext")
-      else if (n == names(tpoint)) Some("tpoint")
-      else if (n == names(tgeom)) Some("tgeom")
-      else if (n == names(spanSetS)) Some("spanSetS")
-      else if (n == names(gset)) Some("gset")
-      else if (n == names(tbox)) Some("tbox")
-      else if (n == names(stbox)) Some("stbox")
-      else None
+      signatures.collectFirst { case (sig, k) if sig == n => k }
     case _ => None
-  }
-
-  def schemaFor(kind: String): StructType = kind match {
-    case "span" => span
-    case "spanF" => spanF
-    case "set" => set
-    case "setF" => setF
-    case "setS" => setS
-    case "spanSet" => spanSet
-    case "spanSetF" => spanSetF
-    case "spanSetS" => spanSetS
-    case "tnumI" => tnumI
-    case "tnumF" => tnumF
-    case "tnumB" => tnumB
-    case "tgeom" => tgeom
-    case "gset" => gset
-    case "ttext" => ttext
-    case "tpoint" => tpoint
-    case "tbox" => tbox
-    case "stbox" => stbox
   }
 }
 
@@ -218,83 +189,83 @@ object MobCodec {
 
   // ---- decode ----
 
-  def decode(dt: DataType, v: Any): MobVal = {
-    val row = v.asInstanceOf[InternalRow]
-    MobSchemas.kindOf(dt).get match {
-      case "span" => VSpan(SpanL(row.getLong(0), row.getLong(1),
-        row.getBoolean(2), row.getBoolean(3)), row.getByte(4))
-      case "spanF" => VSpanF(SpanD(row.getDouble(0), row.getDouble(1),
-        row.getBoolean(2), row.getBoolean(3)))
-      case "set" => VSet(row.getArray(0).toLongArray(), row.getByte(1))
-      case "setF" => VSetF(row.getArray(0).toDoubleArray())
-      case "setS" => VSetS(strArray(row.getArray(0)))
-      case "spanSet" =>
-        val arr = row.getArray(0)
-        VSpanSet((0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 4)
-          SpanL(r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3))
-        }.toArray, row.getByte(1))
-      case "spanSetF" =>
-        val arr = row.getArray(0)
-        VSpanSetF((0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 4)
-          SpanD(r.getDouble(0), r.getDouble(1), r.getBoolean(2), r.getBoolean(3))
-        }.toArray)
-      case "spanSetS" =>
-        val arr = row.getArray(0)
-        VSpanSetS((0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 4)
-          SpanS(r.getUTF8String(0).toString, r.getUTF8String(1).toString,
-            r.getBoolean(2), r.getBoolean(3))
-        }.toArray)
-      case "tnumI" | "tnumF" | "tnumB" =>
-        val seqs = decodeSeqArr(row.getArray(2))
-        val kind: Byte = MobSchemas.kindOf(dt).get match {
-          case "tnumI" => 0
-          case "tnumF" => 1
-          case _ => 2
-        }
-        VTNum(TNum(row.getByte(0), row.getByte(1), seqs), kind)
-      case "ttext" =>
-        val arr = row.getArray(2)
-        val seqs = (0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 4)
-          TTextSeq(strArray(r.getArray(0)), r.getArray(1).toLongArray(),
-            r.getBoolean(2), r.getBoolean(3))
-        }.toArray
-        VTText(TText(row.getByte(0), row.getByte(1), seqs))
-      case "tpoint" =>
-        val arr = row.getArray(3)
-        val seqs = (0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 6)
-          TPointSeq(r.getArray(0).toDoubleArray(), r.getArray(1).toDoubleArray(),
-            r.getArray(2).toLongArray(), r.getBoolean(3), r.getBoolean(4),
-            if (r.isNullAt(5)) null else r.getArray(5).toDoubleArray())
-        }.toArray
-        VTPoint(TPoint(row.getByte(0), row.getByte(1), row.getInt(2), seqs))
-      case "tgeom" =>
-        val arr = row.getArray(3)
-        val seqs = (0 until arr.numElements()).map { i =>
-          val r = arr.getStruct(i, 4)
-          val wArr = r.getArray(0)
-          TGeomSeq((0 until wArr.numElements()).map(wArr.getBinary).toArray,
-            r.getArray(1).toLongArray(), r.getBoolean(2), r.getBoolean(3))
-        }.toArray
-        VTGeom(TGeom(row.getByte(0), row.getByte(1), row.getInt(2), seqs))
-      case "gset" =>
-        val wArr = row.getArray(0)
-        VGeoSet(GeoSet((0 until wArr.numElements()).map(wArr.getBinary).toArray,
-          row.getInt(1), row.getBoolean(2)))
-      case "tbox" =>
-        VTBox(TBox(row.getDouble(0), row.getDouble(1), row.getBoolean(2), row.getBoolean(3),
-          row.getLong(4), row.getLong(5), row.getBoolean(6), row.getBoolean(7),
-          row.getBoolean(8), row.getBoolean(9), row.getBoolean(10)))
-      case "stbox" =>
-        VSTBox(STBox(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3),
-          row.getDouble(4), row.getDouble(5), row.getLong(6), row.getLong(7),
-          row.getBoolean(8), row.getBoolean(9), row.getInt(10), row.getBoolean(11),
-          row.getBoolean(12), row.getBoolean(13), row.getBoolean(14)))
-    }
+  def decode(dt: DataType, v: Any): MobVal =
+    decoder(MobSchemas.kindOf(dt).get)(v.asInstanceOf[InternalRow])
+
+  /** The decoder of one schema kind, resolved once per call site. */
+  def decoder(kind: String): InternalRow => MobVal = kind match {
+    case "span" => row => VSpan(SpanL(row.getLong(0), row.getLong(1),
+      row.getBoolean(2), row.getBoolean(3)), row.getByte(4))
+    case "spanF" => row => VSpanF(SpanD(row.getDouble(0), row.getDouble(1),
+      row.getBoolean(2), row.getBoolean(3)))
+    case "set" => row => VSet(row.getArray(0).toLongArray(), row.getByte(1))
+    case "setF" => row => VSetF(row.getArray(0).toDoubleArray())
+    case "setS" => row => VSetS(strArray(row.getArray(0)))
+    case "spanSet" => row =>
+      val arr = row.getArray(0)
+      VSpanSet((0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 4)
+        SpanL(r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3))
+      }.toArray, row.getByte(1))
+    case "spanSetF" => row =>
+      val arr = row.getArray(0)
+      VSpanSetF((0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 4)
+        SpanD(r.getDouble(0), r.getDouble(1), r.getBoolean(2), r.getBoolean(3))
+      }.toArray)
+    case "spanSetS" => row =>
+      val arr = row.getArray(0)
+      VSpanSetS((0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 4)
+        SpanS(r.getUTF8String(0).toString, r.getUTF8String(1).toString,
+          r.getBoolean(2), r.getBoolean(3))
+      }.toArray)
+    case "tnumI" | "tnumF" | "tnumB" =>
+      val k: Byte = kind match {
+        case "tnumI" => 0
+        case "tnumF" => 1
+        case _ => 2
+      }
+      row => VTNum(TNum(row.getByte(0), row.getByte(1), decodeSeqArr(row.getArray(2))), k)
+    case "ttext" => row =>
+      val arr = row.getArray(2)
+      val seqs = (0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 4)
+        TTextSeq(strArray(r.getArray(0)), r.getArray(1).toLongArray(),
+          r.getBoolean(2), r.getBoolean(3))
+      }.toArray
+      VTText(TText(row.getByte(0), row.getByte(1), seqs))
+    case "tpoint" => row =>
+      val arr = row.getArray(3)
+      val seqs = (0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 6)
+        TPointSeq(r.getArray(0).toDoubleArray(), r.getArray(1).toDoubleArray(),
+          r.getArray(2).toLongArray(), r.getBoolean(3), r.getBoolean(4),
+          if (r.isNullAt(5)) null else r.getArray(5).toDoubleArray())
+      }.toArray
+      VTPoint(TPoint(row.getByte(0), row.getByte(1), row.getInt(2), seqs))
+    case "tgeom" => row =>
+      val arr = row.getArray(3)
+      val seqs = (0 until arr.numElements()).map { i =>
+        val r = arr.getStruct(i, 4)
+        val wArr = r.getArray(0)
+        TGeomSeq((0 until wArr.numElements()).map(wArr.getBinary).toArray,
+          r.getArray(1).toLongArray(), r.getBoolean(2), r.getBoolean(3))
+      }.toArray
+      VTGeom(TGeom(row.getByte(0), row.getByte(1), row.getInt(2), seqs))
+    case "gset" => row =>
+      val wArr = row.getArray(0)
+      VGeoSet(GeoSet((0 until wArr.numElements()).map(wArr.getBinary).toArray,
+        row.getInt(1), row.getBoolean(2)))
+    case "tbox" => row =>
+      VTBox(TBox(row.getDouble(0), row.getDouble(1), row.getBoolean(2), row.getBoolean(3),
+        row.getLong(4), row.getLong(5), row.getBoolean(6), row.getBoolean(7),
+        row.getBoolean(8), row.getBoolean(9), row.getBoolean(10)))
+    case "stbox" => row =>
+      VSTBox(STBox(row.getDouble(0), row.getDouble(1), row.getDouble(2), row.getDouble(3),
+        row.getDouble(4), row.getDouble(5), row.getLong(6), row.getLong(7),
+        row.getBoolean(8), row.getBoolean(9), row.getInt(10), row.getBoolean(11),
+        row.getBoolean(12), row.getBoolean(13), row.getBoolean(14)))
   }
 
   private def decodeSeqArr(arr: ArrayData): Array[TNumSeq] =
@@ -370,24 +341,6 @@ object MobCodec {
   private def encodeSeq(s: TNumSeq): GenericInternalRow =
     new GenericInternalRow(Array[Any](
       new GenericArrayData(s.vs), new GenericArrayData(s.ts), s.lInc, s.uInc))
-
-  def dataTypeOf(m: MobVal): DataType = m match {
-    case _: VSpan => MobSchemas.span
-    case _: VSpanF => MobSchemas.spanF
-    case _: VSet => MobSchemas.set
-    case _: VSetF => MobSchemas.setF
-    case _: VSetS => MobSchemas.setS
-    case _: VSpanSet => MobSchemas.spanSet
-    case _: VSpanSetF => MobSchemas.spanSetF
-    case _: VSpanSetS => MobSchemas.spanSetS
-    case v: VTNum => MobSchemas.tnumFor(v.kind)
-    case _: VTGeom => MobSchemas.tgeom
-    case _: VGeoSet => MobSchemas.gset
-    case _: VTText => MobSchemas.ttext
-    case _: VTPoint => MobSchemas.tpoint
-    case _: VTBox => MobSchemas.tbox
-    case _: VSTBox => MobSchemas.stbox
-  }
 
   /** Format a mobility value exactly as the reference prints it
     * (the DuckDB VARCHAR-cast rendering of each type). */

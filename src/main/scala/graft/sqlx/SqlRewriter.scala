@@ -1,11 +1,15 @@
 package graft.sqlx
 
+import graft.functions.MobFunctions
+
 /** Translates the reference's DuckDB/Postgres SQL dialect into Spark SQL
   * over our registered functions (SURVEY §2.2: "our query-translation
   * layer maps the operator spellings"):
   *
   *  - `'lit'::TYPE` and `typename 'lit'`  →  `type('lit')`
-  *  - `expr::TYPE` (non-literal)          →  `to_type(expr)`
+  *  - `expr::TYPE` (non-literal)          →  `to_type(expr)`, or
+  *    `type(expr)` for a type without its own cast
+  *    ([[MobFunctions.castFunction]]); VARCHAR input parses as a literal
   *  - `A && B` / `A @> B` / `A <@ B`      →  op_overlaps/op_contains/op_contained
   *  - `ARRAY[...]`                        →  `array(...)`
   *  - `TIMESTAMPTZ '...'`                 →  `CAST('...' AS TIMESTAMP)`
@@ -13,14 +17,6 @@ package graft.sqlx
   *  - `ST_AsText` → `st_astext`, `setUnnest(x)` → `explode(set_elements(x))`
   */
 object SqlRewriter {
-
-  private val mobTypes = Set(
-    "tint", "tbool", "tfloat", "ttext", "tgeompoint", "tgeogpoint", "tgeometry",
-    "intspan", "bigintspan", "floatspan", "datespan", "tstzspan",
-    "intset", "bigintset", "floatset", "textset", "dateset", "tstzset",
-    "geomset", "geogset",
-    "intspanset", "bigintspanset", "floatspanset", "textspanset",
-    "datespanset", "tstzspanset", "tbox", "stbox")
 
   def rewrite(sql0: String): String = {
     var s = sql0.trim.stripSuffix(";")
@@ -31,7 +27,7 @@ object SqlRewriter {
     // typename 'lit' -> typename('lit')   (tint '1@2000-01-01', stbox '...')
     s = """(?i)\b([A-Za-z_]+)\s*'([^']*)'""".r.replaceAllIn(s, m => {
       val ty = m.group(1).toLowerCase
-      if (mobTypes.contains(ty))
+      if (MobFunctions.types(ty))
         s"$ty('${java.util.regex.Matcher.quoteReplacement(m.group(2))}')"
       else if (ty == "timestamptz")
         s"CAST('${m.group(2)}' AS TIMESTAMP)"
@@ -45,7 +41,7 @@ object SqlRewriter {
     // literal casts: 'lit'::TYPE  ->  type('lit')
     s = """'([^']*)'\s*::\s*([A-Za-z_]+)""".r.replaceAllIn(s, m => {
       val lit = m.group(1); val ty = m.group(2).toLowerCase
-      if (mobTypes.contains(ty)) s"$ty('${java.util.regex.Matcher.quoteReplacement(lit).replace("\\", "\\\\")}')"
+      if (MobFunctions.types(ty)) s"$ty('${java.util.regex.Matcher.quoteReplacement(lit).replace("\\", "\\\\")}')"
       else if (ty == "timestamptz" || ty == "timestamp") s"CAST('$lit' AS TIMESTAMP)"
       else if (ty == "date") s"DATE '$lit'"
       else if (ty == "interval") s"INTERVAL '$lit'"
@@ -55,7 +51,7 @@ object SqlRewriter {
     // wrap bare strings in arrays with the first element's constructor
     s = coerceArrayElems(s)
 
-    // CAST(expr AS mobtype) -> to_mobtype(expr)
+    // CAST(expr AS mobtype) -> its cast function
     s = rewriteCastAs(s)
 
     // expr::TYPE (non-literal): drop WKB/GEOMETRY, else to_type(...)
@@ -147,7 +143,7 @@ object SqlRewriter {
   }
 
 
-  /** `CAST(expr AS mobtype)` → `to_mobtype(expr)` (Spark cannot cast to
+  /** `CAST(expr AS mobtype)` → its cast function (Spark cannot cast to
     * our struct types). */
   private def rewriteCastAs(s0: String): String = {
     var s = s0
@@ -177,9 +173,9 @@ object SqlRewriter {
         val close = i - 1
         if (asIdx > 0 && depth == 0) {
           val ty = s.substring(asIdx + 4, close).trim.toLowerCase
-          if (mobTypes.contains(ty)) {
+          MobFunctions.castFunction(ty).foreach { f =>
             val operand = s.substring(open + 1, asIdx)
-            s = s.substring(0, idx) + s"to_$ty($operand)" + s.substring(close + 1)
+            s = s.substring(0, idx) + s"$f($operand)" + s.substring(close + 1)
           }
         }
       }
@@ -223,7 +219,7 @@ object SqlRewriter {
     -1
   }
 
-  /** Rewrite non-literal `expr::TYPE` into `to_type(expr)` by scanning for
+  /** Rewrite non-literal `expr::TYPE` into its cast call by scanning for
     * `::` and capturing the preceding balanced expression (a parenthesized
     * call with optional function name, or a dotted identifier). */
   private def rewriteExprCasts(s0: String): String = {
@@ -264,8 +260,8 @@ object SqlRewriter {
       val repl =
         if (ty == "wkb_blob" || ty == "blob") operand
         else if (ty == "geometry") s"to_geometry($operand)"
-        else if (mobTypes.contains(ty)) s"to_$ty($operand)"
-        else s"CAST($operand AS ${sparkType(ty)})"
+        else MobFunctions.castFunction(ty).fold(
+          s"CAST($operand AS ${sparkType(ty)})")(f => s"$f($operand)")
       s = s.substring(0, start) + repl + s.substring(e)
       idx = s.indexOf("::")
     }

@@ -33,4 +33,13 @@ class BenchBlockSpec extends AnyFunSuite {
       Bench.block("b")(throw new OutOfMemoryError("heap"))
     }
   }
+
+  test("a query attempt records a non-fatal error and rethrows a fatal one") {
+    assert(Bench.attempt(()) == None)
+    assert(Bench.attempt(throw new IllegalStateException("bad\n plan")) ==
+      Some("IllegalStateException: bad plan"))
+    intercept[OutOfMemoryError] {
+      Bench.attempt(throw new OutOfMemoryError("heap"))
+    }
+  }
 }

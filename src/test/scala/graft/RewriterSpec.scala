@@ -19,9 +19,44 @@ class RewriterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.register(spark)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** One literal per type the rewriter accepts in `::T` position. */
+  private val castLiterals = Seq(
+    "tint" -> "1@2000-01-01", "tbool" -> "t@2000-01-01",
+    "tfloat" -> "1.5@2000-01-01", "ttext" -> "a@2000-01-01",
+    "tgeompoint" -> "Point(1 1)@2000-01-01",
+    "tgeogpoint" -> "Point(1 1)@2000-01-01",
+    "tgeometry" -> "Point(1 1)@2000-01-01",
+    "intspan" -> "[1, 3)", "bigintspan" -> "[1, 3)", "floatspan" -> "[1.5, 2.5]",
+    "datespan" -> "[2001-01-01, 2001-01-03)",
+    "tstzspan" -> "[2001-01-01, 2001-01-03]",
+    "intset" -> "{1, 2}", "bigintset" -> "{1, 2}", "floatset" -> "{1.5, 2}",
+    "textset" -> """{"a"}""", "dateset" -> "{2001-01-01}",
+    "tstzset" -> "{2001-01-01}", "geomset" -> """{"Point(1 1)"}""",
+    "geogset" -> """{"Point(1 1)"}""", "intspanset" -> "{[1, 3)}",
+    "bigintspanset" -> "{[1, 3)}", "floatspanset" -> "{[1.5, 2.5]}",
+    "textspanset" -> """{["a", "b"]}""",
+    "datespanset" -> "{[2001-01-01, 2001-01-03)}",
+    "tstzspanset" -> "{[2001-01-01, 2001-01-03]}",
+    "tbox" -> "TBOXINT XT([1, 2],[2001-01-01, 2001-01-02])",
+    "stbox" -> "STBOX X((1,2),(3,4))")
+
+  for ((ty, lit) <- castLiterals) test(s"VARCHAR column cast s::$ty parses like '...'::$ty") {
+    val r = spark.sql(SqlRewriter.rewrite(
+      s"SELECT asText(s::$ty) AS c, asText('$lit'::$ty) AS l FROM VALUES ('$lit') AS v(s)"))
+      .collect()(0)
+    assert(r.getString(0) == r.getString(1))
+  }
+
+  test("a VARCHAR textset cast parses the set, not a one-element set") {
+    assert(spark.sql(SqlRewriter.rewrite(
+      """SELECT asText(s::textset) FROM VALUES ('{"a", "b"}') AS v(s)"""))
+      .collect()(0).getString(0) == """{"a", "b"}""")
+  }
 
   test("list() rewrites to collect_list() only in bare call position") {
     assert(SqlRewriter.rewrite("SELECT list(x) FROM t")
