@@ -1,6 +1,27 @@
 package graft
+
+import java.nio.file.{Files, Path, Paths}
+
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.berlinmod.BerlinMod
+import graft.scale.{PipelineScaleProbe, SynthCorpus}
+import graft.util.Json.quote
+
+/** The bench artifact: every gate entry, BerlinMOD at the reference's
+  * brussels scale with its 10x/100x decade rows, and the pipeline decade
+  * rows; per row the min-of-passes wall time on stdout, and per-query and
+  * per-stage task metrics in `target/bench.json`.
+  *
+  * `runMain graft.Bench [--only row,row,...] [--explain <dir>]` —
+  * `--only` runs the named rows alone and skips every block (with its
+  * fleet or corpus load) that has none of them; `--explain` writes each
+  * selected query's formatted plan to `<dir>/<row>.txt` after the block
+  * loads, and times nothing. `SPARK_GRAFT_SF_DIR` names the dataset
+  * (default sf0.1) and `SPARK_GRAFT_CPUS` the cores. */
 object Bench {
   /** One bench row: name, seconds (-1 when it failed), error text. */
   type Timing = (String, Double, Option[String])
@@ -23,92 +44,111 @@ object Bench {
     try { run; None }
     catch { case NonFatal(e) => Some(errorText(e)) }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the machine, not a constant: an unset env var used to
-    // mean local[4], which read as a uniform ~3.5x inflation of every
-    // CPU-heavy row on this 32-core box (r9 forensics, SURVEY §8l.24)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    System.err.println(s"[bench] cpus=$cpus sfDir=$sfDir")
-    // heap pre-touch BEFORE Spark threads exist: this guest's balloon
-    // free-page reporting makes first-touch ~100x cost (see HeapWarm),
-    // and holding most of the heap live is only safe in a bare JVM
-    graft.util.HeapWarm.pretouch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keeps the old TIMESTAMP(NANOS) events encoding readable;
-      // Tables.events normalizes all three observed encodings
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // the driver-generated tables are single small parquet files; split
-      // them finer so scans parallelize across all local cores
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      // AQE coalescing targets bytes-per-partition; our temporal/pair
-      // stages are compute-heavy on byte-tiny rows, so coalescing to one
-      // partition serializes them — keep the requested parallelism
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // SESSION default for the UNTIMED warm-up layout builds below
-      // (graph/HNSW builds group by n vectors with k-bounded TopKOrdered
-      // state — under the 128 default they sort-fall-back into
-      // full-stream sorter spill, SURVEY item 15). The TIMED queries do
-      // NOT inherit this: r12 measured a one-size 64k session threshold
-      // regressing the BerlinMOD collect_list-of-instants decade rows
-      // 30-50% (many groups x fat array states belong in the sort path),
-      // while a 1M threshold OOM'd text_tfidf_100x (~millions of
-      // Heaps-law terms held as object-hash state). timed() therefore
-      // scopes the threshold PER QUERY SHAPE (aggThreshold below): 64k
-      // only for the k-bounded ANN/TopKOrdered rows, Spark default for
-      // everything else. The 1M setting belongs to the 5M-vector build
-      // probe, whose main also scales partition counts to match.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
-      // same shuffle/cache codec stack as PipelineScaleProbe — the
-      // config a shuffle-heavy 100 TB deployment runs, and the one the
-      // r9 dedup rework (serialized shingle caches + raw-stream
-      // repartition-by-h) was profiled under; keeping the two harnesses
-      // on one configuration makes their numbers directly comparable
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.rdd.compress", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // untimed warm-up: JIT/codegen/shuffle-machinery spin-up otherwise
-    // lands entirely on whichever query sorts first (~8 s of noise)
-    val warmup = block("warmup") {
-      SparkEntry.entry(spark).count()
-      // build the write-time ANN partition layout outside the timings,
-      // like the BerlinMOD load below (index builds are load phase — the
-      // reference builds its R-tree outside per-query timings too)
-      graft.operators.Similarity.buildLshLayout(spark, sfDir)
-      graft.operators.Similarity.buildIvfLayout(spark, sfDir)
-      graft.operators.Similarity.buildIvfPqLayout(spark, sfDir)
-      graft.operators.Similarity.buildGraphLayout(spark, sfDir)
-      graft.operators.Similarity.buildHnswLayout(spark, sfDir)
-      graft.operators.Similarity.buildSq8Layout(spark, sfDir)
-      graft.operators.Similarity.buildIvfSq8Layout(spark, sfDir)
-      graft.operators.Retrieval.buildPostingLayout(spark, sfDir)
-      spark.catalog.clearCache()
-      Seq.empty
-    }
+  /** Rows sharing one untimed load. `load` prepares the block's data and
+    * returns the rows it reports itself (a failed warm-up) and each
+    * query row's DataFrame; the load is timed as `loadRow` when there is
+    * one. Each query row runs `passes` times and reports its minimum;
+    * `clear` drops cached data and forces a GC after every query. */
+  final case class Block(name: String, loadRow: Option[String],
+                         queries: Seq[String], passes: Int, clear: Boolean)(
+      val load: SparkSession => (Seq[Timing], String => DataFrame)) {
+    def rows: Seq[String] = loadRow.toSeq ++ queries
+  }
+
+  /** BerlinMOD fleets: multiple of the reference's brussels fleet (141
+    * vehicles, ~1600 trips — BASELINE.md), timed queries, passes. The
+    * decades keep the SAME city area: with the (hour, cell) segment join
+    * key, pair work grows with local density (~linear in fleet at fixed
+    * area x duration), not fleet^2. q5/q12 are the reference's two
+    * slowest published queries (licence-view-bounded and view-bounded,
+    * both measured flat to sub-linear). Three passes where contention
+    * matters most: the 1x rows are the direct BASELINE.md comparison, and
+    * the in-bench 100x rows read up to 3x above a standalone run's
+    * min-of-two in r6 (heap/GC state + tenant contention). */
+  val fleets: Seq[(Int, Seq[String], Int)] = Seq(
+    (1, BerlinMod.queryNames, 3),
+    (10, Seq("q5", "q6", "q10", "q12", "q16", "q17"), 2),
+    (100, Seq("q6", "q10"), 3))
+
+  /** Every block, in run order; `sfDir` is the gate's dataset. */
+  def blocks(sfDir: String): Seq[Block] = {
     // fixed order + cache isolation so one query's cached/cached-adjacent
     // state cannot inflate the next one's wall clock. berlinmod_e2e is
-    // skipped here: the brussels-scale per-query timings below replace it.
-    // Two passes, min per query: this box is a shared tenant with ±2-3x
-    // CPU-contention swings — the min of two spaced runs is the
-    // engine's cost, the max is the neighbors'.
-    // clearCache defaults on (query isolation); the BerlinMOD block turns
-    // it off because its cached views ARE the untimed load artifacts.
-    // Each timing carries an optional error: a query that throws must be
-    // REPORTED as an error, not silently recorded as a fast wall-clock
-    // (that corrupted nothing yet, but the failure mode was invisible).
-    // per-query shuffle/spill/memory metrics (full map goes to
-    // target/bench.json only — the stdout tail line stays ~400 B)
+    // skipped: the brussels-scale per-query rows replace it.
+    val gate = Block("gate", None,
+      SparkEntry.queries.keys.toSeq.sorted.filterNot(_ == "berlinmod_e2e"),
+      passes = 2, clear = true) { spark =>
+      // untimed warm-up: JIT/codegen/shuffle-machinery spin-up otherwise
+      // lands entirely on whichever query sorts first (~8 s of noise);
+      // the write-time ANN layouts are load phase, like the BerlinMOD
+      // load (the reference builds its R-tree outside per-query timings
+      // too). A failed warm-up is reported and the rows still run.
+      val warm = block("warmup") {
+        SparkEntry.entry(spark).count()
+        PipelineScaleProbe.buildAnnLayouts(spark, sfDir)
+        graft.operators.Similarity.buildGraphLayout(spark, sfDir)
+        graft.operators.Similarity.buildHnswLayout(spark, sfDir)
+        spark.catalog.clearCache()
+        Seq.empty
+      }
+      val entries = SparkEntry.queries
+      (warm, n => entries(n)(spark, sfDir))
+    }
+    // clear = false: the cached views ARE the untimed load artifacts
+    val bm = fleets.map { case (mult, qs, passes) =>
+      val suffix = if (mult == 1) "" else s"_${mult}x"
+      def row(q: String) = s"berlinmod_$q$suffix"
+      Block(s"berlinmod_${mult}x", if (mult == 1) Some("berlinmod_load") else None,
+        qs.map(row), passes, clear = false) { spark =>
+        // the trip-building collect_list aggregates want the sort path
+        SparkEntry.useAggThreshold(spark, "berlinmod_load")
+        // generation goes distributed above the BigFleet threshold, so
+        // the driver never holds the 100x fleet's ~11.6M points
+        BerlinMod.load(spark, nVehicles = 141 * mult,
+          tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120)
+        // materialize the cached load artifacts (BASELINE.md records the
+        // reference's brussels load, 07_trips, at 15.9 s)
+        spark.sql("SELECT * FROM Trips").count()
+        spark.sql("SELECT * FROM SegCells").count()
+        spark.sql("SELECT * FROM SegTime").count()
+        val dfs = BerlinMod.queries(spark).map { case (q, df) => row(q) -> df }
+        (Seq.empty, dfs.toMap)
+      }
+    }
+    // Pipeline-operator decades: the synthetic corpus (Heaps-law
+    // vocabulary growth, planted dups) at 10x/100x the sf0.1 base, run
+    // through the UNCHANGED gate entries; generation and the ANN layouts
+    // are untimed load phase, like the BerlinMOD and warm-up builds.
+    val pipeline = Seq(10, 100).map { mult =>
+      Block(s"pipeline_scale_${mult}x", None,
+        PipelineScaleProbe.scaleRowQueries.map(n => s"${n}_${mult}x"),
+        passes = 2, clear = true) { spark =>
+        val dir = s"/tmp/graft_synth_${mult}x"
+        SynthCorpus.generate(spark, mult, dir)
+        // the layouts' n-group graph builds need the hash path
+        spark.conf.set(SparkEntry.FallbackKey,
+          SparkEntry.HashAggThreshold.toString)
+        PipelineScaleProbe.buildAnnLayouts(spark, dir)
+        val entries = SparkEntry.queries
+        (Seq.empty, row => entries(row.stripSuffix(s"_${mult}x"))(spark, dir))
+      }
+    }
+    gate +: (bm ++ pipeline)
+  }
+
+  /** Runs the blocks with a selected row (every row when `only` is
+    * None) and returns their rows; with `explain`, writes the plans
+    * instead and returns only failed loads. Timings go to stdout and,
+    * with task metrics, to `out`. */
+  def run(spark: SparkSession, sfDir: String, only: Option[Set[String]],
+          explain: Option[Path], out: Path): Seq[Timing] = {
+    val all = blocks(sfDir)
+    val unknown = only.getOrElse(Set.empty) -- all.flatMap(_.rows)
+    require(unknown.isEmpty, s"no bench row named ${unknown.mkString(", ")}")
+    val sel: String => Boolean = n => only.forall(_(n))
+    val sc = spark.sparkContext
     val metrics = new graft.util.BenchMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    sc.addSparkListener(metrics)
     // per-query process CPU split (user/sys ticks from /proc/self/stat)
     // and GC time — the wall-vs-cpu discriminator that located the r9
     // late-bench inflation. stderr only; the driver parses stdout.
@@ -119,42 +159,29 @@ object Bench {
       val raw = scala.io.Source.fromFile("/proc/self/stat").mkString
       val f = raw.substring(raw.lastIndexOf(')') + 2).split(" ")
       (f(11).toLong, f(12).toLong)
-    } catch { case _: Throwable => (0L, 0L) }
+    } catch { case NonFatal(_) => (0L, 0L) }
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    // per-query-shape hash-aggregate fallback threshold (r12 verdict #1):
-    // 64k ONLY for the ANN/retrieval family, whose TopKOrdered states are
-    // k-bounded (~400 B/group) and whose n-group builds must hash; Spark
-    // default (128) for everything else, so the BerlinMOD
-    // collect_list-of-instants aggregates and the vocabulary-shaped text
-    // rows take the sort path their fat/many-group states need.
-    val FallbackKey =
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    def aggThreshold(name: String): String =
-      if (name.startsWith("ann_") || name.startsWith("hybrid_") ||
-          name.startsWith("retrieval_") || name.startsWith("stream_ann") ||
-          name.startsWith("stream_graph"))
-        "65536"
-      else "128"
-    def timed(work: Seq[(String, () => Unit)], clear: Boolean = true,
-              passes: Int = 2): Seq[Timing] =
-      for (pass <- 0 until passes; (name, run) <- work) yield {
+    // Each timing carries an optional error: a query that throws must be
+    // REPORTED as an error, not silently recorded as a fast wall-clock.
+    def timed(rows: Seq[(String, () => DataFrame)], passes: Int,
+              clear: Boolean): Seq[Timing] =
+      for (pass <- 0 until passes; (name, df) <- rows) yield {
         metrics.reset(name)
-        spark.conf.set(FallbackKey, aggThreshold(name))
-        spark.sparkContext.setJobGroup(name, name,
-          interruptOnCancel = false)
+        SparkEntry.useAggThreshold(spark, name)
+        sc.setJobGroup(name, name, interruptOnCancel = false)
         val (u0, s0) = cpuStat(); val g0 = gcMs
         val t0 = System.nanoTime()
-        val err = attempt(run())
+        val err = attempt { df().count(); () }
         val dt = (System.nanoTime() - t0) / 1e9
         val (u1, s1) = cpuStat()
         System.err.println(f"[bench] $name%-28s ${dt}%7.2f s " +
           f"user=${(u1 - u0) / 100.0}%8.1f sys=${(s1 - s0) / 100.0}%6.1f " +
           f"gc=${gcMs - g0}%5d ms pass=$pass")
-        spark.sparkContext.clearJobGroup()
+        sc.clearJobGroup()
         if (clear) {
           spark.catalog.clearCache()
           // ContextCleaner frees broadcasts/shuffles via weak refs: force
@@ -163,154 +190,69 @@ object Bench {
         }
         (name, dt, err)
       }
-    // min over the passes that SUCCEEDED; a query with no successful pass
-    // surfaces as sec=-1 plus an "err" entry
+    // Min over the passes that SUCCEEDED (this box is a shared tenant
+    // with ±2-3x contention swings: the min of spaced runs is the
+    // engine's cost); a query with no successful pass surfaces as sec=-1
+    // plus an "err" entry.
     def minPerQuery(ts: Seq[Timing]): Seq[Timing] =
       ts.groupBy(_._1).map { case (n, xs) =>
         val ok = xs.filter(_._3.isEmpty)
         if (ok.nonEmpty) (n, ok.map(_._2).min, None)
         else (n, -1.0, xs.flatMap(_._3).headOption)
       }.toSeq
-    val results0 = minPerQuery(timed(
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot(_._1 == "berlinmod_e2e")
-        .map { case (name, fn) =>
-          name -> (() => { fn(spark, sfDir).count(); () })
-        }))
-    // BerlinMOD at the reference's brussels scale (141 vehicles,
-    // ~1600 trips — BASELINE.md) for a direct per-query comparison
-    val bmTimes = block("berlinmod_1x") {
-      // settle before the block the judge reads against BASELINE.md:
-      // the 120 preceding queries leave heap/GC debris that r7 measured
-      // as ~1.3x drift on these rows with no code change
+    def writePlan(dir: Path, name: String, df: () => DataFrame): Unit = {
+      val plan =
+        try df().queryExecution.explainString(FormattedMode)
+        catch { case NonFatal(e) => s"ERROR building plan: ${errorText(e)}" }
+      Files.writeString(dir.resolve(s"$name.txt"), plan)
+      System.err.println(s"[bench] plan $name")
       spark.catalog.clearCache()
-      System.gc()
-      // the trip-building collect_list aggregates want the sort path
-      spark.conf.set(FallbackKey, "128")
-      // the load itself is timed once as its own row: BASELINE.md
-      // records the reference's brussels load (07_trips) at 15.9 s
-      val tL0 = System.nanoTime()
-      graft.berlinmod.BerlinMod.load(spark, nVehicles = 141,
-        tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120)
-      // materialize the cached load artifacts (the reference's load phase
-      // likewise builds its R-tree outside the per-query timings)
-      spark.sql("SELECT * FROM Trips").count()
-      spark.sql("SELECT * FROM SegCells").count()
-      spark.sql("SELECT * FROM SegTime").count()
-      val loadRow = Seq(
-        ("berlinmod_load", (System.nanoTime() - tL0) / 1e9,
-          Option.empty[String]))
-      // min-of-three like the 100x block: these 17 rows are the direct
-      // BASELINE.md comparison, so they get the strongest contention
-      // defense (each pass is ~12 s; the audit-at-base gating above
-      // bought back more than this costs)
-      loadRow ++ minPerQuery(timed(
-        graft.berlinmod.BerlinMod.queries(spark).map { case (n, df) =>
-          s"berlinmod_$n" -> (() => { df.count(); () })
-        }, clear = false, passes = 3))
     }
-    // Scale curve: same workload at 10x vehicles in the SAME city area.
-    // With the (hour, cell) segment join key, pair work grows with local
-    // density (~linear in fleet at fixed area x duration), not fleet^2 —
-    // these four timings vs their 1x rows are the evidence. Load stays
-    // untimed, like the 1x block.
-    val bm10Times = block("berlinmod_10x") {
-      spark.catalog.clearCache() // drop the 1x load artifacts first
-      spark.conf.set(FallbackKey, "128")
-      graft.berlinmod.BerlinMod.load(spark, nVehicles = 1410,
-        tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120)
-      spark.sql("SELECT * FROM Trips").count()
-      spark.sql("SELECT * FROM SegCells").count()
-      spark.sql("SELECT * FROM SegTime").count()
-      // q5/q12 joined in r11 (r10 verdict #4): the reference's two
-      // slowest published queries get in-artifact decade rows (q5 is
-      // licence-view-bounded, q12 view-bounded — both measured flat to
-      // sub-linear; BmScaleProbe carries the 100x rows)
-      val wanted = Set("q5", "q6", "q10", "q12", "q16", "q17")
-      minPerQuery(timed(
-        graft.berlinmod.BerlinMod.queries(spark)
-          .filter(p => wanted(p._1)).map { case (n, df) =>
-            s"berlinmod_${n}_10x" -> (() => { df.count(); () })
-          }, clear = false))
+    explain.foreach(Files.createDirectories(_))
+    val results = try all.filter(_.rows.exists(sel)).flatMap { b =>
+      block(b.name) {
+        // settle first: the preceding rows leave heap/GC debris that r7
+        // measured as ~1.3x drift on the BerlinMOD rows with no code change
+        spark.catalog.clearCache()
+        System.gc()
+        val t0 = System.nanoTime()
+        val (own, df) = b.load(spark)
+        val loadTime = b.loadRow.filter(sel)
+          .map(n => (n, (System.nanoTime() - t0) / 1e9, Option.empty[String]))
+        val rows = b.queries.filter(sel).map(n => n -> (() => df(n)))
+        explain match {
+          case Some(dir) =>
+            rows.foreach { case (n, q) => writePlan(dir, n, q) }
+            own
+          case None =>
+            own ++ loadTime ++ minPerQuery(timed(rows, b.passes, b.clear))
+        }
+      }
+    }.sortBy(_._1) finally sc.removeSparkListener(metrics)
+    if (explain.isEmpty) {
+      // let trailing listener-bus events drain before the metric snapshot
+      Thread.sleep(500)
+      report(results, sfDir, metrics.snapshotJson, out)
     }
-    // 100x (14 100 vehicles, same area): the second decade of the scale
-    // curve. Generation goes distributed above the BigFleet threshold
-    // (the driver never holds the ~11.6M points — fits the default 8 GB
-    // driver heap), and the density-adaptive cell keeps per-key pair
-    // work bounded. Two passes since r6: the capsule filter cut these
-    // queries to a few seconds, so the min-of-two contention defense
-    // (observed 8-22 s swings for the same work on this shared box) now
-    // costs less than the noise it removes.
-    val bm100Times = block("berlinmod_100x") {
-      spark.catalog.clearCache()
-      // drop debris from the 120 preceding queries before the timed
-      // block: in r6 the in-bench 100x rows read up to 3x above the
-      // standalone probe's min-of-two (heap/GC state + tenant
-      // contention); a forced GC plus three passes instead of two gets
-      // the in-artifact number within the probe's envelope
-      System.gc()
-      spark.conf.set(FallbackKey, "128")
-      graft.berlinmod.BerlinMod.load(spark, nVehicles = 14100,
-        tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120)
-      spark.sql("SELECT * FROM Trips").count()
-      spark.sql("SELECT * FROM SegCells").count()
-      spark.sql("SELECT * FROM SegTime").count()
-      val wanted = Set("q6", "q10")
-      minPerQuery(timed(
-        graft.berlinmod.BerlinMod.queries(spark)
-          .filter(p => wanted(p._1)).map { case (n, df) =>
-            s"berlinmod_${n}_100x" -> (() => { df.count(); () })
-          }, clear = false, passes = 3))
-    }
-    // Pipeline-operator scale curve (r6 verdict #1): synthetic corpus
-    // ([[graft.scale.SynthCorpus]] — Heaps-law vocabulary growth,
-    // planted dups) at 10x/100x the sf0.1 base, timing the six
-    // operators whose 100 TB story needs measured decades, through the
-    // UNCHANGED gate entries. Generation is untimed load phase, like
-    // the BerlinMOD and ANN-layout builds.
-    val pipeScaleTimes = block("pipeline_scale") {
-      spark.catalog.clearCache()
-      System.gc()
-      (for (mult <- Seq(10, 100)) yield {
-        val dir = s"/tmp/graft_synth_${mult}x"
-        graft.scale.SynthCorpus.generate(spark, mult, dir)
-        // ANN layouts are load phase (matches the sfDir warm-up builds);
-        // their n-group graph builds need the hash path
-        spark.conf.set(FallbackKey, "65536")
-        graft.scale.PipelineScaleProbe.buildAnnLayouts(spark, dir)
-        // audit-machinery twins (sketch_kmv_grouped's exact-count
-        // window) run at base scale only — the production sibling
-        // carries the decades (r7 verdict: the audit's 16 s at 100x was
-        // the largest noise source left in the artifact)
-        minPerQuery(timed(
-          graft.scale.PipelineScaleProbe.scaleRowQueries.map { n =>
-            s"${n}_${mult}x" ->
-              (() => { SparkEntry.queries(n)(spark, dir).count(); () })
-          }))
-      }).flatten
-    }
-    val results = (warmup ++ results0 ++ bmTimes ++ bm10Times ++ bm100Times ++
-      pipeScaleTimes).sortBy(_._1)
-    // r4's official artifact died because the single stdout line carried
-    // 96 queries at full double precision (~4 KB) and overflowed the
-    // driver's tail-capture window. Stdout now gets (a) one bare JSON line
-    // per query — each tiny and self-contained — then (b) a compact total
-    // line with seconds rounded to 3 decimals; full precision lives in
-    // target/bench.json.
+    results
+  }
+
+  /** Prints one JSON line per row, then the total line, and writes the
+    * full-precision artifact to `out`. r4's official artifact died
+    * because a single stdout line carried 96 queries at full double
+    * precision (~4 KB) and overflowed the driver's tail-capture window:
+    * stdout gets (a) one bare, tiny, self-contained line per row, then
+    * (b) a compact total line with seconds rounded to 3 decimals. */
+  private def report(results: Seq[Timing], sfDir: String,
+                     taskMetrics: String, out: Path): Unit = {
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     for ((n, t, e) <- results) {
-      val errPart = e.map(m => s""","err":${jstr(m)}""").getOrElse("")
-      println(s"""{"q":${jstr(n)},"sec":${r3(t)}$errPart}""")
+      val errPart = e.map(m => s""","err":${quote(m)}""").getOrElse("")
+      println(s"""{"q":${quote(n)},"sec":${r3(t)}$errPart}""")
     }
-    def queriesJson(round: Boolean): String =
-      results.map { case (n, t, _) =>
-        jstr(n) + ":" + (if (round) r3(t) else t)
-      }.mkString("{", ",", "}")
-    val errs = results.collect { case (n, _, Some(m)) =>
-      jstr(n) + ":" + jstr(m)
-    }
+    val queriesJson = results.map { case (n, t, _) => quote(n) + ":" + t }
+      .mkString("{", ",", "}")
+    val errs = results.collect { case (n, _, Some(m)) => quote(n) + ":" + quote(m) }
     val errPart =
       if (errs.nonEmpty) s""","errors":${errs.mkString("{", ",", "}")}"""
       else ""
@@ -324,31 +266,46 @@ object Bench {
     val total = results.collect { case (_, t, e) if e.isEmpty => t }.sum
     // The FINAL stdout line must fit the driver's ~2000-char tail window
     // (with sbt's trailing [success] banner) or BENCH "parsed" is null —
-    // this killed r1/r4/r5. So the stdout total line carries NO queries
-    // map (~400 bytes even with errors); per-query timings live in the
-    // per-query lines above (the last ~50 stay inside the window) and in
-    // full precision in target/bench.json.
+    // this killed r1/r4/r5. So it carries NO queries map (~400 bytes even
+    // with errors); full precision lives in the artifact file.
     val stdoutLine =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
         s""""n":${results.size}$errPartStdout,"sf":"$sfDir"}"""
-    // let trailing listener-bus events drain before the metric snapshot
-    Thread.sleep(500)
     // micro-batch decomposition of the neardup stream row (last pass):
     // attributes any wall-clock drift to specific batches vs harness
     val nearDupBatches = graft.streaming.StreamGate.lastNearDupBatchesMs
       .map { case (id, ms) => s"[$id,$ms]" }.mkString("[", ",", "]")
     val fileLine =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":${queriesJson(round = false)}$errPart,""" +
+        s""""queries":$queriesJson$errPart,""" +
         s""""neardup_batches_ms":$nearDupBatches,""" +
         s""""neardup_state":${graft.streaming.StreamGate.lastNearDupStateJson},""" +
-        s""""task_metrics":${metrics.snapshotJson},"sf":"$sfDir"}"""
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/bench.json"), fileLine)
+        s""""task_metrics":$taskMetrics,"sf":"$sfDir"}"""
+    Option(out.getParent).foreach(Files.createDirectories(_))
+    Files.writeString(out, fileLine)
     // Bare stdout (outputStrategy := StdoutOutput in build.sbt keeps it
     // prefix-free), printed LAST so it sits at the very end of the tail.
     println(stdoutLine)
-    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val opts = args.grouped(2).map {
+      case Array("--only", v) => "only" -> v
+      case Array("--explain", v) => "explain" -> v
+      case a => throw new IllegalArgumentException(
+        s"unknown arguments '${a.mkString(" ")}'; " +
+          "usage: Bench [--only row,row,...] [--explain <dir>]")
+    }.toMap
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cores = GraftSession.envCores
+    System.err.println(s"[bench] cpus=$cores sfDir=$sfDir")
+    // heap pre-touch BEFORE Spark threads exist: this guest's balloon
+    // free-page reporting makes first-touch ~100x cost (see HeapWarm),
+    // and holding most of the heap live is only safe in a bare JVM
+    graft.util.HeapWarm.pretouch()
+    val spark = GraftSession.local(cores)
+    try run(spark, sfDir, opts.get("only").map(_.split(",").toSet),
+      opts.get("explain").map(Paths.get(_)), Paths.get("target/bench.json"))
+    finally spark.stop()
   }
 }

@@ -61,6 +61,39 @@ object SparkEntry {
     graft.sources.TarShards.queries ++
     graft.streaming.StreamGate.queries
 
+  val FallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  val HashAggThreshold = 65536
+
+  /** The entries that run with the hash-aggregate fallback threshold at
+    * [[HashAggThreshold]]: their TopKOrdered states are k-bounded (~400 B
+    * per group) and their n-group builds must hash. Every other entry
+    * runs at Spark's default, 128, so the BerlinMOD collect_list-of-
+    * instants aggregates and the vocabulary-shaped text rows take the
+    * sort path their fat or many-group states need: r12 measured one 64k
+    * value for all rows regressing the BerlinMOD decade rows 30-50%, and
+    * a 1M value OOM'd text_tfidf_100x. */
+  val hashAggregated: Set[String] = Set(
+    "ann_filtered", "ann_filtered_bucketed", "ann_graph_append",
+    "ann_graph_scaled", "ann_graph_scaled_sq8", "ann_graph_scaled_stats",
+    "ann_graph_search", "ann_hnsw", "ann_ivf", "ann_ivf_bucketed",
+    "ann_ivf_sq8", "ann_ivfpq", "ann_ivfpq_bucketed", "ann_knn_graph",
+    "ann_lsh", "ann_lsh_bucketed", "ann_pq", "ann_sq8", "ann_sq8_packed",
+    "ann_topk",
+    "hybrid_rrf", "hybrid_rrf_batch", "hybrid_rrf_batch100",
+    "hybrid_rrf_ivf", "retrieval_mmr", "retrieval_mmr_batch",
+    "retrieval_ndcg", "retrieval_ndcg_batch",
+    "stream_ann_topk_sink", "stream_graph_append_sink")
+
+  /** The fallback threshold a query runs with: a decade row
+    * `<entry>_<mult>x` takes its entry's value. */
+  def aggThreshold(row: String): Int =
+    if (hashAggregated(row.replaceFirst("_\\d+x$", ""))) HashAggThreshold
+    else 128
+
+  /** Sets [[aggThreshold]] of `row` on the session, before running it. */
+  def useAggThreshold(spark: SparkSession, row: String): Unit =
+    spark.conf.set(FallbackKey, aggThreshold(row).toString)
+
   /** SELF-PINNED oracle for `berlinmod_e2e`: the (query, n_rows,
     * checksum) triples of `BerlinMod.e2eReport` captured from a
     * repo-pinned run. No independent oracle can exist for the composed

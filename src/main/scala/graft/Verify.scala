@@ -1,58 +1,59 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
+import graft.util.Json.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Writes gate entry `name`'s rows to `outDir/name` and returns (name,
+    * row count, null), each entry under its registered aggregate
+    * threshold ([[SparkEntry.aggThreshold]]), the bench's. A non-fatal
+    * failure returns (name, -1, error text) and still writes a parquet:
+    * with no file the driver's compare skips the query entirely and the
+    * red row vanishes from CORRECTNESS (r5 recorded 84 rows for an
+    * 87-query gate). An empty frame with the intended schema — or a
+    * sentinel schema when even analysis failed — forces a recorded
+    * rows/schema mismatch instead. Fatal errors (OOM) propagate. */
+  def dump(spark: SparkSession, name: String,
+           fn: (SparkSession, String) => DataFrame,
+           sfDir: String, outDir: String): (String, Long, String) = {
+    SparkEntry.useAggThreshold(spark, name)
+    val path = s"$outDir/$name"
+    var rows = -1L
+    Bench.attempt {
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
+      rows = spark.read.parquet(path).count()
+    } match {
+      case None => (name, rows, null)
+      case Some(err) =>
+        System.err.println(s"[verify] $name failed: $err")
+        // stream_* entries run their whole pipeline (staging write +
+        // micro-batch stream) just to ANALYZE, so a failed streaming
+        // query would run twice here — go straight to the sentinel
+        var schema =
+          StructType(Seq(StructField("graft_query_failed", StringType)))
+        if (!name.startsWith("stream_"))
+          Bench.attempt { schema = fn(spark, sfDir).schema }
+        Bench.attempt {
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+            .coalesce(1).write.mode("overwrite").parquet(path)
+        }.foreach(e => System.err.println(s"[verify] $name sentinel: $e"))
+        (name, -1L, err)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query filter — local
     // iteration only; the driver always passes exactly two]
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // heap pre-touch before Spark threads exist (see HeapWarm scaladoc)
     graft.util.HeapWarm.pretouch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has shipped as TIMESTAMP(NANOS), NTZ micros, and
-      // UTC micros across driver regenerations; nanosAsLong keeps the
-      // nanos encoding readable and Tables.events normalizes every
-      // encoding to TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // the driver-generated tables are single small parquet files; split
-      // them finer so scans parallelize across all local cores
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      // AQE coalescing targets bytes-per-partition; our temporal/pair
-      // stages are compute-heavy on byte-tiny rows, so coalescing to one
-      // partition serializes them — keep the requested parallelism
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // k-bounded TopKOrdered aggregates (the ANN family) must HASH, not
-      // sort-fall-back, when grouping by n vectors: the default 128-key
-      // fallback threshold turns the graph build's bounded partial agg
-      // into a full-stream sort (2.7 GB spill at 50k vectors, disk-death
-      // at 5M) where the hash map costs ~400 B per group
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The driver parses BARE STDOUT (proven by BENCH_r02: outputStrategy :=
     // StdoutOutput in build.sbt keeps it prefix-free). Mirror the Bench
     // pattern exactly: one JSON line per query as it completes, plus ONE
@@ -62,41 +63,11 @@ object Verify {
       .filter { case (n, _) => only.isEmpty || only(n) }
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val r = try {
-        val df = fn(spark, sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        val rows = spark.read.parquet(s"$outDir/$name").count()
-        (name, rows, null: String)
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // Still write a parquet: with no file the driver's compare skips
-        // the query entirely and the red row vanishes from CORRECTNESS
-        // (r5 recorded 84 rows for an 87-query gate). An empty frame with
-        // the intended schema — or a sentinel schema when even analysis
-        // failed — forces a recorded rows/schema mismatch instead.
-        try {
-          val schema =
-            // stream_* entries run their whole pipeline (staging write +
-            // micro-batch stream) just to ANALYZE, so a failed streaming
-            // query would run twice here — go straight to the sentinel
-            try if (name.startsWith("stream_"))
-              throw new IllegalStateException("skip schema probe")
-            else fn(spark, sfDir).schema
-            catch { case _: Throwable =>
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField(
-                  "graft_query_failed", org.apache.spark.sql.types.StringType)))
-            }
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
-        (name, -1L, s"${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
+      val r = dump(spark, name, fn, sfDir, outDir)
       System.err.println(f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
       val (n, rows, err) = r
-      val e = if (err == null) "null" else q(err)
-      println(s"""{"name":${q(n)},"rows":$rows,"error":$e}""")
+      val e = if (err == null) "null" else quote(err)
+      println(s"""{"name":${quote(n)},"rows":$rows,"error":$e}""")
       // free cached RDDs/broadcasts between queries so one query's cache
       // cannot pressure the fixed heap for the rest of the run
       spark.catalog.clearCache()
@@ -105,13 +76,13 @@ object Verify {
     // thread the dir being dumped: trained-artifact oracles (lang-ID,
     // scaled-graph plane family) must interpolate THIS dir's artifacts
     val json = SparkEntry.oracleSqlFor(Some(sfDir))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query run manifest: fixed file AND one bare stdout JSON line —
     // stdout is the channel the driver demonstrably parses (BENCH_r02).
     val mjson = manifest.map { case (n, rows, err) =>
-      val e = if (err == null) "null" else q(err)
-      s"${q(n)}: {\"rows\": $rows, \"error\": $e}"
+      val e = if (err == null) "null" else quote(err)
+      s"${quote(n)}: {\"rows\": $rows, \"error\": $e}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/manifest.json"), mjson)
     println(s"""{"queries": $mjson}""")

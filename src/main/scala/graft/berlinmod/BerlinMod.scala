@@ -434,8 +434,6 @@ object BerlinMod {
     * then the exact point-to-segment distance test (identical semantics
     * and epsilon to Geo.pointSegDistance < 1e-9, i.e. st_intersects of a
     * trajectory with a point) as pure codegen'd arithmetic. */
-  private[graft] def segHitsSqlForScratch(v: String): String = segHitsSql(v)
-
   private def segHitsSql(pointCellsView: String): String =
     s"""SELECT h.PointId, h.VehicleId, h.TripId
         FROM (
@@ -559,6 +557,9 @@ object BerlinMod {
        JOIN Licences2 l2 ON h2.VehicleId = l2.VehicleId
        WHERE l1.Licence < l2.Licence AND aDisjoint(h1.clip, h2.clip)
        ORDER BY PeriodId, RegionId, Licence1, Licence2"""
+
+  /** The names of [[queries]], known before a fleet is loaded. */
+  val queryNames: Seq[String] = (1 to 17).map(i => s"q$i")
 
   /** The 17 queries (ref benchmark/BerlinMOD/sql/queries). */
   def queries(spark: SparkSession): Seq[(String, DataFrame)] = {

@@ -159,8 +159,8 @@ object FastRoundRule extends Rule[LogicalPlan] {
 }
 
 /** Session extension entry point:
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`. */
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, as
+  * [[graft.GraftSession]] sets it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
     GraftExtensions.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))

@@ -2,20 +2,12 @@ package graft.scale
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-curve probe for the pipeline (dedup/text/sketch) operators —
-  * the [[graft.berlinmod.BmScaleProbe]] pattern applied to the corpus
-  * side of the library. Generates a [[SynthCorpus]] dir at `mult` x the
-  * sf0.1 base (5 000 docs / 600 000 lineitem rows) and times the six
-  * operators whose 100 TB story previously rested on plan-shape
-  * arguments alone, running the UNCHANGED `SparkEntry.queries` code:
-  * dedup_jaccard, dedup_minhash_lsh, dedup_clusters, dedup_substring,
-  * text_tfidf, sketch_kmv_grouped.
-  *
-  * `runMain graft.scale.PipelineScaleProbe <mult> [passes]` prints one
-  * JSON line: generation seconds, per-query min-of-`passes` seconds
-  * (this box is a shared tenant — min of spaced passes is the engine's
-  * cost), and the planted-dup output sizes so the growth numbers can be
-  * read against their output-bound floors. */
+/** The pipeline decade rows of [[graft.Bench]] (`<entry>_10x`,
+  * `<entry>_100x`): the gate entries timed against a [[SynthCorpus]] dir
+  * at a multiple of the sf0.1 base (5 000 docs / 600 000 lineitem rows),
+  * so the dedup/text/sketch/ANN operators' scale claims rest on measured
+  * decades rather than plan-shape arguments, running the UNCHANGED
+  * `SparkEntry.queries` code. */
 object PipelineScaleProbe {
   val probeQueries: Seq[String] = Seq(
     "dedup_jaccard", "dedup_minhash_lsh", "dedup_clusters",
@@ -174,126 +166,5 @@ object PipelineScaleProbe {
     // 8-plane build — see the auditAtBase note), so the synth decade
     // dirs never need it and at 10x+ the fixed family would be
     // a ~36B-candidate join
-  }
-
-  /** `runMain graft.scale.PipelineScaleProbe <mult> [passes] [q1,q2,...]`
-    * — the optional query list restricts the probe (the 1000x
-    * third-decade run times the five operators whose shuffles grow to
-    * tens of GB, not the whole family). */
-  def main(args: Array[String]): Unit = {
-    val mult = if (args.nonEmpty) args(0).toInt else 10
-    val passes = if (args.length > 1) args(1).toInt else 2
-    val onlyQ: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    graft.util.HeapWarm.pretouch()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition count must TRACK the decade: at 1000x a 32-partition
-    // shuffle puts ~500 MB in each task's sorter against ~450 MB of
-    // execution memory, so every sort-merge sort and sort-fallback
-    // aggregate double-writes its input to disk as spill. 4x partitions
-    // puts per-task working sets back inside memory (sorts go
-    // in-memory, spill ~0) at the same total shuffle bytes — exactly
-    // how a real cluster absorbs a decade: more tasks, not bigger ones.
-    // From 100x the same rule keeps the graph build's per-task GROUP
-    // count (distinct query_ids per bkt-partition, ~n·(P+1)/parts)
-    // inside the 1M hash-aggregate threshold — at 32 partitions the 5M
-    // build's ~2.8M groups/task would fall back to the full-stream sort.
-    val shufParts =
-      if (mult >= 100) (cpus.toInt * 4).toString else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // k-bounded TopKOrdered aggregates (the ANN family) must HASH, not
-      // sort-fall-back, when grouping by n vectors: the default 128-key
-      // fallback threshold turns the graph build's bounded partial agg
-      // into a full-stream sort (2.7 GB spill at 50k vectors, disk-death
-      // at 5M) where the hash map costs ~400 B per group
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // zstd shuffle/spill compression: the third-decade (1000x) probe
-      // keeps ~50 GB of live shuffle on one box; zstd halves that vs
-      // lz4 for these repetitive token/hash payloads — and it is the
-      // codec a shuffle-heavy 100 TB deployment would run anyway (CPU
-      // is idle during shuffle I/O at this shape)
-      .config("spark.io.compression.codec", "zstd")
-      // phase checkpoints store MEMORY_AND_DISK_SER (Dedup.ckptDisk);
-      // compress the serialized blocks with the same codec — the prefix/
-      // signature tables are highly repetitive hash columns
-      .config("spark.rdd.compress", "true")
-      // shuffle files are deleted only when their dependency is GC'd;
-      // with a 24g heap the JVM may not GC for the whole probe, so
-      // lineage released by localCheckpoint would otherwise stay on
-      // disk — force the ContextCleaner's periodic GC often enough to
-      // reclaim mid-query (the disk is the scarce resource here)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = s"/tmp/graft_synth_${mult}x"
-    val tG0 = System.nanoTime()
-    SynthCorpus.generate(spark, mult, dir)
-    val genSec = (System.nanoTime() - tG0) / 1e9
-    // an EXPLICIT query list may name ANY gate entry — auditAtBase
-    // queries and entries outside the standing probe pools alike; that
-    // is how archived decade runs for audit-shaped rows are produced
-    val baseQs =
-      if (onlyQ.isDefined) graft.SparkEntry.queries.keys.toSeq.sorted
-      else if (mult > 1) scaleRowQueries
-      else probeQueries ++ annProbeQueries
-    val selQs = onlyQ.fold(baseQs)(sel => baseQs.filter(sel))
-    // load-phase layout builds, but only for the ANN paths being probed
-    if (selQs.contains("ann_lsh_bucketed"))
-      graft.operators.Similarity.buildLshLayout(spark, dir)
-    if (selQs.contains("ann_ivf_bucketed") ||
-        selQs.contains("ann_filtered_bucketed") ||
-        selQs.contains("hybrid_rrf_ivf") ||
-        selQs.exists(_.startsWith("hybrid_rrf_batch")))
-      graft.operators.Similarity.buildIvfLayout(spark, dir)
-    if (selQs.contains("hybrid_rrf_ivf") ||
-        selQs.exists(_.startsWith("hybrid_rrf_batch")))
-      graft.operators.Retrieval.buildPostingLayout(spark, dir)
-    if (selQs.contains("ann_ivfpq_bucketed"))
-      graft.operators.Similarity.buildIvfPqLayout(spark, dir)
-    if (selQs.contains("ann_graph_search"))
-      graft.operators.Similarity.buildGraphLayout(spark, dir)
-    if (selQs.contains("ann_hnsw"))
-      graft.operators.Similarity.buildHnswLayout(spark, dir)
-    if (selQs.contains("ann_sq8_packed"))
-      graft.operators.Similarity.buildSq8Layout(spark, dir)
-    if (selQs.contains("ann_ivf_sq8"))
-      graft.operators.Similarity.buildIvfSq8Layout(spark, dir)
-    // same per-query task-metric attribution as the bench: the probe's
-    // scale claims need spill/shuffle evidence, not just wall-clock
-    val metrics = new graft.util.BenchMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    val times = (for (p <- 1 to passes) yield {
-      selQs
-        .map { n =>
-        metrics.reset(n)
-        spark.sparkContext.setJobGroup(n, n, interruptOnCancel = false)
-        System.err.println(s"[probe] pass $p $n start")
-        val t0 = System.nanoTime()
-        val rows = graft.SparkEntry.queries(n)(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[probe] pass $p $n $sec%.1f s ($rows rows)")
-        spark.sparkContext.clearJobGroup()
-        spark.catalog.clearCache()
-        System.gc()
-        (n, sec, rows)
-      }
-    }).flatten.groupBy(_._1).map { case (n, xs) =>
-      (n, xs.map(_._2).min, xs.head._3)
-    }
-    Thread.sleep(500) // let trailing listener events drain
-    val qs = times.toSeq.sortBy(_._1).map { case (n, t, rows) =>
-      s""""$n":{"sec":${math.rint(t * 1000) / 1000},"rows":$rows}"""
-    }.mkString(",")
-    println(s"""{"mult":$mult,"docs":${5000L * mult},""" +
-      s""""gen_sec":${math.rint(genSec * 10) / 10},$qs,""" +
-      s""""task_metrics":${metrics.snapshotJson}}""")
-    spark.stop()
   }
 }

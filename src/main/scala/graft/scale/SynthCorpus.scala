@@ -3,8 +3,8 @@ package graft.scale
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic corpus generator for the pipeline scale
-  * probes — the documents/lineitem analogue of BerlinMOD's distributed
+/** Deterministic synthetic corpus generator for the pipeline decade
+  * rows — the documents/lineitem analogue of BerlinMOD's distributed
   * trip generator. The driver's `documents` table tops out at 5 000
   * rows (sf0.1), so the 100 TB claims for the dedup/text operators need
   * corpora the driver does not ship; this generates them with the
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *    driver materialization at any scale.
   *
   * Layout matches the driver's sf dirs (`documents.parquet`,
-  * `lineitem.parquet` as parquet directories), so the probe runs the
+  * `lineitem.parquet` as parquet directories), so the bench runs the
   * UNCHANGED `SparkEntry.queries` entries against the generated dir.
   */
 object SynthCorpus {
@@ -228,14 +228,4 @@ object SynthCorpus {
     if (!ok("orders")) writeOrders(spark, 150000L * mult, outDir)
     if (!ok("embeddings")) writeEmbeddings(spark, 50000L * mult, outDir)
   }
-
-  /** Embeddings-only generation for the graph-build probes: the edge
-    * builds read nothing but `embeddings.parquet`, and the full 400x
-    * corpus's unused lineitem alone is ~5 GB of write. The shared
-    * decade dirs (10x/100x) already carry all four tables, so the
-    * marker skip keeps this a no-op there. */
-  def generateEmbeddings(spark: SparkSession, mult: Int,
-                         outDir: String): Unit =
-    if (!new java.io.File(s"$outDir/embeddings.parquet/_SUCCESS").exists())
-      writeEmbeddings(spark, 50000L * mult, outDir)
 }

@@ -1,14 +1,19 @@
 package graft.util
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Per-query shuffle/spill/memory metrics for the bench artifact, so a
   * plan regression (new shuffle, spill onset, memory blow-up) is
   * visible quantitatively even when shared-tenant wall-clock noise
-  * hides it.
+  * hides it, plus one row per stage of the query — the job/stage/task
+  * forensics (stragglers, duplicate map stages, late launches) that
+  * per-query totals hide. Statistics are collected at shuffle
+  * boundaries, as in Shark's partial DAG execution.
   *
   * Attribution: Bench wraps each timed run in a Spark job group named
   * after the query; `onJobStart` maps the job's stage ids to that
@@ -23,10 +28,21 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 final class BenchMetricsListener extends SparkListener {
   private val stageToGroup = new ConcurrentHashMap[Int, String]()
   private val byGroup = new ConcurrentHashMap[String, Array[AtomicLong]]()
+  private val stagesByGroup =
+    new ConcurrentHashMap[String, ConcurrentLinkedQueue[String]]()
+  // per-stage task durations (ms) and earliest launch / latest finish
+  // (epoch ms): separates "tasks ran slowly" from "tasks were launched
+  // late"
+  private val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
+  private val launch0 = new ConcurrentHashMap[Int, Long]()
+  private val finishN = new ConcurrentHashMap[Int, Long]()
 
   /** Drop any previously-recorded pass for `name` (called right before
     * each timed run, so the surviving numbers are the last pass's). */
-  def reset(name: String): Unit = byGroup.remove(name)
+  def reset(name: String): Unit = {
+    byGroup.remove(name)
+    stagesByGroup.remove(name)
+  }
 
   private def acc(g: String): Array[AtomicLong] =
     byGroup.computeIfAbsent(g, _ => Array.fill(7)(new AtomicLong))
@@ -57,19 +73,53 @@ final class BenchMetricsListener extends SparkListener {
       a(5).addAndGet(m.executorCpuTime)
       a(6).addAndGet(m.jvmGCTime)
     }
+    val ti = te.taskInfo
+    if (g != null && ti != null) {
+      taskMs.computeIfAbsent(te.stageId, _ => new ConcurrentLinkedQueue())
+        .add(ti.duration)
+      launch0.merge(te.stageId, ti.launchTime, math.min)
+      finishN.merge(te.stageId, ti.finishTime, math.max)
+    }
   }
 
-  /** JSON object string `{"<q>":{"shuffle_write":..},...}` over all
-    * recorded groups (bytes; `peak_task_mem` is max per-task peak
-    * execution memory). */
-  def snapshotJson: String = {
-    import scala.jdk.CollectionConverters._
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    val si = sc.stageInfo
+    val g = stageToGroup.get(si.stageId)
+    val tm = si.taskMetrics
+    if (g != null && tm != null) {
+      val ds = Option(taskMs.remove(si.stageId))
+        .map(_.asScala.toArray.sorted).getOrElse(Array.empty[Long])
+      def pct(p: Int): Long = if (ds.isEmpty) 0L else ds(ds.length * p / 100)
+      val span = finishN.getOrDefault(si.stageId, 0L) -
+        launch0.getOrDefault(si.stageId, 0L)
+      finishN.remove(si.stageId); launch0.remove(si.stageId)
+      stagesByGroup.computeIfAbsent(g, _ => new ConcurrentLinkedQueue())
+        .add(s"""{"id":${si.stageId},"name":${Json.quote(si.name)},""" +
+          s""""tasks":${si.numTasks},""" +
+          s""""cpu_sec":${math.rint(tm.executorCpuTime / 1e6) / 1e3},""" +
+          s""""run_sec":${tm.executorRunTime / 1e3},""" +
+          s""""shuffle_read":${tm.shuffleReadMetrics.totalBytesRead},""" +
+          s""""shuffle_write":${tm.shuffleWriteMetrics.bytesWritten},""" +
+          s""""spill_disk":${tm.diskBytesSpilled},""" +
+          s""""spill_mem":${tm.memoryBytesSpilled},""" +
+          s""""task_p50_ms":${pct(50)},"task_p90_ms":${pct(90)},""" +
+          s""""task_max_ms":${ds.lastOption.getOrElse(0L)},""" +
+          s""""span_ms":${math.max(span, 0L)}}""")
+    }
+  }
+
+  /** JSON object string `{"<q>":{"shuffle_write":..,"stages":[..]},...}`
+    * over all recorded groups (bytes; `peak_task_mem` is max per-task
+    * peak execution memory; one `stages` row per completed stage, in
+    * completion order). */
+  def snapshotJson: String =
     byGroup.asScala.toSeq.sortBy(_._1).map { case (g, a) =>
-      s""""$g":{"shuffle_write":${a(0).get},"shuffle_read":${a(1).get},""" +
+      val stages = Option(stagesByGroup.get(g)).map(_.asScala.toSeq)
+        .getOrElse(Nil).mkString("[", ",", "]")
+      s"""${Json.quote(g)}:{"shuffle_write":${a(0).get},"shuffle_read":${a(1).get},""" +
         s""""spill_disk":${a(2).get},"spill_mem":${a(3).get},""" +
         s""""peak_task_mem":${a(4).get},""" +
         s""""cpu_sec":${math.rint(a(5).get / 1e6) / 1e3},""" +
-        s""""gc_sec":${a(6).get / 1e3.toDouble}}"""
+        s""""gc_sec":${a(6).get / 1e3.toDouble},"stages":$stages}"""
     }.mkString("{", ",", "}")
-  }
 }

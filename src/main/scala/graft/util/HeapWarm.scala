@@ -19,7 +19,7 @@ object HeapWarm {
     val target = (Runtime.getRuntime.maxMemory() * fraction).toLong
     val chunk = 1 << 20
     val nChunks = (target / chunk).toInt
-    val keep = new Array[Array[Byte]](nChunks)
+    var keep = new Array[Array[Byte]](nChunks)
     var i = 0
     try {
       while (i < nChunks) {
@@ -30,7 +30,10 @@ object HeapWarm {
         i += 1
       }
     } catch { case _: OutOfMemoryError => () }
-    java.util.Arrays.fill(keep.asInstanceOf[Array[AnyRef]], null)
+    // after an OutOfMemoryError the heap is full (below 8 GB, G1's regions
+    // are 2 MB or less and a 1 MiB chunk can take two): drop the only
+    // reference to the chunks before anything else allocates
+    keep = null
     System.gc()
   }
 }

@@ -1,33 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.berlinmod.BerlinMod
 
 /** End-to-end BerlinMOD workload: generate deterministic synthetic data
   * in the reference's schemas, run all 17 benchmark queries, check
   * invariants the workload semantics guarantee. */
-class BerlinModSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BerlinModSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private var results: Map[String, Array[org.apache.spark.sql.Row]] = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     val nTrips = BerlinMod.load(spark)
     assert(nTrips > 30)
     results = BerlinMod.queries(spark).map { case (n, df) => n -> df.collect() }.toMap
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("q1 licence-model join covers every vehicle") {
     assert(results("q1").length == 20)

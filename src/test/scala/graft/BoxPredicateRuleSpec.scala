@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, Expression, GetStructField}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.BoxPredicateRule
 
@@ -15,20 +13,10 @@ import graft.plans.BoxPredicateRule
   * `spark.sql.optimizer.maxIterations`, and the optimized Filter holds
   * each derived range comparison exactly once (no re-added
   * `hasX = false OR …` / `NOT hasX OR …` twins). */
-class BoxPredicateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class BoxPredicateRuleSpec extends SessionSuite {
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    super.beforeAll()
     val dir = java.nio.file.Files.createTempDirectory("boxconv").toString
     spark.sql(
       """SELECT id,
@@ -49,8 +37,6 @@ class BoxPredicateRuleSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.sqlx.MobSql.run(spark,
       "CREATE INDEX conv_idx ON conv_trtree USING TRTREE(box)")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val XWindow = "stbox('STBOX X((10.0,10.0),(20.0,20.0))')"
   private val XTWindow =

@@ -1,46 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
-/** Results must not depend on the session config: the plans the box
-  * predicate rule rewrites, plus a few other mobility gate entries, return
-  * identical rows under the gate's config (`graft.Verify`) and the bench's
-  * (`graft.Bench`), with adaptive execution on and off. The settings that
-  * differ are the object-hash-aggregate fallback threshold (1M in the
-  * gate; 128 for these entries in the bench, which picks 64k only for the
-  * ANN family) and the shuffle partition count (4 and 32 on the machines
-  * those harnesses ran on). */
-class ConfigInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Results must not depend on the session config. The gate
+  * (`graft.Verify`) and the bench (`graft.Bench`) now share one session
+  * ([[GraftSession]]) and one per-query aggregate threshold
+  * ([[SparkEntry.aggThreshold]]: 64k for the ANN/retrieval entries, 128
+  * for the rest), and this spec keeps that choice free of consequences
+  * for rows: the plans the box predicate rule rewrites, mobility, ANN,
+  * hybrid-retrieval, dedup and text gate entries return identical rows
+  * with the fallback threshold at 1M and at 128, 4 and 32 shuffle
+  * partitions, and adaptive execution on and off. */
+class ConfigInvarianceSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
-  private val FallbackKey =
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-
   private val configs: Seq[(String, Map[String, String])] = for {
-    (harness, threshold, partitions) <- Seq(
-      ("verify", "1000000", "4"), ("bench", "128", "32"))
+    (threshold, partitions) <- Seq(("1000000", "4"), ("128", "32"))
     aqe <- Seq("true", "false")
-  } yield s"$harness/aqe=$aqe" -> Map(
-    FallbackKey -> threshold,
+  } yield s"threshold=$threshold/partitions=$partitions/aqe=$aqe" -> Map(
+    SparkEntry.FallbackKey -> threshold,
     "spark.sql.shuffle.partitions" -> partitions,
     "spark.sql.adaptive.enabled" -> aqe)
 
@@ -63,7 +42,9 @@ class ConfigInvarianceSpec extends AnyFunSuite with BeforeAndAfterAll {
     def lookup(view: String) = () => graft.sqlx.MobSql.run(s,
       s"SELECT id, box FROM $view WHERE box && $Window")
     Seq("mob_q6_stbox_filter", "mob_q1_timespan", "mob_q4_sessions",
-        "mob_q8_asof_join")
+        "mob_q8_asof_join", "ann_topk", "ann_lsh", "hybrid_rrf",
+        "retrieval_mmr", "dedup_jaccard", "dedup_minhash_lsh", "text_tfidf",
+        "text_bm25")
       .map(n => n -> (() => SparkEntry.queries(n)(s, d))) ++
       Seq("trtree_lookup" -> lookup(s"inv_idx_$tag"),
           "unindexed_lookup" -> lookup(s"inv_plain_$tag"))

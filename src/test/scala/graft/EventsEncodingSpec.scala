@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Tables
 
@@ -18,9 +15,9 @@ import graft.util.Tables
   * identical TimestampType frame, and that the events-consuming gate
   * queries analyze against every encoding. A future encoding change
   * should land here first, as a red assertion — not as a gate casualty. */
-class EventsEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventsEncodingSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores = 2
   private var dirs: Map[String, String] = _ // encoding -> sf-style dir
   private val sfSrc = "/root/testdata/sf0.001"
 
@@ -38,17 +35,9 @@ class EventsEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
     "mob_q7_when_true", "mob_q8_asof_join")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     // runtime-set too: getOrCreate may have reused another spec's session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.functions.GraftFunctions.register(spark)
 
     val canonical = Tables.events(spark, sfSrc).orderBy("event_id").collect()
     assert(canonical.nonEmpty)
@@ -120,8 +109,6 @@ class EventsEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
       writer.write(g)
     } finally writer.close()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("raw encodings differ; Tables.events normalizes all three") {
     // precondition: the fixtures really exercise three DISTINCT raw types

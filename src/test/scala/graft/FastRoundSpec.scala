@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorKernels
 
@@ -13,19 +10,7 @@ import graft.functions.VectorKernels
   * exact-hash oracle rows, so equality is checked exhaustively against
   * the stock semantics: a magnitude-swept fuzz, the half-boundary
   * lattice the fallback band exists for, and the IEEE specials. */
-class FastRoundSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
+class FastRoundSpec extends SessionSuite {
 
   private def stock(x: Double, s: Int): Double =
     if (x.isNaN || x.isInfinite) x

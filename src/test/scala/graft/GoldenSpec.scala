@@ -3,11 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
 import graft.sqlx.{ResultFormat, SqlRewriter}
 
 /** Golden-test runner: executes the reference's own sqllogictest corpus
@@ -18,25 +13,12 @@ import graft.sqlx.{ResultFormat, SqlRewriter}
   * Writes a detailed report to target/golden_report.txt and asserts a
   * minimum pass rate that ratchets up as coverage grows.
   */
-class GoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GoldenSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores = 2
   private val corpusDir = "/root/reference/test/sql"
 
   case class Case(file: String, line: Int, sql: String, expected: String)
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def parseFile(path: java.nio.file.Path): Seq[Case] = {
     val lines = Files.readAllLines(path).asScala.toVector

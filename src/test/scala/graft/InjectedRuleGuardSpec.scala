@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
 import graft.plans.GraftExtensions
 
@@ -15,25 +13,9 @@ import graft.plans.GraftExtensions
   * The query's planning tracker sums a rule's invocations over all
   * batches, so a batch that reached the cap shows as at least
   * `maxIterations` invocations. */
-class InjectedRuleGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
+class InjectedRuleGuardSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def assertConverges(label: String, df: DataFrame): Unit = {
     df.queryExecution.optimizedPlan

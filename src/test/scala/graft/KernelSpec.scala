@@ -1,28 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Property-style tests for the native codegen vector kernels: the
   * generated code (exercised through a DataFrame, so doGenCode runs)
   * must agree with a plain-Scala reference on seeded-random inputs,
   * including empty and length-mismatched arrays. */
-class KernelSpec extends AnyFunSuite with BeforeAndAfterAll {
+class KernelSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores = 2
 
   test("vec_dot matches the scalar reference (codegen path)") {
     val sp = spark

@@ -1,30 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
-
 /** The overload table's bind-time contract, beyond the pinned surface:
   * a return type must describe what the implementation returns, and an
   * argument combination no entry case covers fails naming the function. */
-class MobFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MobFunctionsSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores = 2
 
   test("expandSpace of a temporal point is typed and printed as an STBOX") {
     val r = spark.sql("SELECT asText(expandspace(tgeompoint(" +

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
 
@@ -23,25 +20,17 @@ import graft.functions.GraftFunctions
   * and SURVEY §2.2; the goldens quoted there (timezone normalization,
   * sorted sets, `SequenceSet`, the `2 days` boundspan duration, the
   * geodetic `SRID=4326;` prefix) are pinned verbatim. */
-class MobSurfaceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MobSurfaceSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores = 2
 
   override def beforeAll(): Unit = {
-    val base = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    base.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     // a fresh registry: only what GraftFunctions registers is scala_udf
-    spark = base.newSession()
+    spark = spark.newSession()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     GraftFunctions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** One pinned call: function, argument expressions, printed result. */
   private case class P(fn: String, args: Seq[String], want: String) {

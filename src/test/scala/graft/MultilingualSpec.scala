@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Multilingual, TextAnalysis}
 
@@ -11,24 +8,9 @@ import graft.operators.{Multilingual, TextAnalysis}
   * pins exact values; these pin the PROPERTIES the entries exist for —
   * the byte-vs-rendered-identity miss class, and the trained model
   * actually out-classifying the marker-word heuristic). */
-class MultilingualSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MultilingualSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("every borrowed paragraph is a NORM-ONLY duplicate: raw-byte dedup " +
        "misses all of them, NFC dedup finds all of them") {

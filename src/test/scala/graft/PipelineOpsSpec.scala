@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.util.Tables
@@ -12,23 +9,9 @@ import graft.util.Tables
   * connected components, the relational (oracle-checkable) SimHash, the
   * tf-idf / quantile / stratified-sampling text ops, and the empty-doc
   * robustness of the multimodal codecs. */
-class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineOpsSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("jaccard equals Scala brute force on a constructed corpus, " +
        "including exact-threshold and one-shared-prefix-shingle pairs") {
@@ -75,7 +58,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
        "expression chain, byte-for-byte, on edge-case strings") {
     val sp = spark
     import sp.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // every boundary the split/join-identity argument rests on:
     // multi-space runs (empty tokens), leading/trailing spaces, exactly
     // 2/3/4 tokens, all-spaces, empty, multi-byte UTF-8, long filler

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{MobilityOps, Relational}
 import graft.util.Tables
@@ -13,24 +11,9 @@ import graft.util.Tables
   * partial+final, top-N avoids global sorts, codegen covers the hot
   * path, and per-entity pipelines shuffle exactly once. These are the
   * properties that keep the same code fast at 1000 executors / 100 TB. */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -273,7 +256,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // natural predicate on a stored stbox struct column — the optimizer
     // rule (graft.plans.BoxPredicateRule) must add min/max conjuncts that
     // reach the parquet scan as PushedFilters on the nested box fields
-    graft.functions.GraftFunctions.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("boxrule").toString
     spark.sql(
       s"""SELECT id, to_stbox(tgeompoint(st_point(cast(id % 100 AS double),
@@ -296,7 +278,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the DDL is accepted and mapped to a write-time range-clustered
     // parquet layout; the rebound view serves identical rows, and a box
     // predicate against it still derives pushed range filters
-    graft.functions.GraftFunctions.register(spark)
     spark.sql(
       s"""SELECT id, to_stbox(tgeompoint(st_point(cast(id % 50 AS double),
             cast(id % 31 AS double)), timestamp'2024-01-01')) AS box
@@ -322,7 +303,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // write-time equivalent of the R-tree's 2-D page locality. Measured
     // as rows SURVIVING row-group pruning at the scan (with AQE off so
     // the executed plan exposes the scan metric directly).
-    graft.functions.GraftFunctions.register(spark)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -377,7 +357,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // append leaves a tail scanned unpruned alongside the layout;
     // compact must fold it back so the WHOLE table is again behind one
     // clustered scan with pushed min/max filters on the box fields
-    graft.functions.GraftFunctions.register(spark)
     spark.sql(
       s"""SELECT id, to_stbox(tgeompoint(st_point(cast(id % 50 AS double),
             cast(id % 31 AS double)), timestamp'2024-01-01')) AS box
@@ -408,7 +387,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // can overlap an XT literal via time alone. The derived xmin/xmax
     // conjuncts must be guarded by the row's own hasX flag or such rows
     // would be wrongly dropped (they carry placeholder coords).
-    graft.functions.GraftFunctions.register(spark)
     spark.sql(
       """SELECT * FROM VALUES
            (1, to_stbox(tgeompoint(st_point(15.0d, 15.0d), timestamp'2024-01-01'))),

@@ -4,30 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Quality, Sketches}
 
 /** Behavioral + plan-shape properties of the quality-filter family and
   * the KMV cardinality sketch. */
-class QualitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class QualitySpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Tiny documents corpus written in the driver-table layout so the
     * (SparkSession, dir) operators run on it unchanged. */

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Quality, Retrieval, Similarity}
 import graft.util.Tables
@@ -14,30 +11,15 @@ import graft.util.Tables
   * SEMANTIC claims the scaladocs make (leg consistency with text_bm25,
   * the pre-vs-post-filter distinction, greedy-MMR monotonicity and its
   * diversity win, metric range). */
-class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RetrievalSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Exact cosine top-k per query id over rows passing `pred` —
     * the brute-force standard the filtered ANN is judged against. */
   private def exactFilteredTopK(queryIds: Seq[Long], k: Int,
                                 pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
       : Map[Long, Seq[Long]] = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
@@ -183,7 +165,6 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("retrieval_mmr: 5 distinct picks, greedy scores monotone " +
        "non-increasing, and diversity beats the plain top-5 (lower max " +
        "pairwise similarity)") {
-    graft.functions.GraftFunctions.register(spark)
     val picks = Retrieval.retrievalMmr(spark, d).collect()
     assert(picks.length === 5)
     assert(picks.map(_.getLong(1)).distinct.length === 5)

@@ -1,27 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.sources.MobCsv
 
 /** CSV source path: mobility literals in CSV columns parse into the same
   * struct encodings the parquet path produces, queries run on them
   * unchanged, and asText round-trips losslessly. */
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SourcesSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
+  override protected def cores = 2
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = java.nio.file.Files.createTempDirectory("mobcsv").toString
     val csv = java.nio.file.Paths.get(dir, "trips.csv")
     java.nio.file.Files.writeString(csv,
@@ -30,8 +20,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
         |2,"[Point(5 5)@2000-01-01 09:00:00+00, Point(5 15)@2000-01-01 09:30:00+00, Point(15 15)@2000-01-01 10:00:00+00]"
         |""".stripMargin)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CSV mobility columns parse, query, and round-trip") {
     val df = MobCsv.read(spark, s"$dir/trips.csv", Map("trip" -> "tgeompoint"))

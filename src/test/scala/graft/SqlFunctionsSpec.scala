@@ -1,30 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.functions.GraftFunctions
-
 /** Drives the registered SQL functions through spark.sql — the package
   * boundary a SQL user of this library sees. Goldens from the reference's
   * sqllogictests. */
-class SqlFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SqlFunctionsSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores = 2
 
   private def q1(sql: String): Any = spark.sql(sql).collect()(0).get(0)
 

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamSessions
 
@@ -12,23 +9,9 @@ import graft.streaming.StreamSessions
   * must close exactly when the watermark passes their inactivity gap,
   * and must match the batch sessionization semantics
   * (MobilityOps.q4Sessions' span-merge rule). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) (TESTDATA.md gotcha)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def cores = 2
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -247,7 +230,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val Sim = graft.operators.Similarity
     val SS = graft.streaming.StreamSink
-    graft.functions.GraftFunctions.register(spark)
     val d = "/root/testdata/sf0.001"
     val root = java.nio.file.Files
       .createTempDirectory("graft_compact_").toString

@@ -4,10 +4,7 @@ import java.io.{BufferedInputStream, File, FileInputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TarShards
 
@@ -16,23 +13,14 @@ import graft.sources.TarShards
   * (listing + extraction byte-identical to the inputs), and our reader
   * must parse a GNU-tar-written archive — plus sink determinism and the
   * WebDataset sample-grouping contract. */
-class TarShardsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TarShardsSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     work = Files.createTempDirectory("tarshards").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // text exercising multibyte UTF-8, empties, and >512-byte payloads
   private def sampleDocs() = {

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** [[graft.functions.TopKOrderedAgg]] (`topk_ordered`) must be
   * ROW-IDENTICAL — members AND order — to the semantics it replaces:
@@ -16,22 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * input partitions force serialize/deserialize and mergeSorted), and
   * through both input paths (pre-projected BoundReference columns and
   * the interpreted-eval fallback for computed args / literal payload). */
-class TopKAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class TopKAggSpec extends SessionSuite {
 
   /** Deterministic tie-heavy corpus: 50k rows, 37 groups, keys from a
     * 11-value lattice (≫ cap collisions per key), ids scrambled so

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SessionSuite
 import graft.util.Tables
 
 /** [[SimilarityIvf.ivfBatchCandidates]] (the fused partition kernel the
@@ -16,25 +15,9 @@ import graft.util.Tables
   * the (−r6, vec_id) tie-break). Run at sf0.01 with PRF-shaped query
   * vectors (per-dimension 6dp-rounded means of corpus embeddings — the
   * exact frame shape batchLegs feeds both legs). */
-class BatchLegTwinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BatchLegTwinSpec extends SessionSuite {
 
-  private var spark: SparkSession = _
   private val d = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** PRF-shaped (query_id, qv) frame: per-dimension round(avg, 6) of
     * three corpus embeddings per query — the derivation batchLegs uses,
