@@ -271,15 +271,9 @@ object Bench {
     val stdoutLine =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
         s""""n":${results.size}$errPartStdout,"sf":"$sfDir"}"""
-    // micro-batch decomposition of the neardup stream row (last pass):
-    // attributes any wall-clock drift to specific batches vs harness
-    val nearDupBatches = graft.streaming.StreamGate.lastNearDupBatchesMs
-      .map { case (id, ms) => s"[$id,$ms]" }.mkString("[", ",", "]")
     val fileLine =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""queries":$queriesJson$errPart,""" +
-        s""""neardup_batches_ms":$nearDupBatches,""" +
-        s""""neardup_state":${graft.streaming.StreamGate.lastNearDupStateJson},""" +
         s""""task_metrics":$taskMetrics,"sf":"$sfDir"}"""
     Option(out.getParent).foreach(Files.createDirectories(_))
     Files.writeString(out, fileLine)

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
+import graft.streaming.BoundedStream.{PerBatch, Rows}
 import graft.util.Tables
 
 /** Streaming surface wired into the OFFICIAL correctness gate.
@@ -26,213 +25,115 @@ import graft.util.Tables
   * candidates ⊇ batch candidates, and after the exact-Jaccard >= 0.5
   * verification both equal the exact-join oracle whenever batch recall
   * is 1.0 — which the batch oracle already asserts on the gate data.
+  *
+  * Every entry runs through [[BoundedStream.run]]; an entry holds only
+  * what it stages, its pipeline and the tail over its sunk rows.
   */
 object StreamGate {
-
-  /** Per-batch (batchId, triggerExecution ms) of the LAST
-    * [[streamNearDupSink]] run — surfaced into target/bench.json so a
-    * wall-clock drift on that row decomposes into its micro-batches. */
-  @volatile var lastNearDupBatchesMs: Seq[(Long, Long)] = Nil
-
-  /** Per-batch STATE-STORE metrics of the last [[streamNearDupSink]]
-    * run, one compact JSON object per micro-batch (batch id, provider,
-    * total state rows, state memory bytes, rows updated) — the evidence
-    * the bench artifact records for the bounded-state claim: at 100 TB
-    * continuous ingest the state store is the component that must not
-    * grow with the stream, and these numbers are what a deployment
-    * alerts on. */
-  @volatile var lastNearDupStateJson: String = "[]"
-
-  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** The RocksDB state store — Spark's production provider for large
     * continuous state (bounded heap: state lives off-heap in RocksDB
     * memtables/SSTs; incremental checkpoints ship only changed files).
     * The OSS class name, resolved from the Spark jars on the classpath. */
-  val RocksDbProvider: String =
+  private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Provider the gate streams run on. Default ROCKSDB — the choice a
-    * 100 TB continuous-ingest deployment makes (the default in-heap
+  /** Provider every gate stream runs on: RocksDB — the choice a 100 TB
+    * continuous-ingest deployment makes (the default in-heap
     * HDFSBackedStateStoreProvider holds every key's state as JVM
     * objects, so executor heap bounds total state; RocksDB bounds heap
-    * regardless of state size and checkpoints incrementally).
-    * `GRAFT_STATE_STORE=hdfs` selects the in-heap default instead; the
-    * entries are output-deterministic by design, so the provider can
-    * never change rows — StreamingSpec runs one stateful entry under
-    * BOTH providers and asserts identical output. */
-  def stateStoreProvider: Option[String] =
-    providerOverride.getOrElse(
-      sys.env.getOrElse("GRAFT_STATE_STORE", "rocksdb")) match {
-      case "hdfs"    => None // Spark's default in-heap provider
-      case "rocksdb" => Some(RocksDbProvider)
-      case other     => Some(other) // explicit provider class
-    }
+    * regardless of state size and checkpoints incrementally). None is
+    * Spark's in-heap default, selected only through [[providerOverride]]. */
+  private[streaming] def stateStoreProvider: Option[String] =
+    if (providerOverride.contains("hdfs")) None else Some(RocksDbProvider)
 
-  /** Test seam: StreamingSpec's provider-toggle test runs one gate
-    * entry under BOTH providers in one JVM (env vars can't flip
-    * per-test). Overrides GRAFT_STATE_STORE when set. */
+  /** Test seam: `Some("hdfs")` runs the entries on the in-heap provider.
+    * The entries are output-deterministic by design, so the provider can
+    * never change rows — StreamingSpec runs stateful entries under BOTH
+    * providers in one JVM and asserts identical output. */
   @volatile private[graft] var providerOverride: Option[String] = None
 
-  /** Best-effort removal of a gate entry's temp root (staging +
-    * checkpoint + sink) once its result is materialized — the dirs are
-    * per-invocation and would otherwise accumulate under /tmp. */
-  private def deleteRecursively(root: String): Unit = try {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(root)
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverseIterator
-        .foreach(f => Files.deleteIfExists(f))
-      finally st.close()
-    }
-  } catch {
-    // Files.walk wraps mid-iteration I/O errors (e.g. a Spark shutdown
-    // thread concurrently removing a checkpoint temp file) in
-    // UncheckedIOException — a RuntimeException; cleanup must never
-    // fail a gate entry whose result is already materialized
-    case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+  /** The stateful shuffle partition count, pinned to at most 8. The count
+    * is fixed at the query's FIRST start and becomes the state-store
+    * count: every micro-batch commits one delta file per state partition
+    * per state store, so 32 partitions x 4 batches is 4x the checkpoint
+    * I/O of 8 — and on a small box that I/O, not compute, dominated the
+    * near-dup row (11 s for a 500-doc stream in r7) and the join row
+    * (6.5 s in r9; a stream-stream join commits FOUR state stores per
+    * partition). 8 is still full parallelism for a bounded gate stream; a
+    * 100 TB deployment sizes this to its cluster the same way (state
+    * scale-out is a partition-count choice at query start, not a code
+    * change). Output is partition-invariant. */
+  private def statePartitions(s: SparkSession): (String, String) = {
+    val key = "spark.sql.shuffle.partitions"
+    key -> math.min(s.conf.get(key).toInt, 8).toString
   }
 
-  /** Run `body` (which starts and awaits a streaming query) with the
-    * session's state-store provider set per [[stateStoreProvider]],
-    * restoring the previous conf after. The provider is bound to a
-    * checkpoint at FIRST query start; every gate entry uses a fresh
-    * checkpoint dir, so setting it per run is exact. */
-  private def withStateProvider[T](s: SparkSession)(body: => T): T =
-    stateStoreProvider match {
-      case None => body
-      case Some(cls) =>
-        val prev = s.conf.getOption(ProviderKey)
-        s.conf.set(ProviderKey, cls)
-        try body
-        finally prev match {
-          case Some(v) => s.conf.set(ProviderKey, v)
-          case None    => s.conf.unset(ProviderKey)
-        }
-    }
+  /** Three days past the last event of `ev`, in micros: where the
+    * sentinel row goes whose watermark finalizes every real day window
+    * in AvailableNow's trailing batch. */
+  private def sentinelAfter(ev: DataFrame): Long =
+    ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0) +
+      3L * 86400L * 1000000L
+
+  /** `rows` plus one sentinel row of `user` at `atMicros` (value 0), split
+    * into 4 files by event time `ts`. */
+  private def withSentinel(rows: DataFrame, user: Long, ts: String,
+                           atMicros: Long): DataFrame =
+    rows.unionByName(rows.sparkSession.range(1).select(rows.columns.map {
+        case "user_id" => lit(user).as("user_id")
+        case `ts`      => timestamp_micros(lit(atMicros)).as(ts)
+        case c         => lit(0.0).as(c)
+      }: _*))
+      .repartitionByRange(4, col(ts))
 
   /** `stream_neardup_sink` gate entry: documents(d) replayed as a
-    * 4-file stream (maxFilesPerTrigger=1 → 4 real micro-batches of
+    * 4-file stream (one file per trigger → 4 real micro-batches of
     * state accumulation), near-dup pairs sunk idempotently, the sunk
     * union re-read and exact-verified. Output schema/ordering matches
     * `dedup_minhash_lsh` exactly. */
   def streamNearDupSink(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_gate_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
     // Constant event time: no row can be late at ANY batch split, so
     // the watermark never filters input and the pair set is the
     // arrival-order-invariant one argued in the scaladoc.
-    Tables.documents(s, d)
+    val docs = Tables.documents(s, d)
       .select(col("doc_id"),
         lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"),
         col("text"))
       .repartitionByRange(4, col("doc_id"))
-      .write.mode("overwrite").parquet(staging)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", TimestampType),
-      StructField("text", StringType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val pairs = StreamNearDup.nearDupPairs(s, stream)
     // see StreamNearDup.nearDupPairs scaladoc: the conservative global-
     // watermark check flags any stateful op below flatMapGroupsWithState;
     // this pipeline provably emits nothing older than the watermark
-    val ccKey =
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prev = s.conf.getOption(ccKey)
-    s.conf.set(ccKey, "false")
-    // The stateful shuffle partition count is fixed at the query's FIRST
-    // start and becomes the state-store count: every micro-batch commits
-    // one delta file per state partition per stateful op, so 32
-    // partitions x 4 batches is 4x the checkpoint I/O of 8 — and on this
-    // box that I/O, not compute, dominated the r7 wall clock (11 s for a
-    // 500-doc stream). 8 partitions is still full parallelism for the
-    // gate's bounded stream; a 100 TB deployment sizes this to its
-    // cluster the same way (state scale-out is a partition-count choice
-    // at query start, not a code change). Output is partition-invariant.
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = s.conf.get(spKey)
-    s.conf.set(spKey, math.min(prevSp.toInt, 8).toString)
-    try {
-      val q = withStateProvider(s) {
-        val q0 = StreamSink.parquetSink(pairs, out)
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-      // per-batch trigger durations for the bench artifact: the r7->r6
-      // drift on this row was unattributable without them
-      lastNearDupBatchesMs = q.recentProgress.toSeq.map { p =>
-        (p.batchId, Option(p.durationMs.get("triggerExecution"))
-          .map(_.longValue).getOrElse(-1L))
-      }
-      // per-batch state-store metrics (bench artifact): provider, total
-      // state rows, state memory — the bounded-state evidence
-      val provider = stateStoreProvider.map(_.split('.').last)
-        .getOrElse("HDFSBackedStateStoreProvider")
-      lastNearDupStateJson = q.recentProgress.toSeq.map { p =>
-        val ops = p.stateOperators.toSeq
-        val rows = ops.map(_.numRowsTotal).sum
-        val mem = ops.map(_.memoryUsedBytes).sum
-        val upd = ops.map(_.numRowsUpdated).sum
-        // a RocksDB-only custom metric: present (>= 0) iff the RocksDB
-        // provider actually ran the batch — the echo of the conf alone
-        // can't prove engagement (StreamingSpec's toggle test reads this)
-        val sst = ops.flatMap(o =>
-          Option(o.customMetrics.get("rocksdbSstFileSize")).map(_.longValue))
-        val sstPart =
-          if (sst.isEmpty) "-1" else sst.sum.toString
-        s"""{"batch":${p.batchId},"provider":"$provider",""" +
-          s""""state_rows":$rows,"state_mem_bytes":$mem,""" +
-          s""""rows_updated":$upd,"rocksdb_sst_bytes":$sstPart}"""
-      }.mkString("[", ",", "]")
-    } finally {
-      s.conf.set(spKey, prevSp)
-      prev match {
-        case Some(v) => s.conf.set(ccKey, v)
-        case None    => s.conf.unset(ccKey)
-      }
+    val confs = Seq(
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" ->
+        "false",
+      statePartitions(s))
+    BoundedStream.run(s, "stream_neardup_sink", Seq(docs), confs,
+        oneFilePerBatch = true) { (in, _) =>
+      Rows(StreamNearDup.nearDupPairs(s, in.head))
+    } { sunk =>
+      // identical verification tail to the batch operator: exact shingle
+      // Jaccard >= 0.5 on the candidate pairs, same aliases and ordering
+      val docSh = graft.operators.Dedup.shingleHashes(s, d)
+        .groupBy("doc_id").agg(sort_array(collect_list("h")).as("shs"))
+        // pinned: consumed twice (id_a / id_b joins) and AQE's cache-blind
+        // exchange reuse would otherwise rebuild the full-corpus shingle
+        // array aggregate per side (see Dedup.pinShared)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      docSh.count()
+      sunk.select("id_a", "id_b").distinct()
+        .join(docSh.select(col("doc_id").as("id_a"), col("shs").as("sha")),
+          "id_a")
+        .join(docSh.select(col("doc_id").as("id_b"), col("shs").as("shb")),
+          "id_b")
+        .withColumn("i", call_function("vec_inter_sorted",
+          col("sha"), col("shb")))
+        .withColumn("j",
+          col("i") / (size(col("sha")) + size(col("shb")) - col("i")))
+        .filter(col("j") >= 0.5)
+        .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jac"))
+        .orderBy("id_a", "id_b")
     }
-    // union of committed batch=<id> dirs (explicit schema: an all-empty
-    // run still reads; temp dirs live until the JVM's /tmp is reaped)
-    val sunk = s.read
-      .schema(StructType(Seq(
-        StructField("id_a", LongType), StructField("id_b", LongType),
-        StructField("ts", TimestampType))))
-      .parquet(s"$out/batch=*")
-    // identical verification tail to the batch operator: exact shingle
-    // Jaccard >= 0.5 on the candidate pairs, same aliases and ordering
-    val docSh = graft.operators.Dedup.shingleHashes(s, d)
-      .groupBy("doc_id").agg(sort_array(collect_list("h")).as("shs"))
-      // pinned: consumed twice (id_a / id_b joins) and AQE's cache-blind
-      // exchange reuse would otherwise rebuild the full-corpus shingle
-      // array aggregate per side (see Dedup.pinShared)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    docSh.count()
-    val res = sunk.select("id_a", "id_b").distinct()
-      .join(docSh.select(col("doc_id").as("id_a"), col("shs").as("sha")),
-        "id_a")
-      .join(docSh.select(col("doc_id").as("id_b"), col("shs").as("shb")),
-        "id_b")
-      .withColumn("i", call_function("vec_inter_sorted",
-        col("sha"), col("shb")))
-      .withColumn("j",
-        col("i") / (size(col("sha")) + size(col("shb")) - col("i")))
-      .filter(col("j") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jac"))
-      .orderBy("id_a", "id_b")
-      // materialize (bounded: candidate pairs) so the per-invocation
-      // temp root can be removed — the r13 cleanup, applied to every
-      // sink (this one previously leaked staging + checkpoint + sink)
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
   }
 
   /** `stream_sessions_sink` gate entry: the events table replayed as a
@@ -249,9 +150,6 @@ object StreamGate {
     * no-data batch AvailableNow runs — so the stateful timeout path is
     * still what produces the final sessions. */
   def streamSessionsSink(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_sess_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
       col("value"))
     val Array(minTs, maxTs) = ev
@@ -262,39 +160,17 @@ object StreamGate {
     // sentinel: far enough that watermark = sentinel - horizon clears
     // every last-event + gap close; user -1 never closes and is dropped
     val sentinelTs = maxTs + (spanSec + 7200 + 1800) * 1000000L
-    ev.unionByName(s.range(1).select(lit(-1L).as("user_id"),
-        timestamp_micros(lit(sentinelTs)).as("ts"), lit(0.0).as("value")))
-      .repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(staging)
-    val stream = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType),
-        StructField("value", org.apache.spark.sql.types.DoubleType))))
-      .parquet(staging)
-    val sessions = StreamSessions.sessionize(s, stream, horizon)
-    withStateProvider(s) {
-      StreamSink.parquetSink(sessions, out)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+    BoundedStream.run(s, "stream_sessions_sink",
+        Seq(withSentinel(ev, -1L, "ts", sentinelTs))) { (in, _) =>
+      Rows(StreamSessions.sessionize(s, in.head, horizon))
+    } {
+      _.filter(col("user_id") >= 0)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("num_sessions"),
+          round((sum(unix_micros(col("end")) - unix_micros(col("start"))) /
+            1000000.0), 6).as("total_s"))
+        .orderBy("user_id")
     }
-    val res = s.read
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("start", TimestampType), StructField("end", TimestampType),
-        StructField("n_events", org.apache.spark.sql.types.IntegerType),
-        StructField("total_value", org.apache.spark.sql.types.DoubleType))))
-      .parquet(s"$out/batch=*")
-      .filter(col("user_id") >= 0)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("num_sessions"),
-        round((sum(unix_micros(col("end")) - unix_micros(col("start"))) /
-          1000000.0), 6).as("total_s"))
-      .orderBy("user_id")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
   }
 
   /** `stream_hll_sink` gate entry: the events table replayed as a
@@ -315,67 +191,44 @@ object StreamGate {
     * register table and the DuckDB oracle replays the whole pipeline
     * from the raw parquet. */
   def streamHllSink(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_hll_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
-    val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
-    val maxTs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    // sentinel 3 days past the last event: watermark reaches
-    // sentinel - 1s in the trailing batch, past every real day window
-    val sentinelTs = maxTs + 3L * 86400L * 1000000L
-    ev.unionByName(s.range(1).select(lit(-1L).as("user_id"),
-        timestamp_micros(lit(sentinelTs)).as("ts")))
-      .repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(staging)
-    val stream = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType))))
-      .parquet(staging)
-    val regs = stream
-      .withWatermark("ts", "1 second")
-      .withColumn("hx", md5(col("user_id").cast("string")))
-      .withColumn("h", graft.util.Md5Lower64.of("hx"))
-      .withColumn("bucket", graft.operators.Hll.bucket(col("h")))
-      .withColumn("rho", graft.operators.Hll.rho(col("h")))
-      .groupBy(window(col("ts"), "1 day").as("win"), col("bucket"))
-      .agg(max("rho").as("reg"))
-      .select(col("win.start").as("day"), col("bucket"), col("reg"))
-    withStateProvider(s) {
-      StreamSink.parquetSink(regs, out)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    }
-    val sunk = s.read
-      .schema(StructType(Seq(
-        StructField("day", TimestampType), StructField("bucket", LongType),
-        StructField("reg", org.apache.spark.sql.types.IntegerType))))
-      .parquet(s"$out/batch=*")
-      // defensive re-merge: append emits each finalized (day, bucket)
-      // once, but replayed batch dirs must stay idempotent
-      .groupBy("day", "bucket").agg(max("reg").as("reg"))
     val Hll = graft.operators.Hll
-    val state = sunk.groupBy("day")
-      .agg(count(lit(1)).as("n_nonempty"),
-        sum(expr(Hll.RegTermSql)).as("s_ne"))
-      .select(col("day"), (lit(Hll.M) - col("n_nonempty")).cast("long")
-        .as("v_empty"), col("s_ne"))
-    val exact = Tables.events(s, d)
-      .groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(count_distinct(col("user_id")).as("exact_distinct"))
-    val res = state.join(exact, "day")
-      .withColumn("hll_estimate",
-        Hll.estimate(col("v_empty"),
-          Hll.sScaled(col("v_empty"), col("s_ne"))))
-      .select(col("day"), col("v_empty"), col("exact_distinct"),
-        col("hll_estimate"),
-        round(lit(100.0) * (col("hll_estimate") - col("exact_distinct"))
-          / col("exact_distinct"), 2).as("rel_err_pct"))
-      .orderBy("day")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
+    val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
+    // watermark reaches sentinel - 1s in the trailing batch, past every
+    // real day window
+    val staged = withSentinel(ev, -1L, "ts", sentinelAfter(ev))
+    BoundedStream.run(s, "stream_hll_sink", Seq(staged)) { (in, _) =>
+      Rows(in.head
+        .withWatermark("ts", "1 second")
+        .withColumn("hx", md5(col("user_id").cast("string")))
+        .withColumn("h", graft.util.Md5Lower64.of("hx"))
+        .withColumn("bucket", Hll.bucket(col("h")))
+        .withColumn("rho", Hll.rho(col("h")))
+        .groupBy(window(col("ts"), "1 day").as("win"), col("bucket"))
+        .agg(max("rho").as("reg"))
+        .select(col("win.start").as("day"), col("bucket"), col("reg")))
+    } { sunk =>
+      val state = sunk
+        // defensive re-merge: append emits each finalized (day, bucket)
+        // once, but replayed batch dirs must stay idempotent
+        .groupBy("day", "bucket").agg(max("reg").as("reg"))
+        .groupBy("day")
+        .agg(count(lit(1)).as("n_nonempty"),
+          sum(expr(Hll.RegTermSql)).as("s_ne"))
+        .select(col("day"), (lit(Hll.M) - col("n_nonempty")).cast("long")
+          .as("v_empty"), col("s_ne"))
+      val exact = Tables.events(s, d)
+        .groupBy(date_trunc("day", col("ts")).as("day"))
+        .agg(count_distinct(col("user_id")).as("exact_distinct"))
+      state.join(exact, "day")
+        .withColumn("hll_estimate",
+          Hll.estimate(col("v_empty"),
+            Hll.sScaled(col("v_empty"), col("s_ne"))))
+        .select(col("day"), col("v_empty"), col("exact_distinct"),
+          col("hll_estimate"),
+          round(lit(100.0) * (col("hll_estimate") - col("exact_distinct"))
+            / col("exact_distinct"), 2).as("rel_err_pct"))
+        .orderBy("day")
+    }
   }
 
   /** `stream_countmin_sink` gate entry: per-day COUNT-MIN counters over
@@ -393,73 +246,49 @@ object StreamGate {
     * [[streamHllSink]]'s verbatim. */
   def streamCountMinSink(s: SparkSession, d: String): DataFrame = {
     val w = 1024
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_cm_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val ev = Tables.events(s, d).select(col("user_id"), col("ts"))
-    val maxTs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val sentinelTs = maxTs + 3L * 86400L * 1000000L
-    ev.unionByName(s.range(1).select(lit(-1L).as("user_id"),
-        timestamp_micros(lit(sentinelTs)).as("ts")))
-      .repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(staging)
-    val stream = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType))))
-      .parquet(staging)
+    val staged = withSentinel(ev, -1L, "ts", sentinelAfter(ev))
     // one definition of the (i, p) carve for BOTH the streaming build
     // and the batch probe below (the sketch_countmin drift argument)
     def positions = explode(array((0 until 4).map(i =>
       struct(lit(i).as("i"),
         pmod(expr(s"h div ${math.pow(w, i).toLong}"), lit(w)).as("p"))): _*))
-    val counters = stream
-      .withWatermark("ts", "1 second")
-      .withColumn("hx", md5(col("user_id").cast("string")))
-      .withColumn("h", graft.util.Md5Lower64.of("hx"))
-      .select(col("ts"), positions.as("rp"))
-      .groupBy(window(col("ts"), "1 day").as("win"),
-        col("rp.i").as("i"), col("rp.p").as("p"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("win.start").as("day"), col("i"), col("p"), col("c"))
-    withStateProvider(s) {
-      StreamSink.parquetSink(counters, out)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-    }
-    val sunk = s.read
-      .schema(StructType(Seq(
-        StructField("day", TimestampType),
-        StructField("i", org.apache.spark.sql.types.IntegerType),
-        StructField("p", LongType), StructField("c", LongType))))
-      .parquet(s"$out/batch=*")
+    BoundedStream.run(s, "stream_countmin_sink", Seq(staged)) { (in, _) =>
+      Rows(in.head
+        .withWatermark("ts", "1 second")
+        .withColumn("hx", md5(col("user_id").cast("string")))
+        .withColumn("h", graft.util.Md5Lower64.of("hx"))
+        .select(col("ts"), positions.as("rp"))
+        .groupBy(window(col("ts"), "1 day").as("win"),
+          col("rp.i").as("i"), col("rp.p").as("p"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("win.start").as("day"), col("i"), col("p"), col("c")))
+    } { sunk =>
       // each finalized (day, i, p) emits once; max keeps replayed batch
       // dirs idempotent (the streamHllSink convention)
-      .groupBy("day", "i", "p").agg(max("c").as("c"))
-    val exact = Tables.events(s, d)
-      .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
-      .agg(count(lit(1)).as("exact_cnt"))
-    val wTop = org.apache.spark.sql.expressions.Window.partitionBy("day")
-      .orderBy(col("exact_cnt").desc, col("user_id").asc)
-    val probes = exact
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= 5)
-      .withColumn("hx", md5(col("user_id").cast("string")))
-      .withColumn("h", graft.util.Md5Lower64.of("hx"))
-      .select(col("day"), col("user_id"), col("exact_cnt"), positions.as("rp"))
-      .select(col("day"), col("user_id"), col("exact_cnt"),
-        col("rp.i").as("i"), col("rp.p").as("p"))
-    val res = probes.join(sunk, Seq("day", "i", "p"))
-      .groupBy("day", "user_id", "exact_cnt")
-      .agg(min("c").as("cm_estimate"))
-      .select(col("day"), col("user_id"), col("exact_cnt"),
-        col("cm_estimate"),
-        (col("cm_estimate") - col("exact_cnt")).as("overcount"))
-      .orderBy("day", "user_id")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
+      val counters = sunk.groupBy("day", "i", "p").agg(max("c").as("c"))
+      val exact = Tables.events(s, d)
+        .groupBy(date_trunc("day", col("ts")).as("day"), col("user_id"))
+        .agg(count(lit(1)).as("exact_cnt"))
+      val wTop = org.apache.spark.sql.expressions.Window.partitionBy("day")
+        .orderBy(col("exact_cnt").desc, col("user_id").asc)
+      val probes = exact
+        .withColumn("rk", row_number().over(wTop))
+        .filter(col("rk") <= 5)
+        .withColumn("hx", md5(col("user_id").cast("string")))
+        .withColumn("h", graft.util.Md5Lower64.of("hx"))
+        .select(col("day"), col("user_id"), col("exact_cnt"),
+          positions.as("rp"))
+        .select(col("day"), col("user_id"), col("exact_cnt"),
+          col("rp.i").as("i"), col("rp.p").as("p"))
+      probes.join(counters, Seq("day", "i", "p"))
+        .groupBy("day", "user_id", "exact_cnt")
+        .agg(min("c").as("cm_estimate"))
+        .select(col("day"), col("user_id"), col("exact_cnt"),
+          col("cm_estimate"),
+          (col("cm_estimate") - col("exact_cnt")).as("overcount"))
+        .orderBy("day", "user_id")
+    }
   }
 
   /** `stream_join_sink` gate entry: the watermarked stream-stream
@@ -483,77 +312,33 @@ object StreamGate {
     * DISTINCT user ids (−1 events / −2 probes) so the rows that push
     * both watermarks past the data can never join each other. */
   def streamJoinSink(s: SparkSession, d: String): DataFrame = {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_join_").toString
-    val evDir = s"$tmp/ev"; val prDir = s"$tmp/pr"
-    val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
       col("value"), col("event_type"))
-    val maxTs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val sentinelTs = maxTs + 3L * 86400L * 1000000L
-    ev.select(col("user_id"), col("ts"), col("value"))
-      .unionByName(s.range(1).select(lit(-1L).as("user_id"),
-        timestamp_micros(lit(sentinelTs)).as("ts"), lit(0.0).as("value")))
-      .repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(evDir)
-    ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("pts"))
-      .unionByName(s.range(1).select(lit(-2L).as("user_id"),
-        timestamp_micros(lit(sentinelTs)).as("pts")))
-      .repartitionByRange(4, col("pts"))
-      .write.mode("overwrite").parquet(prDir)
-    val evStream = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType),
-        StructField("value", org.apache.spark.sql.types.DoubleType))))
-      .parquet(evDir)
-    val prStream = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("pts", TimestampType))))
-      .parquet(prDir)
-    val joined = StreamJoin.intervalJoin(evStream, prStream)
-    // same stateful-shuffle-partition pinning as streamNearDupSink: the
-    // count is fixed at first start and becomes the state-store count,
-    // and a stream-stream join commits FOUR state stores per partition
-    // per batch (left/right keyToNumValues + keyWithIndexToValue), so
-    // checkpoint I/O — not compute — dominated this row at 32 partitions
-    // (6.5 s in r9). 8 is still full parallelism for the bounded gate
-    // stream; output is partition-invariant (append-mode inner join).
-    val spKey = "spark.sql.shuffle.partitions"
-    val prevSp = s.conf.get(spKey)
-    s.conf.set(spKey, math.min(prevSp.toInt, 8).toString)
-    try {
-      withStateProvider(s) {
-        StreamSink.parquetSink(joined, out)
-          .option("checkpointLocation", ck)
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-      }
-    } finally s.conf.set(spKey, prevSp)
-    val res = s.read
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("pts", TimestampType),
-        StructField("ts", TimestampType),
-        StructField("value", org.apache.spark.sql.types.DoubleType))))
-      .parquet(s"$out/batch=*")
+    val sentinelTs = sentinelAfter(ev)
+    val events = withSentinel(
+      ev.select(col("user_id"), col("ts"), col("value")), -1L, "ts",
+      sentinelTs)
+    val probes = withSentinel(ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("pts")), -2L, "pts", sentinelTs)
+    BoundedStream.run(s, "stream_join_sink", Seq(events, probes),
+        Seq(statePartitions(s))) { (in, _) =>
+      Rows(StreamJoin.intervalJoin(in(0), in(1)))
+    } {
       // no defensive re-merge here: join rows carry no within-batch
       // finalization, and [[StreamSink.writeBatch]]'s batchId-keyed
       // overwrite already makes replays duplicate-free — a distinct()
       // would wrongly collapse genuinely identical match rows
-      .select(col("user_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_matches"), sum("cents").as("sum_cents"))
-      .orderBy("user_id")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
+      _.select(col("user_id"),
+          round(col("value") * 100).cast("long").as("cents"))
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_matches"), sum("cents").as("sum_cents"))
+        .orderBy("user_id")
+    }
   }
 
   /** `stream_ann_topk_sink` gate entry — CONTINUOUS ANN serving: the
-    * embeddings corpus replayed as a 4-file stream
-    * (maxFilesPerTrigger=1 → 4 real micro-batches of ingest); each
+    * embeddings corpus replayed as a 4-file stream (one file per
+    * trigger → 4 real micro-batches of ingest); each
     * micro-batch scores its ARRIVALS against the 10 fixed query
     * vectors (a broadcast 10-row frame) and sinks only the batch's
     * per-query top-5; the final read takes the global top-5 of the
@@ -573,62 +358,39 @@ object StreamGate {
     * data ([[graft.operators.Similarity.annGraphAppend]] is the
     * index-maintenance sibling for the approximate indexes). */
   def streamAnnTopkSink(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_ann_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
     val e0 = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    e0.repartitionByRange(4, col("vec_id"))
-      .write.mode("overwrite").parquet(staging)
     val q = e0
       .filter(col("vec_id").isin(graft.operators.Similarity.queryIds: _*))
       .withColumn("qn", sqrt(call_function("vec_dot", col("v"), col("v"))))
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("qn"))
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType))))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
     // per-batchId overwrite ([[StreamSink.writeBatch]]) — a replayed or
     // partially-committed batch rewrites its OWN dir instead of
     // appending duplicate winners that would evict true top-5 rows in
     // the final rank (r12 advice)
-    val sinkBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      StreamSink.writeBatch(out)(
-        batch
-          .withColumn("n",
-            sqrt(call_function("vec_dot", col("v"), col("v"))))
-          .join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .withColumn("cos",
-            call_function("vec_dot", col("v"), col("qv"))
-              / (col("n") * col("qn")))
-          .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-            .orderBy(round(col("cos"), 6).desc, col("vec_id").asc)))
-          .filter(col("rk") <= 5)
-          .select("query_id", "vec_id", "cos"), batchId)
-      ()
-    }
-    val q0 = stream.writeStream.foreachBatch(sinkBatch)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q0.awaitTermination()
-    // global top-5 of the sunk per-batch winners — the serving read.
-    // Materialized eagerly so the staging/checkpoint dirs can be
-    // deleted before returning (they were previously leaked).
-    val served = s.read.parquet(s"$out/batch=*")
-      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+    val batchTop5: DataFrame => DataFrame = _
+      .withColumn("n", sqrt(call_function("vec_dot", col("v"), col("v"))))
+      .join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .withColumn("cos",
+        call_function("vec_dot", col("v"), col("qv")) / (col("n") * col("qn")))
+      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
         .orderBy(round(col("cos"), 6).desc, col("vec_id").asc)))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("rank"),
-        col("vec_id").as("neighbor_id"), round(col("cos"), 5).as("cos"))
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    served
+      .filter(col("rk") <= 5)
+      .select("query_id", "vec_id", "cos")
+    BoundedStream.run(s, "stream_ann_topk_sink",
+        Seq(e0.repartitionByRange(4, col("vec_id"))),
+        oneFilePerBatch = true) { (in, _) =>
+      PerBatch(in.head, batchTop5)
+    } {
+      // global top-5 of the sunk per-batch winners — the serving read
+      _.withColumn("rank", row_number().over(Window.partitionBy("query_id")
+          .orderBy(round(col("cos"), 6).desc, col("vec_id").asc)))
+        .filter(col("rank") <= 5)
+        .select(col("query_id"), col("rank"),
+          col("vec_id").as("neighbor_id"), round(col("cos"), 5).as("cos"))
+        .orderBy("query_id", "rank")
+    }
   }
 
   /** `stream_graph_append_sink` gate entry — STREAMING index
@@ -656,46 +418,25 @@ object StreamGate {
     * serving path — row-multiset-preserving and dir-count-bounding,
     * pinned in StreamingSpec against this sink's own edge rows. */
   def streamGraphAppendSink(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val Sim = graft.operators.Similarity
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_gappend_").toString
-    val staging = s"$tmp/in"; val out = s"$tmp/out"; val ck = s"$tmp/ck"
-    val e0 = Tables.embeddings(s, d)
+    val arrivals = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("n", sqrt(call_function("vec_dot", col("v"), col("v"))))
-    e0.filter(pmod(col("vec_id"), lit(10)) === 7)
+      .filter(pmod(col("vec_id"), lit(10)) === 7)
       .repartitionByRange(4, col("vec_id"))
-      .write.mode("overwrite").parquet(staging)
-    // frozen index side, materialized once (load phase): micro-batches
-    // re-READ it — recomputing per batch would re-run the base count,
-    // bucketing and cap aggregate 4x
-    val (capped0, p) = Sim.appendFrozenIndex(s, d)
-    capped0.write.mode("overwrite").parquet(s"$tmp/capped")
-    val capped = s.read.parquet(s"$tmp/capped")
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType)),
-      StructField("n", org.apache.spark.sql.types.DoubleType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging)
-    val q0 = stream.writeStream.foreachBatch {
-        (batch: DataFrame, batchId: Long) =>
-          StreamSink.writeBatch(out)(
-            Sim.appendEdgesAgainst(capped, batch, p), batchId)
-          ()
-      }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q0.awaitTermination()
-    val res = s.read.parquet(s"$out/batch=*")
-      .select("query_id", "rank", "neighbor_id", "cos")
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    deleteRecursively(tmp)
-    res
+    BoundedStream.run(s, "stream_graph_append_sink", Seq(arrivals),
+        oneFilePerBatch = true) { (in, root) =>
+      // frozen index side, materialized once (load phase): micro-batches
+      // re-READ it — recomputing per batch would re-run the base count,
+      // bucketing and cap aggregate 4x
+      val (capped0, p) = Sim.appendFrozenIndex(s, d)
+      capped0.write.mode("overwrite").parquet(s"$root/capped")
+      val capped = s.read.parquet(s"$root/capped")
+      PerBatch(in.head, Sim.appendEdgesAgainst(capped, _, p))
+    } {
+      _.select("query_id", "rank", "neighbor_id", "cos")
+        .orderBy("query_id", "rank")
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

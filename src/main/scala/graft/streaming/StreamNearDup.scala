@@ -36,11 +36,10 @@ object StreamNearDup {
   val TtlMs: Long = 60 * 60 * 1000L
 
   /** LSH band rows for a (doc_id, ts, text) stream — same hash family
-    * as the batch minhashLsh (register GraftFunctions on the session
-    * first). */
+    * as the batch minhashLsh (`minhash_sig` comes with the session's
+    * registered SQL surface, [[graft.GraftSession]]). */
   def bandRows(spark: SparkSession, docs: DataFrame): Dataset[BandRow] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val numHashes = 32
     val rowsPerBand = 4
     docs

@@ -82,12 +82,13 @@ object StreamSink {
     if (base.exists)
       require(base.renameTo(oldBase), s"compact: cannot move aside $base")
     require(staging.renameTo(base), s"compact: cannot swap in $staging")
-    tails.foreach(t => deleteDir(t.toPath))
-    deleteDir(oldBase.toPath)
+    tails.foreach(t => deleteTree(t.toPath))
+    deleteTree(oldBase.toPath)
     tails.length
   }
 
-  private def deleteDir(p: java.nio.file.Path): Unit = {
+  /** Deletes `p` and everything under it, if it exists. */
+  private[streaming] def deleteTree(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     if (Files.exists(p)) {

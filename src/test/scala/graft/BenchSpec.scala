@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** The bench harness surface: the default row list, the `--only` subset,
-  * the `--explain` plan dump, and the per-stage rows of `bench.json`. */
+  * the `--explain` plan dump, and the per-stage and per-trigger rows of
+  * `bench.json`. */
 class BenchSpec extends SessionSuite {
 
   private val d = "/root/testdata/sf0.001"
@@ -124,7 +125,7 @@ class BenchSpec extends SessionSuite {
     assert(!spark.catalog.tableExists("Trips"))
     val metrics = new ObjectMapper().readTree(out.toFile).get("task_metrics")
     assert(metrics.fieldNames.asScala.toSet == only)
-    val fields = Set("id", "name", "tasks", "cpu_sec", "run_sec",
+    val fields = Set("id", "job", "sql_exec", "name", "tasks", "cpu_sec", "run_sec",
       "shuffle_read", "shuffle_write", "spill_disk", "spill_mem",
       "task_p50_ms", "task_p90_ms", "task_max_ms", "span_ms")
     for (row <- only) {
@@ -137,6 +138,52 @@ class BenchSpec extends SessionSuite {
       }
       assert(jobsOf(row).nonEmpty, row)
     }
+  }
+
+  /** `task_metrics` of one `--only` run of two stream rows. */
+  private lazy val streamMetrics = {
+    val out = tmp("bench").resolve("bench.json")
+    val rows = Bench.run(spark, d,
+      Some(Set("stream_sessions_sink", "stream_hll_sink")), None, out)
+    assert(rows.forall(r => r._2 >= 0 && r._3.isEmpty), rows)
+    new ObjectMapper().readTree(out.toFile).get("task_metrics")
+  }
+
+  private def triggersOf(row: String) =
+    streamMetrics.get(row).get("triggers").elements.asScala.toSeq
+
+  test("--only stream rows records per-trigger rows for each") {
+    val fields = Set("run_id", "batch", "duration_ms", "input_rows",
+      "state_rows", "state_mem_bytes", "rows_updated", "rocksdb_sst_bytes")
+    val phases = Set("triggerExecution", "addBatch", "walCommit",
+      "commitOffsets", "latestOffset", "queryPlanning")
+    for (row <- Seq("stream_sessions_sink", "stream_hll_sink")) {
+      val triggers = triggersOf(row)
+      assert(triggers.nonEmpty, row)
+      for (t <- triggers) assert(t.fieldNames.asScala.toSet == fields, t)
+      // the last pass's stream alone, batch by batch
+      assert(triggers.map(_.get("run_id").asText).distinct.size == 1, row)
+      assert(triggers.map(_.get("batch").asLong) ==
+        triggers.indices.map(_.toLong), row)
+      assert(triggers.exists(t =>
+        phases.subsetOf(t.get("duration_ms").fieldNames.asScala.toSet) &&
+          t.get("input_rows").asLong > 0 && t.get("state_rows").asLong > 0 &&
+          t.get("state_mem_bytes").asLong > 0 &&
+          t.get("rows_updated").asLong > 0 &&
+          t.get("rocksdb_sst_bytes").asLong >= 0), triggers)
+    }
+  }
+
+  test("a stream row's stages include its micro-batch jobs") {
+    val row = "stream_sessions_sink"
+    val stageJobs = streamMetrics.get(row).get("stages").elements.asScala
+      .map(_.get("job").asInt).toSet
+    val streamJobs = triggersOf(row).map(_.get("run_id").asText).distinct
+      .flatMap(spark.sparkContext.statusTracker.getJobIdsForGroup(_)).toSet
+    assert(streamJobs.nonEmpty)
+    assert((streamJobs & stageJobs).nonEmpty, (streamJobs, stageJobs))
+    // and the staging write and read-back under the row's own group
+    assert((jobsOf(row).toSet & stageJobs).nonEmpty, stageJobs)
   }
 
   test("--only rejects a name that is no bench row") {

@@ -1,7 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.streaming.StreamSessions
 
@@ -318,26 +323,37 @@ class StreamingSpec extends SessionSuite {
     // state, the hardest provider surface — under both and compare.
     val d = "/root/testdata/sf0.001"
     val SG = graft.streaming.StreamGate
-    def runWith(p: String): (Array[String], String) = {
+    // runs the entry and `check`s the per-trigger rows that the bench
+    // listener records for it, once the listener bus delivered them
+    def runWith(p: String)(check: Seq[JsonNode] => Unit): Array[String] = {
+      val metrics = new graft.util.BenchMetricsListener
+      spark.sparkContext.addSparkListener(metrics)
       SG.providerOverride = Some(p)
       try {
         val rows = SG.streamNearDupSink(spark, d)
           .collect().map(_.toString).sorted
-        (rows, SG.lastNearDupStateJson)
-      } finally SG.providerOverride = None
+        eventually(timeout(Span(10, Seconds))) {
+          check(new ObjectMapper().readTree(metrics.snapshotJson)
+            .path("stream_neardup_sink").path("triggers").elements.asScala
+            .toSeq)
+        }
+        rows
+      } finally {
+        SG.providerOverride = None
+        spark.sparkContext.removeSparkListener(metrics)
+      }
     }
-    val (rocksRows, rocksState) = runWith("rocksdb")
-    val (hdfsRows, hdfsState) = runWith("hdfs")
-    assert(rocksRows.length > 0)
-    assert(rocksRows.sameElements(hdfsRows),
-      s"rocksdb ${rocksRows.length} vs hdfs ${hdfsRows.length}")
     // the RocksDB-only custom metric proves the provider actually ran
     // (a conf echo alone wouldn't): some batch reports a nonnegative
     // sst size under rocksdb; every batch reports -1 under the in-heap
     // provider (the metric key doesn't exist there)
-    val sstRe = """(?s).*"rocksdb_sst_bytes":\d.*""" // nonneg digit, not -1
-    assert(rocksState.matches(sstRe), rocksState)
-    assert(!hdfsState.matches(sstRe), hdfsState)
+    def sst(t: JsonNode) = t.get("rocksdb_sst_bytes").asLong
+    val rocksRows = runWith("rocksdb")(t => assert(t.exists(sst(_) >= 0), t))
+    val hdfsRows =
+      runWith("hdfs")(t => assert(t.nonEmpty && t.forall(sst(_) < 0), t))
+    assert(rocksRows.length > 0)
+    assert(rocksRows.sameElements(hdfsRows),
+      s"rocksdb ${rocksRows.length} vs hdfs ${hdfsRows.length}")
   }
 
   test("stream_sessions_sink gate entry equals the batch sessionizer") {
