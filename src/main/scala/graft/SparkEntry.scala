@@ -7,7 +7,7 @@ import graft.operators.{Dedup, MobilityOps, Multimodal, Quality, Relational, Sim
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every operator claimed done in SURVEY.md §2 has a `queries` entry here
-  * and (where SQL-expressible) a DuckDB oracle in `oracleSql`. Column
+  * and (where SQL-expressible) a DuckDB oracle in `oracleSqlFor`. Column
   * names are aliased identically on both sides — the driver's compare
   * sorts columns by name before hashing values.
   */
@@ -131,16 +131,13 @@ object SparkEntry {
       ") t(query, n_rows, checksum) ORDER BY query"
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = oracleSqlFor(None)
-
-  /** [[oracleSql]] threaded with the dataset dir the dump is FOR —
-    * [[Verify]] passes its sfDir so the trained-artifact oracles
-    * (lang-ID weights, scaled-graph plane family) interpolate THAT
-    * dir's artifacts rather than whichever dir a query last ran
-    * against (the last-run-wins globals remain only as the no-arg
-    * fallback for ad-hoc use). */
-  def oracleSqlFor(dir: Option[String]): Map[String, String] = Map(
+    * the parquet tables of dataset `dir`; omitted for non-SQL-expressible
+    * ops. A pure function of `dir`: the trained-artifact oracles (IVF/PQ
+    * codebooks, graph plane counts, lang-ID and classifier weights, BPE
+    * merges, the simhash vocabulary) re-run the deterministic trainer
+    * their query calls, so the map never depends on which queries this
+    * process ran before. */
+  def oracleSqlFor(spark: SparkSession, dir: String): Map[String, String] = Map(
     "berlinmod_e2e" -> e2eOracleSql,
     "rel_q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
@@ -394,20 +391,19 @@ object SparkEntry {
            AS w(win_id, lo, hi)
            ON e.ts >= w.lo AND e.ts < w.hi
          GROUP BY win_id ORDER BY win_id""",
-  ) ++ MobilityOps.oracles ++ Dedup.oracles ++ Similarity.oraclesFor(dir) ++
-    TextAnalysis.oracles ++ Multimodal.oracles ++
-    graft.operators.Retrieval.oraclesFor(dir) ++
-    Quality.oracles ++ Sketches.oracles ++
-    graft.operators.Multilingual.oraclesFor(dir) ++
+  ) ++ MobilityOps.oracles ++ Dedup.oracles(spark, dir) ++
+    Similarity.oracles(spark, dir) ++
+    TextAnalysis.oracles(spark, dir) ++ Multimodal.oracles ++
+    graft.operators.Retrieval.oracles(spark, dir) ++
+    Quality.oracles(spark, dir) ++ Sketches.oracles ++
+    graft.operators.Multilingual.oracles(spark, dir) ++
     graft.sources.RoundTrip.oracles ++
     graft.sources.TarShards.oracles ++
     // the streaming gate entries provably equal their batch operators
     // (see StreamGate scaladoc) -- same oracle texts
-    Dedup.oracles.get("dedup_minhash_lsh")
-      .map("stream_neardup_sink" -> _).toMap ++
-    MobilityOps.oracles.get("mob_q4_sessions")
-      .map("stream_sessions_sink" -> _).toMap ++
+    Map("stream_neardup_sink" -> Dedup.staticOracles("dedup_minhash_lsh"),
+      "stream_sessions_sink" -> MobilityOps.oracles("mob_q4_sessions")) ++
     // per-day register pipeline replayed from raw events (own SQL),
-    // plus the streaming graph append's dir-keyed shared oracle
-    graft.streaming.StreamGate.oraclesFor(dir)
+    // plus the streaming graph append's shared oracle
+    graft.streaming.StreamGate.oracles(spark, dir)
 }

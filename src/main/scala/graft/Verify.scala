@@ -73,9 +73,9 @@ object Verify {
       spark.catalog.clearCache()
       r
     }
-    // thread the dir being dumped: trained-artifact oracles (lang-ID,
-    // scaled-graph plane family) must interpolate THIS dir's artifacts
-    val json = SparkEntry.oracleSqlFor(Some(sfDir))
+    // the oracles of sfDir, whichever entries ran (a pure function of
+    // the dataset: a filtered run dumps the full map)
+    val json = SparkEntry.oracleSqlFor(spark, sfDir)
       .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Per-query run manifest: fixed file AND one bare stdout JSON line —

@@ -1047,36 +1047,37 @@ object Dedup {
 
   // ---- SimHash ----
 
-  /** Per-token kernel hashes captured by the last [[simhash]] run. For a
-    * single word (no spaces), simhash64's bit-vote IS the word hash —
-    * counts(b) = +1 iff bit b of h is set, so the output equals h — which
-    * lets the Spark-computed token->hash table be interpolated into the
-    * DuckDB oracle as a VALUES literal (the same trick as the LSH planes
-    * and IVF codebook). DuckDB then replays bit-votes, banding, and
-    * hamming exactly, turning the kernel query into a full hash check.
-    * Capped: a vocabulary larger than the cap skips the oracle (falls
-    * back to rows-only) rather than interpolating megabytes of SQL. */
-  @volatile private var simhashTokenHashes: Option[Array[(String, Long)]] = None
-  private val SimhashOracleVocabCap = 20000
-
-  /** 64-bit SimHash over word hashes; near dups = hamming distance <= 8
-    * among 16-bit-band candidates. Exact-hash-checked: the deterministic
-    * token->hash table is interpolated into the oracle (see
-    * [[simhashTokenHashes]]). simhash64 is a native codegen kernel
-    * (VectorExprs); the hamming distance is the builtin bit_count over
-    * xor — no ScalaUDF anywhere. */
-  def simhash(s: SparkSession, d: String): DataFrame = {
+  /** The corpus vocabulary's kernel hashes, sorted by token, for the
+    * [[simhash]] oracle. For a single word (no spaces), simhash64's
+    * bit-vote IS the word hash — counts(b) = +1 iff bit b of h is set, so
+    * the output equals h — which lets the token->hash table be
+    * interpolated into the DuckDB oracle as a VALUES literal (the same
+    * trick as the LSH planes and IVF codebook). DuckDB then replays
+    * bit-votes, banding, and hamming exactly, turning the kernel query
+    * into a full hash check. Vocabulary-bounded collect (tens of KB on
+    * any natural-language corpus at the cap); None past the cap, where
+    * the entry stays rows-only rather than interpolating megabytes of
+    * SQL. */
+  private def simhashVocab(s: SparkSession, d: String): Option[Array[(String, Long)]] = {
     reg(s)
-    // vocabulary-bounded collect (tens of KB on any natural-language
-    // corpus at the cap) — oracle support only, not part of the operator
     val vocab = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("tok")).distinct()
       .limit(SimhashOracleVocabCap + 1)
       .select(col("tok"), call_function("simhash64", col("tok")).as("h"))
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    simhashTokenHashes =
-      if (vocab.length > SimhashOracleVocabCap) None
-      else Some(vocab.sortBy(_._1))
+    if (vocab.length > SimhashOracleVocabCap) None
+    else Some(vocab.sortBy(_._1))
+  }
+  private val SimhashOracleVocabCap = 20000
+
+  /** 64-bit SimHash over word hashes; near dups = hamming distance <= 8
+    * among 16-bit-band candidates. Exact-hash-checked: the deterministic
+    * token->hash table is interpolated into the oracle (see
+    * [[simhashVocab]]). simhash64 is a native codegen kernel
+    * (VectorExprs); the hamming distance is the builtin bit_count over
+    * xor — no ScalaUDF anywhere. */
+  def simhash(s: SparkSession, d: String): DataFrame = {
+    reg(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), call_function("simhash64", col("text")).as("sh64"))
     val banded = docs.select(col("doc_id"), col("sh64"),
@@ -1427,18 +1428,18 @@ object Dedup {
     "dedup_keep_best" -> (keepBest _),
     "dedup_paragraph_rewrite" -> (paragraphRewrite _))
 
-  /** Static entries plus the dynamic simhash-kernel oracle (available
-    * once [[simhash]] has run and stashed its token-hash table — Verify
-    * runs every query before dumping oracle_sql.json). */
-  def oracles: Map[String, String] = staticOracles ++ simhashKernelOracle
+  /** Oracles of dataset `d`: the static entries plus the simhash-kernel
+    * oracle over `d`'s vocabulary. */
+  def oracles(s: SparkSession, d: String): Map[String, String] =
+    staticOracles ++ simhashKernelOracle(s, d)
 
   /** Mirror of the [[simhash]] kernel with the Spark-computed token
     * hashes as a VALUES literal: occurrence-weighted bit votes (the
     * kernel votes per word occurrence, unlike simhashRel's distinct),
     * 4x16-bit banding with NO bucket cap (the kernel has none), hamming
     * <= 8 on the full 64 bits via the 4 band xors. */
-  private def simhashKernelOracle: Map[String, String] =
-    simhashTokenHashes.map { th =>
+  private def simhashKernelOracle(s: SparkSession, d: String): Map[String, String] =
+    simhashVocab(s, d).map { th =>
       val values = th.map { case (t, h) =>
         s"('${t.replace("'", "''")}', CAST($h AS BIGINT))"
       }.mkString(",\n             ")
@@ -1517,7 +1518,7 @@ object Dedup {
          lab AS (SELECT a AS doc_id, least(a, min(b)) AS rep
                  FROM reach GROUP BY a)"""
 
-  private val staticOracles: Map[String, String] = Map(
+  private[graft] val staticOracles: Map[String, String] = Map(
     "corpus_diff" ->
       """WITH mx AS (SELECT max(doc_id) AS max_id FROM documents),
          a AS (SELECT doc_id, lang, length(text) AS len, md5(text) AS h

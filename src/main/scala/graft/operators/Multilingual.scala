@@ -233,16 +233,6 @@ object Multilingual {
     wMicros: Array[Array[Long]], // per lang: B bucket weights, 1e-6 units
     bMicros: Array[Long])        // per lang: intercept, 1e-6 units
 
-  private val trainedLang =
-    new java.util.concurrent.ConcurrentHashMap[String, LangModel]()
-
-  /** Dir of the most recent [[langIdModel]] run — the dir whose model
-    * [[oracles]] must interpolate. Verify runs every query against ONE
-    * sfDir before dumping oracles, so "last trained" IS "the dir being
-    * dumped"; tracking it explicitly (instead of `values().findFirst()`)
-    * keeps the dump correct even when a test session trains two dirs. */
-  @volatile private var lastLangDir: String = null
-
   /** The bounded training sample's id set: the [[TrainSampleN]] lowest
     * xxhash64(doc_id) docs. ONE definition shared by [[fitLangModel]]
     * (trains on exactly these docs) and [[langIdConfusion]]'s held-out
@@ -338,12 +328,6 @@ object Multilingual {
     LangModel(langs.toArray, wM, bM)
   }
 
-  private[graft] def langModel(s: SparkSession, d: String): LangModel = {
-    val m = trainedLang.computeIfAbsent(d, _ => fitLangModel(s, d))
-    lastLangDir = d
-    m
-  }
-
   /** `text_lang_id_model` gate entry: score every document with the
     * fitted hash-gram logistic model and emit the (pred, lang)
     * confusion matrix. The argmax is taken on the INTEGER linear term
@@ -369,7 +353,7 @@ object Multilingual {
     * away. */
   private[graft] def langIdConfusion(s: SparkSession, d: String,
                                      heldOutOnly: Boolean): DataFrame = {
-    val mod = langModel(s, d)
+    val mod = fitLangModel(s, d)
     import s.implicits._
     val wDf = broadcast(
       mod.langs.zipWithIndex.flatMap { case (l, li) =>
@@ -455,19 +439,9 @@ object Multilingual {
     "text_multilingual" -> (multilingualDedup _),
     "text_lang_id_model" -> (langIdModel _))
 
-  /** `def`, not `val`: the model oracle interpolates the weights learned
-    * by the session's [[langIdModel]] run against the dir it ran on (the
-    * driver always runs queries before dumping oracles — the IVF-codebook
-    * convention, which also OMITS the entry when untrained rather than
-    * dumping a degenerate model). */
-  def oracles: Map[String, String] = oraclesFor(None)
-
-  /** Threaded form: the model oracle interpolates the weights trained
-    * against the dir being DUMPED (not whichever dir last ran — see
-    * [[SparkEntry.oracleSqlFor]]); no-arg falls back to last-run. */
-  def oraclesFor(dumpDir: Option[String]): Map[String, String] = Map(
-    "text_multilingual" -> multilingualOracle) ++
-    dumpDir.orElse(Option(lastLangDir))
-      .flatMap(d => Option(trainedLang.get(d)))
-      .map(m => "text_lang_id_model" -> langIdModelOracle(m)).toMap
+  /** Oracles of dataset `d`: the model oracle interpolates the weights
+    * [[fitLangModel]] fits on `d`, the fit its query scores with. */
+  def oracles(s: SparkSession, d: String): Map[String, String] = Map(
+    "text_multilingual" -> multilingualOracle,
+    "text_lang_id_model" -> langIdModelOracle(fitLangModel(s, d)))
 }

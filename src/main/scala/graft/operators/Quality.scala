@@ -236,8 +236,9 @@ object Quality {
     * missing term contributes coalesce(null, 0.0) and c + 0.0 == c for
     * every contribution (contribs are products of non-negatives, so
     * -0.0 never arises); the row set is unchanged (a (query, doc) row
-    * exists iff the doc matched ≥ 1 of the query's terms). Queries
-    * with ≠ 2 terms take the r13 fan-out path unchanged.
+    * exists iff the doc matched ≥ 1 of the query's terms). Batches with
+    * a query of ≠ 2 terms take the r13 fan-out form, the reference
+    * [[bm25BatchCandidates]] is checked against at any term count.
     *
     * KEPT as the equivalence-test twin of [[bm25BatchCandidates]] (the
     * fused partition kernel the batch path runs since r14). */
@@ -250,7 +251,11 @@ object Quality {
       val qterms = queries
         .flatMap { case (q, ts) => ts.map(t => (q, t)) }
         .toDF("query_id", "term")
-      return bm25ScoreBatchFanout(tfdl, qterms, stats)
+      return bm25Contrib(tfdl, stats)
+        .join(broadcast(qterms), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(round(sum(col("contrib")), 4).as("r4"))
+        .select("query_id", "doc_id", "r4")
     }
     val terms = queries.flatMap(_._2).distinct.sorted
     val ti = terms.zipWithIndex.toMap
@@ -285,37 +290,34 @@ object Quality {
     * doc-clustered (repartition(doc_id) + sortWithinPartitions — the
     * same hash exchange the slot aggregate did), folds each doc's
     * contributions into the |terms| slot array (unique per (doc, term),
-    * so slot assignment IS the max-when fold), scores each query by the
-    * same two lookups + `round(c1 + c2, 4)` (fastRound — the engine's
-    * own round), keeps a (query, doc) row iff ≥ 1 of the query's terms
-    * matched (the crossJoin filter verbatim), and holds per-query
-    * top-k through the SAME [[graft.functions.TopKOrderedAgg.insert]]
-    * comparator the final aggregate uses with the final's own key
+    * so slot assignment IS the max-when fold), scores each query by
+    * `round(sum of its slots, 4)` (fastRound — the engine's own round),
+    * summed from 0.0 in ascending slot order and a repeated term once
+    * per occurrence, as the fan-out join counts it (for two terms that
+    * is the slot aggregate's `c1 + c2` bit for bit: 0.0 + c == c for
+    * the non-negative contributions), keeps a (query, doc) row iff ≥ 1
+    * of the query's terms matched (the crossJoin filter verbatim), and
+    * holds per-query top-k through the SAME
+    * [[graft.functions.TopKOrderedAgg.insert]] comparator the final
+    * aggregate uses with the final's own key
     * (−round(r4, 6) == −r4: a 4-dp value re-rounds to itself). Every
     * global top-k member therefore survives its partition, and the
     * downstream rank tail is row-identical to ranking the full scored
-    * frame ([[bm25ScoreBatch]] stays as the equivalence-test twin).
-    * ≠2-term batches fall back to the full fan-out frame unchanged. */
+    * frame ([[bm25ScoreBatch]] stays as the equivalence-test twin). Any
+    * number of terms per query takes this path. */
   private[operators] def bm25BatchCandidates(tfdl: DataFrame,
                                              queries: Seq[(Long, Seq[String])],
                                              stats: DataFrame,
                                              k: Int): DataFrame = {
     val sess = tfdl.sparkSession
     import sess.implicits._
-    if (queries.exists(_._2.distinct.size != 2)) {
-      val qterms = queries
-        .flatMap { case (q, ts) => ts.map(t => (q, t)) }
-        .toDF("query_id", "term")
-      return bm25ScoreBatchFanout(tfdl, qterms, stats)
-        .select(col("query_id"), col("doc_id"), col("r4"))
-    }
     val terms = queries.flatMap(_._2).distinct.sorted
     val ti = terms.zipWithIndex.toMap
     val nT = terms.size
     val tiDf = terms.zipWithIndex.toDF("term", "ti")
-    val qIdx: Array[(Long, Int, Int)] = queries.map { case (q, ts) =>
-      val is = ts.map(ti).sorted; (q, is(0), is(1))
-    }.toArray
+    val qIds: Array[Long] = queries.map(_._1).toArray
+    val qSlots: Array[Array[Int]] =
+      queries.map { case (_, ts) => ts.map(ti).sorted.toArray }.toArray
     val pow4 = math.pow(10.0, 4)
     bm25Contrib(tfdl, stats)
       .join(broadcast(tiDf), "term")
@@ -325,7 +327,7 @@ object Quality {
       .toDF("_1", "_2", "_3")
       .as[(Long, Int, Double)]
       .mapPartitions { it =>
-        val bufs = Array.fill(qIdx.length)(Array.emptyDoubleArray)
+        val bufs = Array.fill(qIds.length)(Array.emptyDoubleArray)
         val slots = new Array[Double](nT)
         val has = new Array[Boolean](nT)
         val touched = new Array[Int](nT)
@@ -334,12 +336,17 @@ object Quality {
         var open = false
         def closeDoc(): Unit = {
           var qi = 0
-          while (qi < qIdx.length) {
-            val (_, i1, i2) = qIdx(qi)
-            if (has(i1) || has(i2)) {
-              val r4 = graft.functions.VectorKernels.fastRound(
-                (if (has(i1)) slots(i1) else 0.0) +
-                  (if (has(i2)) slots(i2) else 0.0), pow4, 4)
+          while (qi < qSlots.length) {
+            val is = qSlots(qi)
+            var hit = false
+            var sum = 0.0
+            var j = 0
+            while (j < is.length) {
+              if (has(is(j))) { hit = true; sum += slots(is(j)) }
+              j += 1
+            }
+            if (hit) {
+              val r4 = graft.functions.VectorKernels.fastRound(sum, pow4, 4)
               bufs(qi) = graft.functions.TopKOrderedAgg.insert(
                 bufs(qi), k, -r4, curDoc.toDouble, r4)
             }
@@ -361,21 +368,11 @@ object Quality {
         if (open) closeDoc()
         bufs.iterator.zipWithIndex.flatMap { case (buf, qi) =>
           (0 until buf.length / 3).iterator.map(t =>
-            (qIdx(qi)._1, buf(3 * t + 1).toLong, buf(3 * t + 2)))
+            (qIds(qi), buf(3 * t + 1).toLong, buf(3 * t + 2)))
         }
       }
       .toDF("query_id", "doc_id", "r4")
   }
-
-  /** The r13 fan-out form — kept as the ≠2-term fallback of
-    * [[bm25ScoreBatch]]. */
-  private def bm25ScoreBatchFanout(tfdl: DataFrame, qterms: DataFrame,
-                                   stats: DataFrame): DataFrame =
-    bm25Contrib(tfdl, stats)
-      .join(broadcast(qterms), "term")
-      .groupBy("query_id", "doc_id")
-      .agg(round(sum(col("contrib")), 4).as("r4"))
-      .select("query_id", "doc_id", "r4")
 
   /** GPT-style sequence packing: documents are concatenated in
     * deterministic (doc_id) order and chunked into 2048-token training
@@ -402,17 +399,6 @@ object Quality {
         max("doc_id").as("last_doc"))
       .orderBy("lang", "pack_id")
   }
-
-  /** Default classifier weights (intercept, n_words, mean_wlen,
-    * stop_ratio, punct_ratio) — only used if [[qualityClassifier]] has
-    * not trained on the session's data yet (the driver always runs the
-    * query before dumping oracles, so the gate always sees the fitted
-    * weights). */
-  private val defaultW =
-    Array(-2.0, 0.01, 0.2, 5.0, -8.0)
-
-  private val trainedClassifier =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
 
   /** Deterministic in-repo logistic fit (distillation): labels are the
     * [[qualityFilters]] Gopher keep verdicts, features the four scan
@@ -496,11 +482,6 @@ object Quality {
     raw
   }
 
-  /** Learned weights for the oracle interpolation (trained by the last
-    * [[qualityClassifier]] call; default literals before that). */
-  private[graft] def classifierWeights: Array[Double] =
-    Option(trainedClassifier.get("w")).getOrElse(defaultW)
-
   /** Model-based quality filter (the CCNet/Gopher "trained classifier"
     * stage; Wenzek et al. 2020 §4.4 score with a fasttext-like linear
     * model): a logistic score over the scan-computed signals with
@@ -516,9 +497,13 @@ object Quality {
     * score > 0.5), never on the sigmoid output, so the only
     * transcendental (exp) touches reporting columns already quantized
     * — exact oracle. */
-  def qualityClassifier(s: SparkSession, d: String): DataFrame = {
-    val wts = trainedClassifier.computeIfAbsent("w",
-      _ => fitClassifier(s, d))
+  def qualityClassifier(s: SparkSession, d: String): DataFrame =
+    qualityClassifierWith(s, d, fitClassifier(s, d))
+
+  /** [[qualityClassifier]] under the given weights (intercept, n_words,
+    * mean_wlen, stop_ratio, punct_ratio). */
+  private[graft] def qualityClassifierWith(s: SparkSession, d: String,
+                                           wts: Array[Double]): DataFrame = {
     val base = Tables.documents(s, d).select(col("lang"), col("source"),
       size(toks).as("n_words"),
       round(charSum.cast("double") / size(toks), 4).as("mean_wlen"),
@@ -562,13 +547,15 @@ object Quality {
     "text_regex_scrub" -> (regexScrub _),
     "text_bm25" -> (bm25 _))
 
-  /** `def`, not `val`: the classifier oracle interpolates the weights
-    * LEARNED by the session's [[qualityClassifier]] run (the driver
-    * always runs queries before dumping oracles — the IVF-codebook
-    * convention). */
-  def oracles: Map[String, String] = Map(
-    "text_quality_classifier" -> {
-      val w = classifierWeights
+  /** Oracles of dataset `d`: the classifier oracle interpolates the
+    * weights [[fitClassifier]] fits on `d`, the fit its query scores
+    * with. */
+  def oracles(s: SparkSession, d: String): Map[String, String] =
+    oraclesWith(fitClassifier(s, d))
+
+  /** The oracle map, its classifier entry under weights `w`. */
+  private def oraclesWith(w: Array[Double]): Map[String, String] = Map(
+    "text_quality_classifier" ->
       s"""WITH sig AS (
            SELECT lang, source, len(toks) AS n_words,
              round(CAST(list_sum(list_transform(toks, x -> length(x)))
@@ -601,8 +588,7 @@ object Quality {
            round(CAST(n_keep AS DOUBLE) / n_docs, 4) AS keep_rate,
            CAST((2 * s4 + n_docs) // (2 * n_docs) AS DOUBLE) / 10000.0
              AS avg_score
-         FROM g ORDER BY 1, 2"""
-    },
+         FROM g ORDER BY 1, 2""",
     "text_pack_sequences" ->
       """WITH t AS (
            SELECT lang, doc_id, len(string_split(text, ' ')) AS n_tokens

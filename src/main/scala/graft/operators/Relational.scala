@@ -12,7 +12,7 @@ import graft.util.Tables
   * comes from Catalyst. Each query here exercises one operator family
   * observed in the reference's BerlinMOD workload
   * (`benchmark/BerlinMOD/sql/queries/`, explain outputs) and has an
-  * exact DuckDB oracle in [[graft.SparkEntry.oracleSql]].
+  * exact DuckDB oracle in [[graft.SparkEntry.oracleSqlFor]].
   *
   * Scale notes (100 TB design):
   *  - dimension joins (region/nation/customer) are explicitly

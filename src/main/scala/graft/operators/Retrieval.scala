@@ -293,7 +293,7 @@ object Retrieval {
     * Output: per-query fused top-[[FusedK]] as (query_id, doc_id,
     * lex_rank, vec_rank, rrf, fused_rank). Exact oracle: the batch is a
     * VALUES literal, BM25/PRF/cell-probing/fusion replayed per query in
-    * DuckDB with the stashed codebook (the IVF convention). */
+    * DuckDB with the layout's codebook ([[Similarity.ivfCodebook]]). */
   /** The batch's pruned posting fetch — the UNION of the 24 terms'
     * bucket hashes as the scan's static `tb IN (...)` partition-pruning
     * literal (≤ |terms| of 64 dirs read once, shared by all queries).
@@ -322,9 +322,8 @@ object Retrieval {
   /** The two index-served BATCH legs as (query_id, doc_id, *_rank)
     * rank frames — ONE copy shared by [[hybridRrfBatch]] and
     * [[retrievalNdcgBatch]] (and the |queries|-scaling probe via
-    * [[hybridRrfBatchN]]). `gateKey` routes the IVF codebook stash so
-    * each gate entry's oracle interpolates its own trained artifact. */
-  private[graft] def batchLegs(s: SparkSession, d: String, gateKey: String,
+    * [[hybridRrfBatchN]]). */
+  private[graft] def batchLegs(s: SparkSession, d: String,
                                queries: Seq[(Long, Seq[String])])
       : (DataFrame, DataFrame) = {
     import s.implicits._
@@ -364,7 +363,7 @@ object Retrieval {
     // per-pair operator machinery — see ivfBatchCandidates); the final
     // rank tail over the ≤ partitions·|Q|·K candidates is unchanged
     val vecB = Similarity.topKPerQuery(
-      Similarity.ivfBatchCandidates(s, d, qvs, gateKey, LegK)
+      Similarity.ivfBatchCandidates(s, d, qvs, LegK)
         .select(col("query_id"), col("doc_id").as("vec_id"),
           col("r6").as("cos")), LegK)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
@@ -373,7 +372,7 @@ object Retrieval {
   }
 
   def hybridRrfBatch(s: SparkSession, d: String): DataFrame =
-    hybridRrfBatchN(s, d, "hybrid_rrf_batch", BatchQueries)
+    hybridRrfBatchN(s, d, BatchQueries)
 
   /** `hybrid_rrf_batch100` gate entry — the batch stack at 100
     * GENERATED queries (r13 verdict #7: no 12-query driver literal in
@@ -384,17 +383,16 @@ object Retrieval {
     * (each of the 24 terms serves ~8 of the 100 queries) with the
     * fusion stage flat at 2·K·|queries| rows. */
   def hybridRrfBatch100(s: SparkSession, d: String): DataFrame =
-    hybridRrfBatchN(s, d, "hybrid_rrf_batch100", batchQueriesN(100))
+    hybridRrfBatchN(s, d, batchQueriesN(100))
 
   /** [[hybridRrfBatch]] over an arbitrary query batch — the
     * |queries|-scaling surface the probe exercises at 100 queries
     * ([[batchQueriesN]]); the gate entry is the 12-query literal. */
   private[graft] def hybridRrfBatchN(s: SparkSession, d: String,
-                                     gateKey: String,
                                      queries: Seq[(Long, Seq[String])])
       : DataFrame = {
     reg(s)
-    val (lexB, vecB) = batchLegs(s, d, gateKey, queries)
+    val (lexB, vecB) = batchLegs(s, d, queries)
     // (query_id, doc_id)-keyed RRF fusion over ≤ 2·K rows per query;
     // the per-query fused rank window partitions ≤ 40-row groups
     lexB.join(vecB, Seq("query_id", "doc_id"), "full_outer")
@@ -669,7 +667,7 @@ object Retrieval {
     * twin of the serving legs' index-pruned scans). */
   def retrievalNdcgBatch(s: SparkSession, d: String): DataFrame = {
     reg(s)
-    val (lexB, vecB) = batchLegs(s, d, "retrieval_ndcg_batch", BatchQueries)
+    val (lexB, vecB) = batchLegs(s, d, BatchQueries)
     val fused = lexB.join(vecB, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf", round(
         coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
@@ -1099,7 +1097,7 @@ object Retrieval {
   }
 
   /** DuckDB replay of [[retrievalNdcgBatch]]: the shared batch-leg CTE
-    * chain (codebook interpolated under the entry's OWN stash key),
+    * chain (the layout's codebook interpolated),
     * per-query fused ranks, per-query grade standards (exact cosine to
     * each query's lexical top-1 embedding), nDCG per (query, leg), and
     * the query_id = −1 per-leg means. */
@@ -1159,25 +1157,18 @@ object Retrieval {
      ORDER BY query_id, leg"""
   }
 
-  def oracles: Map[String, String] = oraclesFor(None)
-
-  /** Oracles with the dataset dir being dumped threaded through (the
-    * [[Similarity.oraclesFor]] convention) so the IVF-leg codebook is
-    * THAT dir's, not whichever dir last ran. */
-  def oraclesFor(dumpDir: Option[String]): Map[String, String] = Map(
-    "hybrid_rrf" -> hybridOracle,
-    "retrieval_mmr" -> mmrOracle,
-    "retrieval_mmr_batch" -> mmrBatchOracle,
-    "retrieval_ndcg" -> ndcgOracle) ++
-    Similarity.codebookFor("retrieval_ndcg_batch", dumpDir)
-      .map(c => "retrieval_ndcg_batch" -> ndcgBatchOracle(c)).toMap ++
-    // IVF-leg hybrid: codebook interpolated when the query has run
-    // (the IVF-codebook convention — omitted otherwise, rows-only)
-    Similarity.codebookFor("hybrid_rrf_ivf", dumpDir)
-      .map(c => "hybrid_rrf_ivf" -> hybridIvfOracle(c)).toMap ++
-    Similarity.codebookFor("hybrid_rrf_batch", dumpDir)
-      .map(c => "hybrid_rrf_batch" -> batchOracle(c)).toMap ++
-    Similarity.codebookFor("hybrid_rrf_batch100", dumpDir)
-      .map(c =>
-        "hybrid_rrf_batch100" -> batchOracle(c, batchQueriesN(100))).toMap
+  /** Oracles of dataset `d`; the IVF-leg entries interpolate the
+    * codebook their layout serves from ([[Similarity.ivfCodebook]]). */
+  def oracles(s: SparkSession, d: String): Map[String, String] = {
+    val ivf = Similarity.ivfCodebook(s, d)
+    Map(
+      "hybrid_rrf" -> hybridOracle,
+      "retrieval_mmr" -> mmrOracle,
+      "retrieval_mmr_batch" -> mmrBatchOracle,
+      "retrieval_ndcg" -> ndcgOracle,
+      "retrieval_ndcg_batch" -> ndcgBatchOracle(ivf),
+      "hybrid_rrf_ivf" -> hybridIvfOracle(ivf),
+      "hybrid_rrf_batch" -> batchOracle(ivf),
+      "hybrid_rrf_batch100" -> batchOracle(ivf, batchQueriesN(100)))
+  }
 }

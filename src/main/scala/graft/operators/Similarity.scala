@@ -186,53 +186,6 @@ object Similarity extends SimilarityIvf with SimilarityQuant
     rankedTopK(scored, 5)
   }
 
-  /** Codebooks stashed PER QUERY KEY ("ann_ivf" = freshly trained,
-    * "ann_ivf_bucketed" = loaded from the on-disk layout). The codebook
-    * is a deterministic function of the dataset, so once a query has
-    * produced it, [[oracles]] can interpolate it into the DuckDB oracle
-    * SQL (as the LSH planes are) and the oracle replays cell
-    * assignment, nprobe probing, and scoring independently — turning
-    * the approximate IVF queries into exact hash checks. Keyed rather
-    * than last-writer-wins so a stale on-disk layout can never leak one
-    * query's codebook into the OTHER query's oracle. Verify runs every
-    * query before dumping oracle_sql.json, so the stash is always
-    * populated there; if no IVF query ran, the IVF oracle entries are
-    * simply omitted (rows-only, as before). */
-  private val trainedCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  /** Trained artifacts are keyed by (query, dataset dir) — the r12
-    * generalization of the r11 lang-ID/plane-family fix: a session that
-    * runs a codebook query against TWO dirs must not dump dir A's
-    * oracle with dir B's codebook. [[Verify]] always threads the dir it
-    * dumps for; `lastStashDir` is only the no-arg ad-hoc fallback. */
-  @volatile private var lastStashDir: String = null
-
-  private[operators] def stashKey(name: String, d: String): String =
-    name + "@" + new java.io.File(d).getCanonicalPath
-
-  private[operators] def stashCodebook(name: String, d: String,
-                            c: Array[Array[Double]]): Unit = {
-    trainedCodebooks.put(stashKey(name, d), c)
-    lastStashDir = d
-  }
-
-  private[operators] def codebookFor(name: String, dumpDir: Option[String])
-      : Option[Array[Array[Double]]] =
-    dumpDir.orElse(Option(lastStashDir))
-      .flatMap(d => Option(trainedCodebooks.get(stashKey(name, d))))
-
-  private[operators] def stashPq(name: String, d: String,
-                      c: Array[Array[Array[Double]]]): Unit = {
-    trainedPq.put(stashKey(name, d), c)
-    lastStashDir = d
-  }
-
-  private def pqFor(name: String, dumpDir: Option[String])
-      : Option[Array[Array[Array[Double]]]] =
-    dumpDir.orElse(Option(lastStashDir))
-      .flatMap(d => Option(trainedPq.get(stashKey(name, d))))
-
   /** Bounded per-group top-k as a MERGEABLE partial+final aggregate —
     * the scale-correct form of
     * `row_number() OVER (PARTITION BY g ORDER BY key, id) <= k`: the
@@ -376,7 +329,6 @@ object Similarity extends SimilarityIvf with SimilarityQuant
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = trainCodebook(e)
-    stashCodebook("dedup_semantic", d, cents)
     import s.implicits._
     val cells = cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("cell", "c")
@@ -1036,14 +988,6 @@ object Similarity extends SimilarityIvf with SimilarityQuant
          SELECT vec_id, cid AS cluster, dist FROM a3 WHERE rn = 1
          ORDER BY vec_id"""
 
-  def oracles: Map[String, String] = oraclesFor(None)
-
-  /** Oracle map threaded with the dataset dir being dumped: the
-    * scaled-graph entries interpolate the plane family recorded for
-    * THAT dir ([[scaledGraphP]] already keys per dir), so a session
-    * that runs against two dirs and dumps for the first cannot pick up
-    * the second dir's family. The no-arg form falls back to the
-    * last-run dir (ad-hoc use only; [[Verify]] always threads). */
   /** The exact brute-force top-5 oracle — shared with the streaming
     * twin `stream_ann_topk_sink` (graft.streaming.StreamGate), whose
     * per-batch-top-5-then-global-top-5 composition returns the
@@ -1065,7 +1009,8 @@ object Similarity extends SimilarityIvf with SimilarityQuant
          SELECT query_id, rank, neighbor_id, round(cos, 5) AS cos
          FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""
 
-  def oraclesFor(dumpDir: Option[String]): Map[String, String] = Map(
+  /** The oracles that interpolate no trained artifact. */
+  private def staticOracles: Map[String, String] = Map(
     "emb_kcenter" -> kcenterOracle,
     "emb_kmeans" -> kmeansOracle,
     // approximate LSH queries, EXACT oracles: DuckDB runs the identical
@@ -1156,40 +1101,33 @@ object Similarity extends SimilarityIvf with SimilarityQuant
              / (sqrt(sum(a.m * a.m)) * sqrt(sum(b.m * b.m))), 4) AS cos
          FROM cent a JOIN cent b
            ON a.pos = b.pos AND a.lang < b.lang
-         GROUP BY 1, 2 ORDER BY 1, 2""") ++
-    Seq("ann_ivf", "ann_ivf_bucketed").flatMap { k =>
-      codebookFor(k, dumpDir).map(c => k -> ivfOracleSelect(c))
-    }.toMap ++
-    // filtered ANN: same codebook replay, candidates restricted by the
-    // metadata predicate (the Spark side pushes it below the cell join)
-    Seq("ann_filtered", "ann_filtered_bucketed").flatMap { k =>
-      codebookFor(k, dumpDir).map(c => k ->
-        ivfOracleSelect(c, "WHERE e.label % 3 = 0", FilteredNProbe))
-    }.toMap ++
-    codebookFor("ann_ivf_sq8", dumpDir)
-      .map(c => "ann_ivf_sq8" -> ivfSq8OracleSelect(c)).toMap ++
-    codebookFor("layout_describe", dumpDir)
-      .map(c => "layout_describe" -> layoutDescribeOracle(c)).toMap ++
-    pqFor("ann_pq", dumpDir)
-      .map(c => "ann_pq" -> pqOracleSelect(c)).toMap ++
-    Seq("ann_ivfpq", "ann_ivfpq_bucketed").flatMap { k =>
-      for {
-        cents <- codebookFor(k, dumpDir)
-        cbs <- pqFor(k, dumpDir)
-      } yield k -> ivfPqOracleSelect(cents, cbs)
-    }.toMap ++
-    codebookFor("dedup_semantic", dumpDir)
-      .map(c => "dedup_semantic" -> semDedupOracle(c)).toMap ++
-    // scaled-graph entries: plane count recorded from the corpus count
-    // at query time (omitted when the queries haven't run — the
-    // IVF-codebook convention), keyed by the dir being dumped
-    dumpDir.orElse(Option(lastScaledDir))
-      .flatMap(d => Option(scaledGraphP.get(d))).toSeq
-      .flatMap(p => Seq(
+         GROUP BY 1, 2 ORDER BY 1, 2""")
+
+  /** Oracles of dataset `d`. The trained entries interpolate artifacts
+    * re-derived here from `d` by the same deterministic trainers their
+    * queries call (IVF and PQ codebooks, the scaled-graph plane counts),
+    * so the map depends on the dataset only, never on what ran before. */
+  def oracles(s: SparkSession, d: String): Map[String, String] = {
+    val ivf = ivfCodebook(s, d)
+    val (ivfpqCents, ivfpqCbs) = trainIvfPq(unitEmbeddings(s, d))
+    val p = scaledPFor(s, d)
+    staticOracles ++
+      Seq("ann_ivf", "ann_ivf_bucketed").map(_ -> ivfOracleSelect(ivf)) ++
+      // filtered ANN: same codebook replay, candidates restricted by the
+      // metadata predicate (the Spark side pushes it below the cell join)
+      Seq("ann_filtered", "ann_filtered_bucketed").map(_ ->
+        ivfOracleSelect(ivf, "WHERE e.label % 3 = 0", FilteredNProbe)) ++
+      Seq("ann_ivfpq", "ann_ivfpq_bucketed")
+        .map(_ -> ivfPqOracleSelect(ivfpqCents, ivfpqCbs)) ++
+      Map(
+        "ann_ivf_sq8" -> ivfSq8OracleSelect(ivf),
+        "layout_describe" -> layoutDescribeOracle(ivf),
+        "ann_pq" -> pqOracleSelect(trainPqCodebooks(unitEmbeddings(s, d))),
+        "dedup_semantic" -> semDedupOracle(ivf),
         "ann_graph_scaled" -> graphScaledOracle(p),
         "ann_graph_scaled_sq8" -> graphScaledSq8Oracle(p),
-        "ann_graph_scaled_stats" -> graphScaledStatsOracle(p))).toMap ++
-    // append entry: BASE-split plane count, recorded at query time
-    graphAppendOracleFor(dumpDir)
-      .map(sql => "ann_graph_append" -> sql).toMap
+        "ann_graph_scaled_stats" -> graphScaledStatsOracle(p),
+        // append entry: the BASE split's plane count
+        "ann_graph_append" -> graphAppendOracleFor(s, d))
+  }
 }

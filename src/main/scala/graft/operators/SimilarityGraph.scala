@@ -321,25 +321,10 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
       .select(col("bkt"), col("p._1").as("vec_id"))
   }
 
-  /** Recorded plane count per dataset dir — the [[trainedCodebooks]]
-    * convention: the oracle must interpolate the exact plane family the
-    * query derived from the corpus count. */
-  private[operators] val scaledGraphP =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  @volatile private[operators] var lastScaledDir: String = null
-
-  // the append entry keeps its OWN last-dir slot: sharing lastScaledDir
-  // would let a cross-dir append evict the scaled entries' fallback key
-  // and silently drop their oracles from a no-arg dump (r12 review)
-  @volatile private var lastAppendDir: String = null
-
-  private def scaledPFor(s: SparkSession, d: String): Int = {
-    val p = scaledGraphP.computeIfAbsent(d,
-      _ => scaledPlaneCount(Tables.embeddings(s, d).count()))
-    lastScaledDir = d
-    p
-  }
+  /** The scaled family's plane count for dataset `d`: a pure function
+    * of the corpus count, so a query and its oracle each derive it. */
+  private[graft] def scaledPFor(s: SparkSession, d: String): Int =
+    scaledPlaneCount(Tables.embeddings(s, d).count())
 
   /** The production navigable-graph BUILD: out-degree-[[GraphM]] knn
     * edges from an n-SCALED sign-LSH candidate pool. Plan shape: one
@@ -378,9 +363,9 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * quantized shortlist. (A true multi-x cut means quantized EDGE
     * SEMANTICS — the FAISS position — which would change the gate's
     * exact-oracle rows; documented as the 100 TB option, not taken.) */
-  private[graft] def graphFwdEdgesScaled(s: SparkSession, d: String): DataFrame = {
+  private[graft] def graphFwdEdgesScaled(s: SparkSession, d: String,
+                                         p: Int): DataFrame = {
     reg(s)
-    val p = scaledPFor(s, d)
     val pl = planesN(p)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -436,8 +421,9 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * feed the union TWICE (fwd ∪ reverse); without the eager
     * materialization the whole candidate-scoring subtree executes
     * twice — measured as a full 2x on every build metric (r12 probe). */
-  private[graft] def graphEdgesScaled(s: SparkSession, d: String): DataFrame = {
-    val fwd = graphFwdEdgesScaled(s, d).localCheckpoint(true)
+  private[graft] def graphEdgesScaled(s: SparkSession, d: String,
+                                      p: Int): DataFrame = {
+    val fwd = graphFwdEdgesScaled(s, d, p).localCheckpoint(true)
     fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
   }
@@ -447,8 +433,8 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * every timed row measures construction, not a warm read) followed
     * by the [[beamSearchAudited]] walk seeded from the query's own
     * quantizer buckets (see the body comment). Exact oracle: the plane
-    * family is deterministic given the corpus count, recorded per-dir
-    * and interpolated ([[trainedCodebooks]] convention); at the
+    * family is deterministic given the corpus count, re-derived by
+    * the oracle ([[scaledPFor]]) and interpolated; at the
     * 500-vector gate SFs [[scaledPlaneCount]] gives P = 3 (8 buckets ≈
     * the design's mean-[[GraphTargetBucket]] target), and the oracle
     * replays that exact family, probe sets, cap, and seeding. */
@@ -483,7 +469,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     // materialize the edge table ONCE: every checkpointed beam round
     // references `edges`, and an un-materialized build would re-execute
     // per round (measured 65 s vs 26 s at 500k vectors)
-    val edges = graphEdgesScaled(s, d).localCheckpoint(true)
+    val edges = graphEdgesScaled(s, d, p).localCheckpoint(true)
     beamSearchAudited(e, edges, extraEntry = Some(seed))._1
   }
 
@@ -540,10 +526,9 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * identical affine arithmetic, and ranks edges by the identical
     * 6-dp-rounded estimator, so the edge set (and hence the walk)
     * matches bit-for-bit. */
-  private[graft] def graphFwdEdgesScaledSq8(s: SparkSession,
-                                            d: String): DataFrame = {
+  private[graft] def graphFwdEdgesScaledSq8(s: SparkSession, d: String,
+                                            p: Int): DataFrame = {
     reg(s)
-    val p = scaledPFor(s, d)
     val pl = planesN(p)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -589,9 +574,9 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
 
   /** Undirected closure of [[graphFwdEdgesScaledSq8]] (the
     * [[graphEdgesScaled]] materialize-once discipline). */
-  private[graft] def graphEdgesScaledSq8(s: SparkSession,
-                                         d: String): DataFrame = {
-    val fwd = graphFwdEdgesScaledSq8(s, d).localCheckpoint(true)
+  private[graft] def graphEdgesScaledSq8(s: SparkSession, d: String,
+                                         p: Int): DataFrame = {
+    val fwd = graphFwdEdgesScaledSq8(s, d, p).localCheckpoint(true)
     fwd.unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
   }
@@ -619,7 +604,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
         explode(probes1N(col("bkt"), p)).as("bkt"))
       .join(cappedBucketIds(eb), Seq("bkt"))
       .select("query_id", "vec_id")
-    val edges = graphEdgesScaledSq8(s, d).localCheckpoint(true)
+    val edges = graphEdgesScaledSq8(s, d, p).localCheckpoint(true)
     beamSearchAudited(e, edges, extraEntry = Some(seed))._1
   }
 
@@ -686,11 +671,6 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
 
   // ---- incremental graph maintenance (r11 verdict #7) ---------------------
 
-  /** Recorded base-split plane count per dir — the [[scaledGraphP]]
-    * oracle-interpolation convention for [[annGraphAppend]]. */
-  private val appendGraphP =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
   /** `ann_graph_append` gate entry: BATCH-shaped incremental maintenance
     * for the scaled navigable graph — the streaming-corpus story the
     * TRTREE append/compact path already has, applied to the ANN layout.
@@ -707,7 +687,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * their reverses union into the edge table as a file append (the
     * `dedup_incremental` shape); the gate row emits the computed
     * adjacency (query_id = new vector, rank, neighbor_id, cos). Exact
-    * oracle: split rule, plane family (recorded per dir), capped-member
+    * oracle: split rule, plane family (the base split's count), capped-member
     * rule, and both rankings replayed in SQL. */
   def annGraphAppend(s: SparkSession, d: String): DataFrame = {
     val (capped, p) = appendFrozenIndex(s, d)
@@ -727,13 +707,8 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
   private[graft] def appendFrozenIndex(s: SparkSession,
                                        d: String): (DataFrame, Int) = {
     reg(s)
-    val base = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("n", sqrt(dot(col("v"), col("v"))))
-      .filter(pmod(col("vec_id"), lit(10)) =!= 7)
-    val p = appendGraphP.computeIfAbsent(d,
-      _ => scaledPlaneCount(base.count()))
-    lastAppendDir = d
+    val base = appendBase(s, d)
+    val p = scaledPlaneCount(base.count())
     val eb = base.withColumn("bkt", bucketN(col("v"), planesN(p)))
     val capped = base.join(
       cappedBucketIds(eb).select(col("vec_id").as("capped_id"), col("bkt")),
@@ -771,15 +746,20 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     rankedTopK(scored, GraphM)
   }
 
-  /** The [[annGraphAppend]] oracle keyed to a dump dir (the plane
-    * family is recorded at query time) — shared verbatim by the
-    * streaming twin, whose micro-batched union provably equals the
-    * batch append's rows. */
-  private[graft] def graphAppendOracleFor(dumpDir: Option[String])
-      : Option[String] =
-    dumpDir.orElse(Option(lastAppendDir))
-      .flatMap(d => Option(appendGraphP.get(d)))
-      .map(p => graphAppendOracle(p))
+  /** The [[annGraphAppend]] oracle of dataset `d` (plane family from
+    * the base split's count, as [[appendFrozenIndex]] derives it) —
+    * shared verbatim by the streaming twin, whose micro-batched union
+    * provably equals the batch append's rows. */
+  private[graft] def graphAppendOracleFor(s: SparkSession, d: String): String =
+    graphAppendOracle(scaledPlaneCount(appendBase(s, d).count()))
+
+  /** The base (90%) split the append index is frozen over: (vec_id, v, n)
+    * of every vector outside the arriving batch (vec_id % 10 = 7). */
+  private def appendBase(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("n", sqrt(dot(col("v"), col("v"))))
+      .filter(pmod(col("vec_id"), lit(10)) =!= 7)
 
   // ---- deterministic hierarchical HNSW (r10 verdict #3) ------------------
 

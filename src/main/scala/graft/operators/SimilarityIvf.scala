@@ -47,7 +47,8 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     * vectors with smallest xxhash64(vec_id) — a few MB at any corpus
     * size, the regime faiss trains in), Lloyd's on the driver, only the
     * k x dim codebook leaves. Identical data -> identical codebook, so
-    * the in-memory and write-time IVF paths assign identical cells. */
+    * the in-memory and write-time IVF paths assign identical cells, and
+    * an oracle re-runs the training instead of remembering a query's. */
   private[operators] def trainCodebook(e: DataFrame): Array[Array[Double]] = {
     val k = IvfK
     val iters = 8
@@ -81,13 +82,20 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     cents
   }
 
+  /** The codebook of every plain-vector IVF entry and layout:
+    * [[trainCodebook]] over the dataset's float64-cast embeddings. The
+    * layouts persist exactly this (identical data -> identical codebook),
+    * so the oracles call it directly. */
+  private[operators] def ivfCodebook(s: SparkSession, d: String): Array[Array[Double]] =
+    trainCodebook(Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
+
   def annIvf(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val nprobe = IvfNProbe
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = trainCodebook(e)
-    stashCodebook("ann_ivf", d, cents)
     val withCell = e
       .withColumn("cell", nearestCell(cents)(col("v")))
       .withColumn("n", sqrt(dot(col("v"), col("v"))))
@@ -150,7 +158,6 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toArray)
-    stashCodebook("ann_ivf_bucketed", d, cents)
     // float32 layout scan, widened before any arithmetic (bit-identical
     // scoring — see [[buildLshLayout]])
     val e = s.read.parquet(layout.toString)
@@ -207,7 +214,6 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     val layout = buildIvfSq8Layout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook("layout_describe", d, cents)
     describeAnnLayout(s, layout.getPath)
       .select("part_key", "n_rows", "min_vec_id", "max_vec_id")
   }
@@ -244,8 +250,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     * `sq8_dot` decode-dot kernel; the 64-id shortlist is the bounded
     * [[TopKOrdered]] aggregate and only those ids touch the
     * full-precision base table for the exact re-rank. Exact oracle:
-    * codebook + bounds interpolated (the [[trainedCodebooks]]
-    * convention), DuckDB replays cell assignment, nprobe probing, the
+    * codebook + bounds interpolated ([[ivfCodebook]]), DuckDB replays cell assignment, nprobe probing, the
     * identical quantize/dequantize arithmetic, and both rankings. */
   /** Driver-side replica of the `vec_probe_cells` kernel: the `nprobe`
     * nearest centroids of `v`, ties (d2 asc, cell asc) — used wherever
@@ -303,7 +308,6 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
     val cents = trainCodebook(e)
-    stashCodebook("ann_filtered", d, cents)
     val withCell = e
       .withColumn("cell", nearestCell(cents)(col("v")))
       .withColumn("n", sqrt(dot(col("v"), col("v"))))
@@ -327,15 +331,15 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     * mean), so the bounded collect turns the probed-cell list into a
     * literal isin → static partition pruning at the scan (the
     * [[annIvfSq8]] convention). Returns (doc_id, r6) scored candidates;
-    * the caller ranks and fuses. Codebook stashed under the gate key so
-    * the oracle replays cell assignment + probing exactly. */
+    * the caller ranks and fuses. The layout's codebook is
+    * [[ivfCodebook]], so the oracle replays cell assignment + probing
+    * exactly. */
   private[operators] def ivfVectorLeg(s: SparkSession, d: String,
                                       qvDf: DataFrame): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook("hybrid_rrf_ivf", d, cents)
     val qv: Array[Double] = qvDf.collect()(0).getSeq[Double](0).toArray
     val probed: Seq[Int] = nearestCellsLocal(cents, qv, IvfNProbe)
     // qn: sequential 64-term sum — the same IEEE result the oracle's
@@ -368,21 +372,16 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     * the broadcast (query_id, cell) pair table, so candidate volume per
     * query stays nprobe/k of the corpus exactly as in the single-query
     * leg. Returns (query_id, doc_id, r6); the caller ranks and fuses.
-    * Codebook stashed under the CALLER's gate key for oracle replay
-    * (`hybrid_rrf_batch` and `retrieval_ndcg_batch` share this leg but
-    * each gate entry's oracle interpolates its own stash).
     *
     * KEPT as the equivalence-test twin of [[ivfBatchCandidates]] (the
     * fused partition kernel the production batch path runs since r14) —
     * RetrievalSpec pins the two legs row-identical. */
   private[operators] def ivfVectorLegBatch(s: SparkSession, d: String,
-                                           qvs: DataFrame,
-                                           gateKey: String): DataFrame = {
+                                           qvs: DataFrame): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook(gateKey, d, cents)
     // bounded collect: |queries| rows (the annFilteredBucketed shape) —
     // per-query probed cells are computed against the driver-held
     // 32-row codebook and shipped back as the pruning literal + the
@@ -432,13 +431,11 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     * rows returns rows identical to running it over all pairs. */
   private[operators] def ivfBatchCandidates(s: SparkSession, d: String,
                                             qvs: DataFrame,
-                                            gateKey: String,
                                             k: Int): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook(gateKey, d, cents)
     val qRows: Array[(Long, Array[Double])] = qvs.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val qIds: Array[Long] = qRows.map(_._1)
@@ -510,7 +507,6 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     val layout = buildIvfLayout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook("ann_filtered_bucketed", d, cents)
     val eBase = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val qVecs: Array[(Long, Array[Double])] =

@@ -52,7 +52,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     * [[trainCodebook]], one codebook per subspace over its 8-dim slice.
     * Sample is PqK x 20 = 5 120 rows (driver-side Lloyd's stays ~1 s at
     * any corpus size — the bounded-collect argument). */
-  private def trainPqCodebooks(e: DataFrame): Array[Array[Array[Double]]] = {
+  private[operators] def trainPqCodebooks(e: DataFrame): Array[Array[Array[Double]]] = {
     val iters = 8
     val sample: Array[Array[Double]] = e
       .withColumn("hk", xxhash64(col("vec_id")))
@@ -87,20 +87,41 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     }
   }
 
-  private[operators] val trainedPq =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
-
-  def annPq(s: SparkSession, d: String): DataFrame = {
-    reg(s)
-    // L2-NORMALIZE before encoding: the baseline ranks by cosine, and on
-    // the unit sphere L2 is monotone in cosine (||a-b||^2 = 2 - 2cos),
-    // so the ADC metric and the target metric agree for any input
-    val e = Tables.embeddings(s, d)
+  /** The PQ family's input: the dataset's embeddings L2-NORMALIZED —
+    * on the unit sphere L2 is monotone in cosine (||a-b||^2 = 2 - 2cos),
+    * so the ADC metric and the target metric agree for any input. */
+  private[operators] def unitEmbeddings(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
       .withColumn("n", sqrt(dot(col("v0"), col("v0"))))
       .select(col("vec_id"), expr("transform(v0, x -> x / n)").as("v"))
+
+  /** (vec_id, cell, r): each vector's cell and its RESIDUAL
+    * r = v - centroid(cell). */
+  private def residuals(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
+    val s = e.sparkSession
+    import s.implicits._
+    val cellsDf = cents.toSeq.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c")
+    e.withColumn("cell", nearestCell(cents)(col("v")))
+      .join(broadcast(cellsDf), "cell")
+      .select(col("vec_id"), col("cell"),
+        expr("zip_with(v, c, (x, y) -> x - y)").as("r"))
+  }
+
+  /** The IVF-PQ pair: the coarse codebook over `e`, then the PQ
+    * codebooks over the residuals — shared by [[annIvfPq]], the
+    * write-time layout and the oracle. */
+  private[operators] def trainIvfPq(e: DataFrame)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val cents = trainCodebook(e)
+    (cents, trainPqCodebooks(residuals(e, cents).select(col("vec_id"), col("r"))))
+  }
+
+  def annPq(s: SparkSession, d: String): DataFrame = {
+    reg(s)
+    val e = unitEmbeddings(s, d)
     val cbs = trainPqCodebooks(e)
-    stashPq("ann_pq", d, cbs)
     // corpus -> (vec_id, j, code): one nearest-cell kernel per subspace
     val codeCols = (0 until PqM).map { j =>
       struct(lit(j).as("j"),
@@ -165,23 +186,11 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
   def annIvfPq(s: SparkSession, d: String): DataFrame = {
     reg(s)
     import s.implicits._
-    // normalize first: ADC then ranks by L2 on the unit sphere, which is
-    // monotone in cosine (same argument as annPq)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
-      .withColumn("n", sqrt(dot(col("v0"), col("v0"))))
-      .select(col("vec_id"), expr("transform(v0, x -> x / n)").as("v"))
-    val cents = trainCodebook(e)
-    stashCodebook("ann_ivfpq", d, cents)
+    val e = unitEmbeddings(s, d)
+    val (cents, cbs) = trainIvfPq(e)
     val cellsDf = cents.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c")
-    // residual encode: r = v - centroid(cell)
-    val withCell = e.withColumn("cell", nearestCell(cents)(col("v")))
-    val res = withCell.join(broadcast(cellsDf), "cell")
-      .select(col("vec_id"), col("cell"),
-        expr("zip_with(v, c, (x, y) -> x - y)").as("r"))
-    val cbs = trainPqCodebooks(res.select(col("vec_id"), col("r")))
-    stashPq("ann_ivfpq", d, cbs)
+    val res = residuals(e, cents)
     val codeCols = (0 until PqM).map { j =>
       struct(lit(j).as("j"),
         call_function("vec_nearest_cell",
@@ -248,18 +257,9 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     // can linger without ever being read
     val layout = graft.util.Layouts.dir("ann_ivfpq2", d)
     if (graft.util.Layouts.stale(layout, d, "embeddings")) {
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
-        .withColumn("n", sqrt(dot(col("v0"), col("v0"))))
-        .select(col("vec_id"), expr("transform(v0, x -> x / n)").as("v"))
-      val cents = trainCodebook(e)
-      val cellsDf = cents.toSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "c")
-      val res = e.withColumn("cell", nearestCell(cents)(col("v")))
-        .join(broadcast(cellsDf), "cell")
-        .select(col("vec_id"), col("cell"),
-          expr("zip_with(v, c, (x, y) -> x - y)").as("r"))
-      val cbs = trainPqCodebooks(res.select(col("vec_id"), col("r")))
+      val e = unitEmbeddings(s, d)
+      val (cents, cbs) = trainIvfPq(e)
+      val res = residuals(e, cents)
       cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"${layout}_coarse")
@@ -307,14 +307,9 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
       Array.tabulate(PqM)(j => rows.filter(_.getInt(0) == j)
         .map(_.getSeq[Double](2).toArray))
     }
-    stashCodebook("ann_ivfpq_bucketed", d, cents)
-    stashPq("ann_ivfpq_bucketed", d, cbs)
     // query vectors: a bounded collect (10 ids) so the probed-cell list
     // becomes a LITERAL isin filter -> partition pruning at the scan
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v0"))
-      .withColumn("n", sqrt(dot(col("v0"), col("v0"))))
-      .select(col("vec_id"), expr("transform(v0, x -> x / n)").as("v"))
+    val e = unitEmbeddings(s, d)
     val qVecs: Array[(Long, Array[Double])] =
       e.filter(col("vec_id").isin(queryIds: _*)).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -661,7 +656,6 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     val layout = buildIvfSq8Layout(s, d)
     val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
       .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-    stashCodebook("ann_ivf_sq8", d, cents)
     val bounds = s.read.parquet(s"${layout.getPath}_bounds")
     val eBase = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -551,15 +551,6 @@ object TextAnalysis {
     merges.toSeq
   }
 
-  private val trainedBpe =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
-  /** Learned merges for the oracle interpolation (populated by the
-    * session's bpe query runs; empty before — the driver always runs
-    * queries before dumping oracles). */
-  private[graft] def bpeMergeList: Seq[(String, String)] =
-    Option(trainedBpe.get("m")).getOrElse(Seq.empty)
-
   /** One merge-application step as a SQL expression over a `syms`
     * array column: find the LOWEST-RANK applicable merge (rank = 1-based
     * position in the keys literal), leftmost occurrence, and merge that
@@ -589,8 +580,8 @@ object TextAnalysis {
     * state; the corpus itself is only ever exploded and hash-joined
     * against this broadcastable table — token economics at 100 TB
     * without running the tokenizer over every occurrence. */
-  private def bpeWordLens(s: SparkSession, d: String): DataFrame = {
-    val merges = trainedBpe.computeIfAbsent("m", _ => learnBpe(s, d))
+  private def bpeWordLens(s: SparkSession, d: String,
+                          merges: Seq[(String, String)]): DataFrame = {
     val keysLit = merges
       .map { case (l, r) => s"'$l\u001f$r'" }
       .mkString("array(", ", ", ")")
@@ -609,8 +600,14 @@ object TextAnalysis {
     * ratio — the real version of [[tokenCounts]]'s regex stand-in.
     * Plan: vocabulary-sized BPE table broadcast onto the exploded
     * corpus, one partial+final aggregate. */
-  def bpeTokenCounts(s: SparkSession, d: String): DataFrame = {
-    val lens = bpeWordLens(s, d)
+  def bpeTokenCounts(s: SparkSession, d: String): DataFrame =
+    bpeTokenCountsWith(s, d, learnBpe(s, d))
+
+  /** [[bpeTokenCounts]] under the given merges. */
+  private[graft] def bpeTokenCountsWith(s: SparkSession, d: String,
+                                        merges: Seq[(String, String)])
+      : DataFrame = {
+    val lens = bpeWordLens(s, d, merges)
     Tables.documents(s, d)
       .select(col("lang"), col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .join(broadcast(lens), "w")
@@ -629,7 +626,7 @@ object TextAnalysis {
     * actually see. Same per-lang window shape — embarrassingly
     * parallel across language shards. */
   def bpePackSequences(s: SparkSession, d: String): DataFrame = {
-    val lens = bpeWordLens(s, d)
+    val lens = bpeWordLens(s, d, learnBpe(s, d))
     val docTokens = Tables.documents(s, d)
       .select(col("lang"), col("doc_id"),
         explode(split(col("text"), " ")).as("w"))
@@ -807,8 +804,9 @@ object TextAnalysis {
     * recursive CTE running the IDENTICAL leftmost-lowest-rank step
     * [[BpeSteps]] times. All outputs integer (plus one 4dp ratio) —
     * exact oracle. */
-  private def bpeOracleSql(select: String): String = {
-    val ksLit = bpeMergeList
+  private def bpeOracleSql(merges: Seq[(String, String)],
+                           select: String): String = {
+    val ksLit = merges
       .map { case (l, r) => s"('$l' || chr(31) || '$r')" } match {
       case Nil => "[]::VARCHAR[]"
       case ks => ks.mkString("[", ", ", "]")
@@ -838,9 +836,13 @@ object TextAnalysis {
        $select"""
   }
 
-  /** `def`, not `val`: the BPE oracles interpolate the merges LEARNED
-    * by the session's query runs (the codebook convention). */
-  def oracles: Map[String, String] = Map(
+  /** Oracles of dataset `d`: the BPE entries interpolate the merges
+    * [[learnBpe]] learns on `d`, the merges their queries apply. */
+  def oracles(s: SparkSession, d: String): Map[String, String] =
+    oraclesWith(learnBpe(s, d))
+
+  /** The oracle map, its BPE entries under `merges`. */
+  private def oraclesWith(merges: Seq[(String, String)]): Map[String, String] = Map(
     "text_chunk" ->
       """WITH t AS (
            SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -892,14 +894,14 @@ object TextAnalysis {
            length(nfc_normalize(dirty)) AS nfc_chars,
            strip_accents(nfc_normalize(dirty)) AS stripped
          FROM dirty ORDER BY doc_id""",
-    "text_bpe_token_counts" -> bpeOracleSql(
+    "text_bpe_token_counts" -> bpeOracleSql(merges,
       """SELECT lang, count(DISTINCT doc_id) AS n_docs,
            count(*) AS word_tokens,
            CAST(sum(n_bpe) AS BIGINT) AS bpe_tokens,
            round(CAST(sum(n_bpe) AS DOUBLE) / count(*), 4) AS bpe_per_word
          FROM tok JOIN lens USING (w)
          GROUP BY lang ORDER BY lang"""),
-    "text_bpe_pack" -> bpeOracleSql(
+    "text_bpe_pack" -> bpeOracleSql(merges,
       """SELECT lang, (cum - n_tokens) // 512 AS pack_id,
            count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS n_tokens,

@@ -448,18 +448,16 @@ object StreamGate {
         "stream_countmin_sink" -> (streamCountMinSink _),
         "stream_join_sink" -> (streamJoinSink _))
 
-  /** Dir-keyed oracles ([[graft.operators.Similarity.oraclesFor]]
-    * convention): the static map plus the streaming graph append's
-    * shared batch-append oracle (plane family recorded at query time). */
-  def oraclesFor(dumpDir: Option[String]): Map[String, String] =
-    oracles ++
-      graft.operators.Similarity.graphAppendOracleFor(dumpDir)
-        .map(sql => "stream_graph_append_sink" -> sql).toMap
+  /** Oracles of dataset `d`: the static map plus the batch append's
+    * oracle, which the streaming graph append shares. */
+  def oracles(s: SparkSession, d: String): Map[String, String] =
+    staticOracles + ("stream_graph_append_sink" ->
+      graft.operators.Similarity.graphAppendOracleFor(s, d))
 
   /** DuckDB replay of the per-day register pipeline ([[streamHllSink]])
     * straight from the raw events parquet — arrival-order-invariant
     * registers make the streamed and batch-replayed state identical. */
-  val oracles: Map[String, String] = {
+  private val staticOracles: Map[String, String] = {
     val Hll = graft.operators.Hll
     Map(
       // identical rows to ann_topk (per-batch-top-5 → global-top-5

@@ -1245,7 +1245,8 @@ class PipelineOpsSpec extends SessionSuite {
     // sorts every member of a bucket (vectors included) in one task.
     // Assert on the PURE forward-edge plan (graphEdgesScaled eagerly
     // materializes, which would hide the subtree behind a LogicalRDD)
-    val plan = Similarity.graphFwdEdgesScaled(spark, d)
+    val plan = Similarity.graphFwdEdgesScaled(spark, d,
+        Similarity.scaledPFor(spark, d))
       .queryExecution.optimizedPlan
     val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
@@ -1280,7 +1281,8 @@ class PipelineOpsSpec extends SessionSuite {
     assert(agree >= 0.75, s"sq8-vs-exact-build agreement $agree below floor")
     // same window-free discipline as the exact build: the bucket cap is
     // the bounded aggregate, never a per-bucket sort
-    val plan = Similarity.graphFwdEdgesScaledSq8(spark, d)
+    val plan = Similarity.graphFwdEdgesScaledSq8(spark, d,
+        Similarity.scaledPFor(spark, d))
       .queryExecution.optimizedPlan
     val windows = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
@@ -1337,7 +1339,7 @@ class PipelineOpsSpec extends SessionSuite {
         .take(8)
         .map { case (c, _) => (qid, c) }
     }.toSet
-    val actual = Similarity.graphFwdEdgesScaled(spark, d).collect()
+    val actual = Similarity.graphFwdEdgesScaled(spark, d, p).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(actual == expected,
       s"quantized-build edge set diverged from float-exact: " +

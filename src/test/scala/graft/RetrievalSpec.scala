@@ -325,7 +325,7 @@ class RetrievalSpec extends SessionSuite {
     assert(fl.contains("PartitionFilters: [tb") ||
       fl.contains("PartitionFilters: [isnotnull(tb"), fl.take(3000))
     // end-to-end at 100 queries: every query fills its fused top-10
-    val rows = Retrieval.hybridRrfBatchN(spark, d, "probe_batch100", q100)
+    val rows = Retrieval.hybridRrfBatchN(spark, d, q100)
       .collect()
     assert(rows.length === 100 * 10, s"got ${rows.length} fused rows")
     assert(rows.map(_.getLong(0)).distinct.length === 100)

@@ -51,9 +51,9 @@ class BatchLegTwinSpec extends SessionSuite {
        "tail: identical (query_id, rank, neighbor_id, cos) rows") {
     val qvs = qvsFrame(12)
     val old = ranked(
-      Similarity.ivfVectorLegBatch(spark, d, qvs, "twin_old"), 20)
+      Similarity.ivfVectorLegBatch(spark, d, qvs), 20)
     val neu = ranked(
-      Similarity.ivfBatchCandidates(spark, d, qvs, "twin_new", 20), 20)
+      Similarity.ivfBatchCandidates(spark, d, qvs, 20), 20)
     assert(old.nonEmpty, "twin test must actually rank rows")
     assert(neu.length == old.length,
       s"row count ${neu.length} != ${old.length}")
@@ -68,9 +68,9 @@ class BatchLegTwinSpec extends SessionSuite {
     // per-partition kept set scales with k, so the prefix property only
     // holds if no partition dropped a global top-3 member at k=3
     val k3 = ranked(
-      Similarity.ivfBatchCandidates(spark, d, qvs, "twin_k3", 3), 3)
+      Similarity.ivfBatchCandidates(spark, d, qvs, 3), 3)
     val k20 = ranked(
-      Similarity.ivfBatchCandidates(spark, d, qvs, "twin_k20", 20), 20)
+      Similarity.ivfBatchCandidates(spark, d, qvs, 20), 20)
     val k20prefix = k20.filter(_._2 <= 3)
     assert(k3.toSeq == k20prefix.toSeq)
   }
@@ -128,10 +128,11 @@ class BatchLegTwinSpec extends SessionSuite {
     neu.zip(old).foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }
 
-  test("bm25BatchCandidates (fused lexical kernel) == bm25ScoreBatch " +
-       "(slot-aggregate twin) through the rank tail") {
+  /** bm25BatchCandidates and its bm25ScoreBatch twin, each ranked
+    * through the shared rank tail, over one query batch at sf0.01. */
+  private def bm25Twins(queries: Seq[(Long, Seq[String])])
+      : (Array[(Long, Int, Long, Double)], Array[(Long, Int, Long, Double)]) = {
     val d001 = "/root/testdata/sf0.01"
-    val queries = Retrieval.BatchQueries
     val tf = Retrieval.batchPostingTf(spark, d001, queries)
     val stats = spark.read.parquet(
       s"${Retrieval.buildPostingLayout(spark, d001)}_stats")
@@ -141,10 +142,30 @@ class BatchLegTwinSpec extends SessionSuite {
           col("r4").as("cos")), 20)
         .orderBy("query_id", "rank").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    val old = rank(Quality.bm25ScoreBatch(tf, queries, stats))
-    val neu = rank(Quality.bm25BatchCandidates(tf, queries, stats, 20))
+    (rank(Quality.bm25ScoreBatch(tf, queries, stats)),
+      rank(Quality.bm25BatchCandidates(tf, queries, stats, 20)))
+  }
+
+  test("bm25BatchCandidates (fused lexical kernel) == bm25ScoreBatch " +
+       "(slot-aggregate twin) through the rank tail") {
+    val (old, neu) = bm25Twins(Retrieval.BatchQueries)
     assert(old.nonEmpty && neu.length == old.length,
       s"${neu.length} vs ${old.length}")
     neu.zip(old).foreach { case (a, b) => assert(a == b, s"$a != $b") }
+  }
+
+  test("bm25BatchCandidates handles 1-term and 3-term queries: equal " +
+       "to bm25ScoreBatch's fan-out form through the rank tail") {
+    val vocab = Retrieval.BatchQueries.flatMap(_._2).distinct
+    val oneTerm = vocab.take(6).zipWithIndex
+      .map { case (t, i) => (i + 1L) -> Seq(t) }
+    val threeTerm = (0 until 6).map(i => (i + 1L) ->
+      Seq(vocab(i), vocab((i + 7) % vocab.size), vocab((i + 13) % vocab.size)))
+    for ((label, batch) <- Seq("1-term" -> oneTerm, "3-term" -> threeTerm)) {
+      val (old, neu) = bm25Twins(batch)
+      assert(old.nonEmpty && neu.length == old.length,
+        s"$label: ${neu.length} vs ${old.length}")
+      neu.zip(old).foreach { case (a, b) => assert(a == b, s"$label: $a != $b") }
+    }
   }
 }

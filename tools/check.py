@@ -2,7 +2,8 @@
 """Local replica of the driver's correctness gate.
 
 Runs DuckDB oracle SQL against the same parquet tables and compares with
-the parquet outputs that graft.Verify wrote. Usage:
+the parquet outputs that graft.Verify wrote. An entry whose run recorded
+an error in manifest.json fails, with or without an oracle. Usage:
 
     python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -38,8 +39,14 @@ def main(sf_dir: str, out_dir: str) -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
+    with open(os.path.join(out_dir, "manifest.json")) as f:
+        errors = {n: m["error"] for n, m in json.load(f).items()
+                  if m["error"] is not None}
     n_pass = n_fail = 0
-    for name in sorted(oracles):
+    for name in sorted(errors):
+        print(f"FAIL {name}: run error: {errors[name]}")
+        n_fail += 1
+    for name in sorted(set(oracles) - set(errors)):
         sql = oracles[name]
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:
@@ -92,7 +99,8 @@ def main(sf_dir: str, out_dir: str) -> int:
                 n_fail += 1
     queries_no_oracle = [
         os.path.basename(p) for p in glob.glob(os.path.join(out_dir, "*"))
-        if os.path.isdir(p) and os.path.basename(p) not in oracles]
+        if os.path.isdir(p) and os.path.basename(p) not in oracles
+        and os.path.basename(p) not in errors]
     for name in sorted(queries_no_oracle):
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         rows = sum(len(pd.read_parquet(f)) for f in files) if files else 0
