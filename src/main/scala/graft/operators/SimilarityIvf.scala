@@ -108,6 +108,23 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     rankedTopK(scored, 5)
   }
 
+  /** Persists `cents` as the `_codebook` sidecar of `layout`: one file,
+    * one (cell, centroid) row per cell. */
+  private[operators] def writeCodebook(s: SparkSession, layout: java.io.File,
+                                       cents: Array[Array[Double]]): Unit = {
+    import s.implicits._
+    cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+      .toDF("cell", "centroid")
+      .coalesce(1).write.mode("overwrite").parquet(s"${layout}_codebook")
+  }
+
+  /** The `_codebook` sidecar of `layout` ([[writeCodebook]]) in cell
+    * order: a bounded collect of k (32) rows. */
+  private[operators] def readCodebook(s: SparkSession,
+                                      layout: java.io.File): Array[Array[Double]] =
+    s.read.parquet(s"${layout}_codebook")
+      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+
   /** Write-time IVF layout: the corpus materialized PARTITIONED BY its
     * coarse-quantizer cell (parity with [[buildLshLayout]]), codebook
     * persisted beside it — a probe reads only its nprobe cell
@@ -126,10 +143,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val cents = trainCodebook(e)
-      import s.implicits._
-      cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"${layout}_codebook")
+      writeCodebook(s, layout, cents)
       Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vd"),
           col("embedding").as("v"), col("label"))
@@ -155,9 +169,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
   def annIvfBucketed(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     // float32 layout scan, widened before any arithmetic (bit-identical
     // scoring — see [[buildLshLayout]])
     val e = s.read.parquet(layout.toString)
@@ -212,8 +224,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
   def layoutDescribeGate(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val layout = buildIvfSq8Layout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     describeAnnLayout(s, layout.getPath)
       .select("part_key", "n_rows", "min_vec_id", "max_vec_id")
   }
@@ -338,8 +349,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
                                       qvDf: DataFrame): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     val qv: Array[Double] = qvDf.collect()(0).getSeq[Double](0).toArray
     val probed: Seq[Int] = nearestCellsLocal(cents, qv, IvfNProbe)
     // qn: sequential 64-term sum — the same IEEE result the oracle's
@@ -380,8 +390,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
                                            qvs: DataFrame): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     // bounded collect: |queries| rows (the annFilteredBucketed shape) —
     // per-query probed cells are computed against the driver-held
     // 32-row codebook and shipped back as the pruning literal + the
@@ -434,8 +443,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
                                             k: Int): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     val qRows: Array[(Long, Array[Double])] = qvs.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val qIds: Array[Long] = qRows.map(_._1)
@@ -505,8 +513,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
   def annFilteredBucketed(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val layout = buildIvfLayout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     val eBase = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val qVecs: Array[(Long, Array[Double])] =

@@ -627,10 +627,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val cents = trainCodebook(e)
-      import s.implicits._
-      cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"${layout}_codebook")
+      writeCodebook(s, layout, cents)
       sq8Bounds(e).coalesce(1).write.mode("overwrite")
         .parquet(s"${layout}_bounds")
       val bounds = s.read.parquet(s"${layout}_bounds")
@@ -654,8 +651,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
   def annIvfSq8(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val layout = buildIvfSq8Layout(s, d)
-    val cents: Array[Array[Double]] = s.read.parquet(s"${layout}_codebook")
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
+    val cents = readCodebook(s, layout)
     val bounds = s.read.parquet(s"${layout.getPath}_bounds")
     val eBase = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

@@ -12,13 +12,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    checkpoint (every run starts from an empty checkpoint, so the
   *    state-store provider and the stateful partition count bound at the
   *    query's first start are exactly the run's confs);
-  *  - each staged frame written as parquet, then replayed as a
-  *    file-source stream under the frame's own schema;
+  *  - each staged frame written as parquet, its part files stamped with
+  *    modification times in part order, then replayed as a file-source
+  *    stream under the frame's own schema (FileStreamSource replays new
+  *    files oldest first, so a one-file-per-trigger replay takes the
+  *    parts in part order, not in the order their writes finished);
   *  - the entry's pipeline, sunk per micro-batch with `AvailableNow` in a
   *    query named after the entry (the bench listener attributes the
   *    micro-batch jobs and triggers to the entry's row by that name),
-  *    under the run's session confs, set before the start and restored
-  *    after the await;
+  *    under the run's session confs ([[RunConfs]] plus the entry's),
+  *    set before the start and restored after the await;
   *  - the `batch=*` union read back, passed through the entry's tail and
   *    materialized with `localCheckpoint` (bounded: the tails aggregate
   *    or rank), so the root can go;
@@ -42,11 +45,30 @@ private[streaming] object BoundedStream {
 
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
+  /** The commit path of every run, set next to the state-store provider.
+    *  - Checkpoint files are renamed into place by Hadoop's `FileSystem`
+    *    API: on the local file system that is one `rename(2)`. Spark's
+    *    default `FileContext` manager resolves symlinks on every rename,
+    *    and without `libhadoop` each resolution launches `readlink`
+    *    processes (four per rename, a few milliseconds each, on the
+    *    commit path of every trigger). The run's root is a local temp
+    *    dir with one writer, so the `FileContext` manager's atomicity
+    *    guarantees buy nothing here. Checksums stay on.
+    *  - RocksDB commits write one changelog file per state store and
+    *    version instead of uploading SST files and zips and deleting the
+    *    local snapshot (an `rm -rf` process) on every commit. */
+  private[streaming] val RunConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
   /** Runs entry `name`: stages `staged`, builds the sink from the staged
     * streams (in staging order) and the run's root, streams it to the end
-    * under [[StreamGate.stateStoreProvider]] plus `confs`, and returns
-    * `tail` of the sunk rows. `oneFilePerBatch` replays one staged file
-    * per micro-batch instead of all files in one. */
+    * under [[StreamGate.stateStoreProvider]], [[RunConfs]] and `confs`,
+    * and returns `tail` of the sunk rows. `oneFilePerBatch` replays one
+    * staged file per micro-batch instead of all files in one. */
   def run(s: SparkSession, name: String, staged: Seq[DataFrame],
           confs: Seq[(String, String)] = Nil,
           oneFilePerBatch: Boolean = false)(
@@ -59,6 +81,7 @@ private[streaming] object BoundedStream {
       val inputs = staged.indices.map(i => s"$root/in$i")
       staged.zip(inputs).foreach { case (df, dir) =>
         df.write.mode("overwrite").parquet(dir)
+        stampPartOrder(dir)
       }
       val streams = staged.zip(inputs).map { case (df, dir) =>
         val r = s.readStream.schema(df.schema)
@@ -74,7 +97,7 @@ private[streaming] object BoundedStream {
           }
       }
       val set = StreamGate.stateStoreProvider.map(ProviderKey -> _).toSeq ++
-        confs
+        RunConfs ++ confs
       val prev = set.map { case (k, _) => k -> s.conf.getOption(k) }
       set.foreach { case (k, v) => s.conf.set(k, v) }
       try {
@@ -99,6 +122,19 @@ private[streaming] object BoundedStream {
       // UncheckedIOException, and a leftover dir must not fail the entry
       try StreamSink.deleteTree(Paths.get(root))
       catch { case _: IOException | _: UncheckedIOException => () }
+    }
+  }
+
+  /** Stamps the part files of `dir` one second apart in part-name order
+    * (part `i` is partition `i` of the staged frame). */
+  private def stampPartOrder(dir: String): Unit = {
+    val parts = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    if (parts.nonEmpty) {
+      val t0 = parts.map(_.lastModified).min
+      parts.zipWithIndex.foreach { case (f, i) =>
+        require(f.setLastModified(t0 + i * 1000L), s"cannot stamp $f")
+      }
     }
   }
 }

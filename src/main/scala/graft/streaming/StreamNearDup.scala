@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -35,19 +35,24 @@ object StreamNearDup {
   val BucketCap = 64
   val TtlMs: Long = 60 * 60 * 1000L
 
+  /** A doc's distinct 3-word shingle hashes in ascending order, from the
+    * batch dedup scan kernel (`shingle3_hashes`,
+    * [[graft.functions.Shingle3Kernel]]: bit-identical to the
+    * split/concat_ws/xxhash64 chain); empty for a doc of fewer than 3
+    * tokens. */
+  def shingleSet(text: Column): Column =
+    array_sort(array_distinct(call_function("shingle3_hashes", text)))
+
   /** LSH band rows for a (doc_id, ts, text) stream — same hash family
-    * as the batch minhashLsh (`minhash_sig` comes with the session's
-    * registered SQL surface, [[graft.GraftSession]]). */
+    * as the batch minhashLsh (`minhash_sig` and `shingle3_hashes` come
+    * with the session's registered SQL surface, [[graft.GraftSession]]). */
   def bandRows(spark: SparkSession, docs: DataFrame): Dataset[BandRow] = {
     import spark.implicits._
     val numHashes = 32
     val rowsPerBand = 4
     docs
-      .select(col("doc_id"), col("ts"), split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("shs", expr(
-        """array_sort(array_distinct(transform(sequence(0, size(toks) - 3),
-           i -> xxhash64(concat_ws(' ', toks[i], toks[i+1], toks[i+2])))))"""))
+      .select(col("doc_id"), col("ts"), shingleSet(col("text")).as("shs"))
+      .filter(size(col("shs")) > 0)
       .withColumn("sig", call_function("minhash_sig", col("shs")))
       .select(col("doc_id"), col("ts"),
         explode(sequence(lit(0), lit(numHashes / rowsPerBand - 1))).as("band"),

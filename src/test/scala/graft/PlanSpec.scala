@@ -565,14 +565,18 @@ class PlanSpec extends SessionSuite {
       // +2 in r14: sq8ScoredCandidates' bounded bounds (1 row) and
       // query-vector (|queryIds| rows) collects — the fused ann_sq8
       // kernel's driver-held structures
-      "operators/SimilarityQuant.scala" -> 8,
+      // -1: annIvfSq8's codebook load goes through readCodebook
+      "operators/SimilarityQuant.scala" -> 7,
       // +2 in r14: ivfBatchCandidates' bounded codebook (32 rows) and
       // query-frame (|queries| rows) collects — the fused batch leg's
-      // driver-held probe structures, same class as ivfVectorLegBatch's
-      "operators/SimilarityIvf.scala" -> 11,
+      // driver-held probe structures, same class as ivfVectorLegBatch's;
+      // -5: the six 32-row codebook loads are one site, readCodebook
+      "operators/SimilarityIvf.scala" -> 6,
       "operators/Retrieval.scala" -> 4,
       "util/BoundedLocal.scala" -> 1,
-      "streaming/StreamGate.scala" -> 2,
+      // +1: stream_ann_topk_sink's |queryIds|-row query vectors, collected
+      // once per run into a plan literal
+      "streaming/StreamGate.scala" -> 3,
       "operators/TextAnalysis.scala" -> 2,
       "berlinmod/BerlinMod.scala" -> 2,
       "sqlx/MobSql.scala" -> 1,
