@@ -36,7 +36,7 @@ object GraftSession {
       // partition serializes them — keep the requested parallelism
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       // default for work outside a query, i.e. the untimed layout builds
-      // (graph/HNSW builds group by n vectors with k-bounded TopKOrdered
+      // (graph/HNSW builds group by n vectors with k-bounded topk_ordered
       // state; under Spark's 128 they sort-fall-back into full-stream
       // sorter spill, SURVEY item 15). Each query runs under its own
       // registered value instead (SparkEntry.aggThreshold).

@@ -65,7 +65,7 @@ object SparkEntry {
   val HashAggThreshold = 65536
 
   /** The entries that run with the hash-aggregate fallback threshold at
-    * [[HashAggThreshold]]: their TopKOrdered states are k-bounded (~400 B
+    * [[HashAggThreshold]]: their topk_ordered states are k-bounded (~400 B
     * per group) and their n-group builds must hash. Every other entry
     * runs at Spark's default, 128, so the BerlinMOD collect_list-of-
     * instants aggregates and the vocabulary-shaped text rows take the

@@ -58,11 +58,10 @@ object BerlinMod {
   private val BigFleet = 5000
 
   /** The segment-pair equi-join clause: (hour bucket × grid cell) key +
-    * time-overlap + padded-bbox prefilters. `cells = false` reproduces the
-    * hour-only key for the diff test. */
-  private def segJoinOn(pad: String, cells: Boolean): String =
+    * time-overlap + padded-bbox prefilters. */
+  private def segJoinOn(pad: String): String =
     s"""a.bucket = b.bucket
-        ${if (cells) "AND a.cx = b.cx AND a.cy = b.cy" else ""}
+        AND a.cx = b.cx AND a.cy = b.cy
         AND a.tl <= b.tu AND b.tl <= a.tu
         AND a.sxmin <= b.sxmax + $pad AND b.sxmin <= a.sxmax + $pad
         AND a.symin <= b.symax + $pad AND b.symin <= a.symax + $pad"""
@@ -399,20 +398,6 @@ object BerlinMod {
                         dxs * (gy2 - y1) - dys * (gx1 - x1),
                         dxs * (gy2 - y1) - dys * (gx2 - x1)) >= 0D""")
       .persist(cacheLvl).createOrReplaceTempView("SegTime")
-    // Hour-only variant (no cells, uncached, lazy): kept for the
-    // old-vs-new diff test in BerlinModSpec — proves the cell key drops
-    // no pairs at multiple generator scales.
-    spark.sql(
-      """SELECT TripId, VehicleId,
-           array(x1, y1, cast(tl AS double), x2, y2, cast(tu AS double)) AS seg,
-           sxmin, sxmax, symin, symax, tl, tu, bucket,
-           0 AS cx, 0 AS cy
-         FROM Segs
-         LATERAL VIEW explode(sequence(
-           cast(floor(tl / 3600000000) AS bigint),
-           cast(floor(tu / 3600000000) AS bigint))) bk AS bucket""")
-      .createOrReplaceTempView("SegTimeHourOnly")
-
     // LIMIT-10 dimension views (ref sql/load/01_instants.sql:9-13 etc.)
     spark.sql("SELECT * FROM Licences ORDER BY LicenceId LIMIT 10")
       .createOrReplaceTempView("Licences1")
@@ -480,10 +465,10 @@ object BerlinMod {
   /** q6: eDwithin(trip1, trip2, d) = EXISTS a time-overlapping segment
     * pair whose min distance over the overlap is <= d — segment
     * (bucket, cell) equi-join + per-pair quadratic (same solver, same
-    * tolerance), instead of the all-overlapping-trip-pairs BNLJ.
-    * `cells = false` keeps the hour-only key (diff-test baseline). */
-  private[graft] def q6Sql(cells: Boolean): String = {
-    val seg = if (cells) "SegTime" else "SegTimeHourOnly"
+    * tolerance), instead of the all-overlapping-trip-pairs BNLJ, over
+    * the segment view `seg` (`SegTime`; BerlinModSpec diffs it against
+    * an hour-only view). */
+  private[graft] def q6Sql(seg: String): String =
     s"""WITH T AS (
          SELECT s.* FROM $seg s
          JOIN Vehicles v ON s.VehicleId = v.VehicleId
@@ -491,7 +476,7 @@ object BerlinMod {
        pairs AS (
          SELECT DISTINCT a.VehicleId AS v1, b.VehicleId AS v2
          FROM T a JOIN T b
-           ON ${segJoinOn("10.000001", cells)}
+           ON ${segJoinOn("10.000001")}
           AND a.VehicleId < b.VehicleId
           AND seg_edwithin(a.seg, b.seg, 10.0D))
        SELECT va.Licence AS Licence1, vb.Licence AS Licence2
@@ -499,15 +484,13 @@ object BerlinMod {
        JOIN Vehicles va ON pairs.v1 = va.VehicleId
        JOIN Vehicles vb ON pairs.v2 = vb.VehicleId
        ORDER BY Licence1, Licence2"""
-  }
 
   /** q10: whenTrue(tDwithin(t1, t2, d)) decomposes into the union of the
     * per-segment-pair within-d intervals (identical quadratic solver +
     * rounding), normalized and formatted once per trip pair. Duplicate
     * candidate matches across shared (bucket, cell) keys collapse in the
-    * spanset normalization. */
-  private[graft] def q10Sql(cells: Boolean): String = {
-    val seg = if (cells) "SegTime" else "SegTimeHourOnly"
+    * spanset normalization. Over the segment view `seg`, as [[q6Sql]]. */
+  private[graft] def q10Sql(seg: String): String =
     s"""WITH cand AS (
          SELECT l1.Licence AS Licence1, b.VehicleId AS Car2Id,
            a.TripId AS TripId1, b.TripId AS TripId2,
@@ -515,13 +498,12 @@ object BerlinMod {
          FROM $seg a
          JOIN Licences1 l1 ON a.VehicleId = l1.VehicleId
          JOIN $seg b
-           ON ${segJoinOn("3.000001", cells)}
+           ON ${segJoinOn("3.000001")}
           AND a.VehicleId <> b.VehicleId)
        SELECT Licence1, Car2Id, pair_spanset_text(collect_list(sp)) AS Periods
        FROM cand WHERE sp IS NOT NULL
        GROUP BY Licence1, Car2Id, TripId1, TripId2
        ORDER BY Licence1, Car2Id, Periods"""
-  }
 
   /** q16 (ref query_16.sql): licence pairs whose period-clipped trips
     * BOTH intersect a region yet are always disjoint during the period —
@@ -596,7 +578,7 @@ object BerlinMod {
              round(st_distance(t1.Trajs, t2.Trajs), 6) AS MinDist
            FROM Temp1 t1, Temp2 t2
            ORDER BY Licence1, Licence2"""),
-      "q6" -> s.sql(q6Sql(cells = true)),
+      "q6" -> s.sql(q6Sql("SegTime")),
       "q7" -> s.sql(
         // Semantics note: atGeometry(trip, POINT) restricts to instants
         // whose position equals the point exactly (MobRestriction's atValues),
@@ -656,7 +638,7 @@ object BerlinMod {
              GROUP BY pr.PeriodId, pr.VehicleId)
            SELECT PeriodId, round(MAX(Dist), 6) AS MaxDist
            FROM Distances GROUP BY PeriodId ORDER BY PeriodId"""),
-      "q10" -> s.sql(q10Sql(cells = true)),
+      "q10" -> s.sql(q10Sql("SegTime")),
       "q11" -> s.sql(
         """WITH Temp AS (
              SELECT p.PointId, i.InstantId, i.Instant, t.VehicleId

@@ -65,12 +65,9 @@ object GraftFunctions {
       (e: Seq[Expression]) => F32Pack(e(0)), "built-in")
     registry.createOrReplaceTempFunction("f32_dot",
       (e: Seq[Expression]) => F32Dot(e(0), e(1)), "built-in")
-    // bounded per-group top-k: topk_ordered(cap, key, id, payload) —
-    // cap must be an int literal (it sizes the aggregation state)
+    // bounded per-group top-k: topk_ordered(cap, key, id, payload)
     registry.createOrReplaceTempFunction("topk_ordered",
-      (e: Seq[Expression]) => TopKOrderedAgg(
-        e(0).eval().asInstanceOf[Number].intValue(), e(1), e(2), e(3)),
-      "built-in")
+      (e: Seq[Expression]) => TopKOrderedAgg.fromArgs(e), "built-in")
     // Unicode canonicalization (DuckDB-compatible names/semantics)
     registry.createOrReplaceTempFunction("nfc_normalize",
       (e: Seq[Expression]) => UnicodeNormalize(e(0), "NFC"), "built-in")

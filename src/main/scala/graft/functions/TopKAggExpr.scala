@@ -7,31 +7,27 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, ExpectsInputTy
 import org.apache.spark.sql.catalyst.expressions.aggregate.{ImperativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.trees.TernaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Bounded per-group top-k by (key asc, id asc) as a native
-  * [[TypedImperativeAggregate]] — the plumbing-free form of the
-  * `udaf(TopKOrdered)` aggregate (callers negate the key for
-  * descending; a payload double rides along for output).
+  * [[TypedImperativeAggregate]] (callers negate the key for descending;
+  * a payload double rides along for output).
   *
-  * Same ObjectHashAggregate plan, same flat primitive state, same
-  * comparisons — the r14 profile of the batch-leg scoring stage put
-  * ~half its task CPU in the `ScalaAggregator` per-row machinery the
-  * udaf wrapper imposes (codegen'd input projection into an UnsafeRow,
-  * then a SafeProjection + `Tuple3` allocation with two
-  * `Double.valueOf` boxes PER SCORED PAIR through the input
-  * ExpressionEncoder), not in the top-k logic itself. This expression
-  * reads its three inputs straight off the incoming row
+  * It reads its three inputs straight off the incoming row
   * (`getDouble`/`getLong` on a [[BoundReference]] — zero allocation on
   * the reject path a full buffer takes for almost every row), so
   * callers pre-project computed keys into plain columns to keep the
-  * key arithmetic inside the upstream whole-stage-codegen span.
+  * key arithmetic inside the upstream whole-stage-codegen span. The
+  * r14 profile of the batch-leg scoring stage put ~half its task CPU in
+  * the per-row encoder machinery of the `udaf(Aggregator)` form this
+  * replaced, not in the top-k logic itself.
   *
   * State and ordering logic live in the companion and are shared with
-  * the legacy Aggregator (kept as the equivalence-test twin): a flat
+  * the fused partition kernels ([[TopKOrderedAgg.Buffers]]): a flat
   * `Array[Double]` of (key, id, payload) triples ascending by
-  * (key, id) — ids exact as doubles below 2^53, the representation the
-  * sort key already used. Registered as `topk_ordered(cap, key, id,
+  * (key, id). Ids are kept as doubles, so every id is checked to lie
+  * within ±2^53 ([[TopKOrderedAgg.exactId]]) and the cap must be a
+  * positive integer literal. Registered as `topk_ordered(cap, key, id,
   * payload)`. */
 case class TopKOrderedAgg(
     cap: Int,
@@ -42,6 +38,8 @@ case class TopKOrderedAgg(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Double]]
   with TernaryLike[Expression] with ExpectsInputTypes {
+
+  TopKOrderedAgg.checkCap(cap)
 
   override def first: Expression = key
   override def second: Expression = id
@@ -57,18 +55,20 @@ case class TopKOrderedAgg(
   // Per-row input readers. The pre-projected call sites bind each child
   // to a BoundReference → direct primitive read, no boxing. Anything
   // else (a literal payload, an unprojected expression) goes through
-  // interpreted eval; null inputs throw — the udaf form's input
-  // ExpressionEncoder (non-nullable Tuple3 fields) threw on them too,
-  // so a null can never silently rank as 0.0.
-  @transient private lazy val readKey: InternalRow => Double = key match {
-    case b: BoundReference if b.dataType == DoubleType =>
-      r => { if (r.isNullAt(b.ordinal)) nullInput(); r.getDouble(b.ordinal) }
-    case e =>
-      r => e.eval(r) match {
-        case d: java.lang.Double => d.doubleValue()
-        case _ => nullInput()
-      }
-  }
+  // interpreted eval. Null inputs throw, so a null can never silently
+  // rank as 0.0.
+  private def doubleReader(child: Expression): InternalRow => Double =
+    child match {
+      case b: BoundReference if b.dataType == DoubleType =>
+        r => { if (r.isNullAt(b.ordinal)) nullInput(); r.getDouble(b.ordinal) }
+      case e =>
+        r => e.eval(r) match {
+          case d: java.lang.Double => d.doubleValue()
+          case _ => nullInput()
+        }
+    }
+  @transient private lazy val readKey = doubleReader(key)
+  @transient private lazy val readPayload = doubleReader(payload)
   @transient private lazy val readId: InternalRow => Long = id match {
     case b: BoundReference if b.dataType == LongType =>
       r => { if (r.isNullAt(b.ordinal)) nullInput(); r.getLong(b.ordinal) }
@@ -78,24 +78,14 @@ case class TopKOrderedAgg(
         case _ => nullInput()
       }
   }
-  @transient private lazy val readPayload: InternalRow => Double =
-    payload match {
-      case b: BoundReference if b.dataType == DoubleType =>
-        r => { if (r.isNullAt(b.ordinal)) nullInput(); r.getDouble(b.ordinal) }
-      case e =>
-        r => e.eval(r) match {
-          case d: java.lang.Double => d.doubleValue()
-          case _ => nullInput()
-        }
-    }
 
   private def nullInput(): Nothing =
     throw new IllegalStateException(
       "null input to topk_ordered (inputs are non-nullable by contract)")
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] =
-    TopKOrderedAgg.insert(buf, cap,
-      readKey(input), readId(input).toDouble, readPayload(input))
+    TopKOrderedAgg.insert(buf, cap, readKey(input),
+      TopKOrderedAgg.exactId(readId(input)), readPayload(input))
 
   override def merge(a: Array[Double], b: Array[Double]): Array[Double] =
     TopKOrderedAgg.mergeSorted(a, b, cap)
@@ -145,11 +135,48 @@ object TopKOrderedAgg {
       StructField("_2", DoubleType, nullable = false))),
     containsNull = false)
 
+  /** `topk_ordered(cap, key, id, payload)` from its call arguments. The
+    * cap sizes the state, so it must be a positive integer literal. */
+  private[graft] def fromArgs(e: Seq[Expression]): TopKOrderedAgg = {
+    if (e.length != 4) throw new IllegalArgumentException(
+      s"topk_ordered takes (cap, key, id, payload), got ${e.length} arguments")
+    val cap = e.head match {
+      case c if c.foldable &&
+          Seq(ByteType, ShortType, IntegerType, LongType).contains(c.dataType) =>
+        c.eval() match {
+          case n: Number if n.longValue().isValidInt => n.intValue()
+          case v => throw new IllegalArgumentException(
+            s"topk_ordered cap must be a positive integer, got $v")
+        }
+      case c => throw new IllegalArgumentException(
+        s"topk_ordered cap must be an integer literal, got ${c.sql}")
+    }
+    // a non-positive cap fails in the constructor (checkCap)
+    TopKOrderedAgg(cap, e(1), e(2), e(3))
+  }
+
+  /** A buffer keeps at least one triple: [[insert]] reads the last kept
+    * triple of a full buffer. */
+  private[graft] def checkCap(cap: Int): Unit =
+    if (cap < 1) throw new IllegalArgumentException(
+      s"topk_ordered cap must be a positive integer, got $cap")
+
+  /** The largest id magnitude a double holds exactly. */
+  private val MaxExactId = 1L << 53
+
+  /** `id` as the buffer stores it. Ids are doubles in the state (the
+    * representation of the sort key), exact only within ±2^53, so an id
+    * outside fails instead of coming back as a neighbouring integer. */
+  private[graft] def exactId(id: Long): Double = {
+    if (id > MaxExactId || id < -MaxExactId) throw new IllegalArgumentException(
+      s"topk_ordered id $id is outside ±2^53, where ids stop being exact")
+    id.toDouble
+  }
+
   /** Insert (xk, xi, xp) into the flat ascending (key, id) triple
     * buffer, keeping at most `cap` triples — the fast reject path (full
     * buffer, candidate past the last kept triple) returns the buffer
-    * unchanged with zero allocation. Ids compare as doubles (exact
-    * below 2^53, matching the sort key representation). */
+    * unchanged with zero allocation. */
   private[graft] def insert(buf: Array[Double], cap: Int,
                             xk: Double, xi: Double,
                             xp: Double): Array[Double] = {
@@ -173,6 +200,30 @@ object TopKOrderedAgg {
       System.arraycopy(buf, lo * 3, out, lo * 3 + 3, (outN - lo - 1) * 3)
       out
     }
+  }
+
+  /** The per-query top-k of a fused partition kernel: one [[insert]]
+    * buffer per query, offered every scored (key, id, payload) triple
+    * and emitted once at the end of the partition. Kept under the same
+    * comparator and id check as the aggregate, so a partition keeps
+    * every member of the final top-`cap` it holds, and the downstream
+    * `topk_ordered` over the emitted candidates ranks exactly as over
+    * all scored pairs. */
+  private[graft] final class Buffers(queries: Int, cap: Int) {
+    checkCap(cap)
+    private val bufs = Array.fill(queries)(Array.emptyDoubleArray)
+
+    def offer(query: Int, key: Double, id: Long, payload: Double): Unit =
+      bufs(query) = insert(bufs(query), cap, key, exactId(id), payload)
+
+    /** Every kept triple as `f(query, key, id, payload)`, query by
+      * query, each ascending by (key, id). */
+    def emit[T](f: (Int, Double, Long, Double) => T): Iterator[T] =
+      Iterator.range(0, queries).flatMap { q =>
+        val b = bufs(q)
+        Iterator.range(0, b.length / 3).map(t =>
+          f(q, b(3 * t), b(3 * t + 1).toLong, b(3 * t + 2)))
+      }
   }
 
   /** Merge two ascending triple buffers, keeping the first `cap`. */

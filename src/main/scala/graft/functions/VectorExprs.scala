@@ -150,6 +150,30 @@ object VectorKernels {
       .setScale(scale, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
+  /** The ascending dot-product fold of [[VecDot]] (`s += a(i) * b(i)`
+    * from 0.0 over the shorter length) on primitive arrays, so a
+    * partition kernel or driver-side score is bit-identical to the
+    * `vec_dot` expression's. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** [[dot]] of a float32 vector: each element widens exactly, so this
+    * equals `vec_dot(cast(a AS array<double>), b)`. */
+  def dot(a: Array[Float], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i).toDouble * b(i); i += 1 }
+    s
+  }
+
+  /** `sqrt(vec_dot(v, v))`, the norm every cosine in the ANN and
+    * retrieval families divides by. */
+  def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
+
   @inline private def mix(z0: Long): Long = {
     var z = z0
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L

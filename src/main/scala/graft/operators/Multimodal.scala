@@ -479,7 +479,7 @@ object Multimodal {
     require(w % 8 == 0 && h % 8 == 0, "encoder expects whole blocks")
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array(0xFF, 0xD8).map(_.toByte)) // SOI
-    out.write(marker(0xE0, "JFIF ".getBytes("US-ASCII") ++
+    out.write(marker(0xE0, "JFIF\u0000".getBytes("US-ASCII") ++
       Array[Byte](1, 1, 0) ++ be16(1) ++ be16(1) ++ Array[Byte](0, 0)))
     out.write(marker(0xDB, Array(0.toByte) ++
       (0 until 64).map(k => JQuant(k).toByte))) // DQT id 0, zigzag order

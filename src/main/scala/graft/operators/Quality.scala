@@ -192,11 +192,11 @@ object Quality {
       .select("doc_id", "r4")
 
   /** Per-(doc, term) BM25 contribution rows — the one quantized
-    * arithmetic shared by [[bm25Score]] and [[bm25ScoreBatch]]. df is
-    * a per-TERM corpus property (counted once from the union tf frame,
-    * never per query — a term shared by two queries must not double
-    * its document frequency). */
-  private def bm25Contrib(tfdl: DataFrame, stats: DataFrame): DataFrame =
+    * arithmetic shared by [[bm25Score]] and [[bm25BatchCandidates]]. df
+    * is a per-TERM corpus property (counted once from the union tf
+    * frame, never per query — a term shared by two queries must not
+    * double its document frequency). */
+  private[operators] def bm25Contrib(tfdl: DataFrame, stats: DataFrame): DataFrame =
     // df as a term-partitioned WINDOW (r14 opt): the former
     // groupBy(term)+broadcast-join consumed `tfdl` twice, and every
     // caller's tfdl is the expensive part — the brute legs re-ran the
@@ -217,98 +217,38 @@ object Quality {
         col("idf") * col("tf") * lit(2.2) / (col("tf") + col("norm")))
       .select(col("doc_id"), col("term"), col("contrib"))
 
-  /** BM25 per (query, doc) over a query BATCH: `tfdl` is the union term
-    * set's (doc_id, term, tf, dl) frame (posting fetch or brute
-    * derivation), `queries` the bounded (query_id, terms) batch.
+  /** BM25 per (query, doc) over a query BATCH, ranked: `tfdl` is the
+    * union term set's (doc_id, term, tf, dl) frame (posting fetch or
+    * brute derivation), `queries` the bounded (query_id, terms) batch;
+    * emits at most `k` (−r4, doc_id)-lowest (query_id, doc_id, r4) rows
+    * per query per partition for the caller's rank tail.
     *
     * SHAPE (r14 optimization): the r13 form broadcast-joined a
     * (query_id, term) table onto the contribution rows (×~|queries·
-    * terms|/|terms| fan-out) and aggregated by (query_id, doc_id) —
-    * at 100 queries × 100x corpus that aggregate had ~20M groups and
-    * its partial hash maps spilled 4.5 GB (the largest spill in the
-    * bench archive). Every batch query has exactly TWO distinct terms,
-    * so instead: fold each doc's contributions into a |terms|-slot
-    * array (ONE doc-keyed aggregate with a flat declarative buffer —
-    * the exchange carries |docs-with-any-term| rows instead of the
-    * fan-out), then score each (query, doc) pair by two array lookups
-    * against the broadcast (query_id, i1, i2) index table. Bitwise-
-    * identical scores: addition of two doubles is commutative, a
-    * missing term contributes coalesce(null, 0.0) and c + 0.0 == c for
-    * every contribution (contribs are products of non-negatives, so
-    * -0.0 never arises); the row set is unchanged (a (query, doc) row
-    * exists iff the doc matched ≥ 1 of the query's terms). Batches with
-    * a query of ≠ 2 terms take the r13 fan-out form, the reference
-    * [[bm25BatchCandidates]] is checked against at any term count.
-    *
-    * KEPT as the equivalence-test twin of [[bm25BatchCandidates]] (the
-    * fused partition kernel the batch path runs since r14). */
-  private[operators] def bm25ScoreBatch(tfdl: DataFrame,
-                                        queries: Seq[(Long, Seq[String])],
-                                        stats: DataFrame): DataFrame = {
-    val s = tfdl.sparkSession
-    import s.implicits._
-    if (!queries.forall(_._2.distinct.size == 2)) {
-      val qterms = queries
-        .flatMap { case (q, ts) => ts.map(t => (q, t)) }
-        .toDF("query_id", "term")
-      return bm25Contrib(tfdl, stats)
-        .join(broadcast(qterms), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(round(sum(col("contrib")), 4).as("r4"))
-        .select("query_id", "doc_id", "r4")
-    }
-    val terms = queries.flatMap(_._2).distinct.sorted
-    val ti = terms.zipWithIndex.toMap
-    val nT = terms.size
-    val tiDf = terms.zipWithIndex.toDF("term", "ti")
-    val slots = (0 until nT).map(i =>
-      max(when(col("ti") === i, col("contrib"))).as(s"c$i"))
-    val perDoc = bm25Contrib(tfdl, stats)
-      .join(broadcast(tiDf), "term")
-      .groupBy("doc_id")
-      .agg(slots.head, slots.tail: _*)
-      .select(col("doc_id"),
-        array((0 until nT).map(i => col(s"c$i")): _*).as("ca"))
-    val qIdx = queries.map { case (q, ts) =>
-      val is = ts.map(ti).sorted; (q, is(0), is(1))
-    }.toDF("query_id", "i1", "i2")
-    perDoc.crossJoin(broadcast(qIdx))
-      .filter(col("ca")(col("i1")).isNotNull ||
-        col("ca")(col("i2")).isNotNull)
-      .select(col("query_id"), col("doc_id"),
-        round(coalesce(col("ca")(col("i1")), lit(0.0)) +
-          coalesce(col("ca")(col("i2")), lit(0.0)), 4).as("r4"))
-  }
-
-  /** [[bm25ScoreBatch]] with the doc-slot aggregate + query cross join
-    * + per-pair tail FUSED into one partition kernel, emitting at most
-    * `k` (−r4, doc_id)-lowest rows per query per partition for the
-    * caller's rank tail (r14; the same per-pair-machinery cure as
-    * SimilarityIvf.ivfBatchCandidates). The engine keeps everything up
-    * to the per-(doc, term) contribution rows ([[bm25Contrib]] + the
-    * term-index join, codegen'd); the kernel then streams the rows
-    * doc-clustered (repartition(doc_id) + sortWithinPartitions — the
-    * same hash exchange the slot aggregate did), folds each doc's
-    * contributions into the |terms| slot array (unique per (doc, term),
-    * so slot assignment IS the max-when fold), scores each query by
-    * `round(sum of its slots, 4)` (fastRound — the engine's own round),
-    * summed from 0.0 in ascending slot order and a repeated term once
-    * per occurrence, as the fan-out join counts it (for two terms that
-    * is the slot aggregate's `c1 + c2` bit for bit: 0.0 + c == c for
-    * the non-negative contributions), keeps a (query, doc) row iff ≥ 1
-    * of the query's terms matched (the crossJoin filter verbatim), and
-    * holds per-query top-k through the SAME
-    * [[graft.functions.TopKOrderedAgg.insert]] comparator the final
-    * aggregate uses with the final's own key
-    * (−round(r4, 6) == −r4: a 4-dp value re-rounds to itself). Every
-    * global top-k member therefore survives its partition, and the
-    * downstream rank tail is row-identical to ranking the full scored
-    * frame ([[bm25ScoreBatch]] stays as the equivalence-test twin). Any
-    * number of terms per query takes this path. */
+    * terms|/|terms| fan-out) and aggregated by (query_id, doc_id) — at
+    * 100 queries × 100x corpus that aggregate had ~20M groups and its
+    * partial hash maps spilled 4.5 GB (the largest spill in the bench
+    * archive). Here the engine keeps everything up to the per-(doc,
+    * term) contribution rows ([[bm25Contrib]] + the term-index join,
+    * codegen'd); one partition kernel then streams the rows
+    * doc-clustered (repartition(doc_id) + sortWithinPartitions — one
+    * hash exchange of |docs-with-any-term| rows), folds each doc's
+    * contributions into a |terms| slot array (unique per (doc, term)),
+    * scores each query by `round(sum of its slots, 4)` (fastRound — the
+    * engine's own round), summed from 0.0 in ascending slot order and a
+    * repeated term once per occurrence, as the fan-out join counts it,
+    * keeps a (query, doc) row iff ≥ 1 of the query's terms matched, and
+    * holds per-query top-k ([[graft.functions.TopKOrderedAgg.Buffers]])
+    * with the final's own key (−round(r4, 6) == −r4: a 4-dp value
+    * re-rounds to itself). Every global top-k member therefore survives
+    * its partition, and the downstream rank tail is row-identical to
+    * ranking the full scored frame (BatchLegTwinSpec checks 1-, 2- and
+    * 3-term batches against the slot-aggregate and fan-out forms). */
   private[operators] def bm25BatchCandidates(tfdl: DataFrame,
                                              queries: Seq[(Long, Seq[String])],
                                              stats: DataFrame,
                                              k: Int): DataFrame = {
+    import graft.functions.{TopKOrderedAgg, VectorKernels}
     val sess = tfdl.sparkSession
     import sess.implicits._
     val terms = queries.flatMap(_._2).distinct.sorted
@@ -327,7 +267,7 @@ object Quality {
       .toDF("_1", "_2", "_3")
       .as[(Long, Int, Double)]
       .mapPartitions { it =>
-        val bufs = Array.fill(qIds.length)(Array.emptyDoubleArray)
+        val top = new TopKOrderedAgg.Buffers(qIds.length, k)
         val slots = new Array[Double](nT)
         val has = new Array[Boolean](nT)
         val touched = new Array[Int](nT)
@@ -346,9 +286,8 @@ object Quality {
               j += 1
             }
             if (hit) {
-              val r4 = graft.functions.VectorKernels.fastRound(sum, pow4, 4)
-              bufs(qi) = graft.functions.TopKOrderedAgg.insert(
-                bufs(qi), k, -r4, curDoc.toDouble, r4)
+              val r4 = VectorKernels.fastRound(sum, pow4, 4)
+              top.offer(qi, -r4, curDoc, r4)
             }
             qi += 1
           }
@@ -366,10 +305,7 @@ object Quality {
           if (!has(slot)) { has(slot) = true; touched(nTouched) = slot; nTouched += 1 }
         }
         if (open) closeDoc()
-        bufs.iterator.zipWithIndex.flatMap { case (buf, qi) =>
-          (0 until buf.length / 3).iterator.map(t =>
-            (qIds(qi), buf(3 * t + 1).toLong, buf(3 * t + 2)))
-        }
+        top.emit((qi, _, doc, r4) => (qIds(qi), doc, r4))
       }
       .toDF("query_id", "doc_id", "r4")
   }

@@ -48,6 +48,12 @@ object Retrieval {
   private val LegK = 20
   private val FusedK = 10
 
+  /** nDCG's normalizer: DCG of the distinct grades 10..1 at ranks
+    * 1..[[FusedK]], a closed-form constant. */
+  private val Idcg = (1 to FusedK)
+    .map(i => (math.pow(2.0, 11.0 - i) - 1.0) / (math.log(i + 1.0) / math.log(2.0)))
+    .sum
+
   /** BM25 scores for [[QueryTerms]] over `documents` — the ONE
     * quantized scorer [[Quality.bm25Score]] over the brute tf
     * derivation, so the lexical leg is the SAME ranking a `text_bm25`
@@ -125,32 +131,21 @@ object Retrieval {
     layout
   }
 
+  /** The hybrid entries' keyword query as a batch of one: the
+    * index-served single-query legs run the batch legs' code. */
+  private[graft] val HybridQuery: Seq[(Long, Seq[String])] = Seq(0L -> QueryTerms)
+
   /** [[lexLeg]] served from the posting layout — identical ranks (same
     * tf/df/dl/stats, same quantized arithmetic, proven by the unchanged
     * exact-hash oracle), but the scan reads only the query terms'
-    * bucket directories: partition pruning on `tb` plus an ordinary
-    * pushed `term IN (...)` filter inside them. The term→bucket hashes
-    * come from a 3-row bounded collect (Spark's own xxhash64, so driver
-    * and layout agree by construction). */
-  private[graft] def postingScores(s: SparkSession, d: String): DataFrame = {
-    val layout = buildPostingLayout(s, d)
-    import s.implicits._
-    val buckets: Seq[Long] = QueryTerms.toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(PostingBuckets)))
-      .collect().map(_.getLong(0)).distinct.toSeq
-    val stats = s.read.parquet(s"${layout}_stats")
-    // the pruned posting fetch yields the same (doc_id, term, tf, dl)
-    // schema the brute derivation produces — one shared scorer
-    val tf = s.read.parquet(layout.toString)
-      .filter(col("tb").isin(buckets: _*))
-      .filter(col("term").isin(QueryTerms: _*))
-      .select("doc_id", "term", "tf", "dl")
-    Quality.bm25Score(tf, stats)
+    * bucket directories: the batch posting fetch ([[batchPostingTf]])
+    * of [[HybridQuery]], scored by the one [[Quality.bm25Score]]. */
+  private def lexLegIndexed(s: SparkSession, d: String): DataFrame = {
+    val stats = s.read.parquet(s"${buildPostingLayout(s, d)}_stats")
+    graft.util.BoundedLocal(rankTopK(
+      Quality.bm25Score(batchPostingTf(s, d, HybridQuery), stats),
+      "doc_id", "r4", LegK, "lex_rank"))
   }
-
-  private def lexLegIndexed(s: SparkSession, d: String): DataFrame =
-    graft.util.BoundedLocal(
-      rankTopK(postingScores(s, d), "doc_id", "r4", LegK, "lex_rank"))
 
   /** Embeddings as (vec_id, v float64). */
   private def emb(s: SparkSession, d: String): DataFrame =
@@ -189,6 +184,22 @@ object Retrieval {
       rankTopK(scored, "doc_id", "r6", LegK, "vec_rank"))
   }
 
+  /** rrf = Σ 1/(60 + rank) over the two legs, an absent leg
+    * contributing 0, rounded to 6 dp. */
+  private def rrf: Column = round(
+    coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(RrfK) + col("vec_rank")), lit(0.0)), 6)
+
+  /** THE single-query RRF fusion — one copy serving the hybrid entries
+    * and nDCG: full-outer join of two (doc_id, *_rank) lists, [[rrf]],
+    * fused top-[[FusedK]]. */
+  private def fuseRrf(lex: DataFrame, vec: DataFrame): DataFrame =
+    lex.join(vec, Seq("doc_id"), "full_outer")
+      .withColumn("rrf", rrf)
+      .orderBy(col("rrf").desc, col("doc_id").asc).limit(FusedK)
+      .select(col("doc_id"), col("lex_rank"), col("vec_rank"), col("rrf"))
+      .orderBy(col("rrf").desc, col("doc_id").asc)
+
   /** Hybrid search: the BM25 leg and the vector leg fused with
     * reciprocal-rank fusion — `rrf = Σ_legs 1/(60 + rank)`, a leg a doc
     * is absent from contributing 0 (Cormack/Clarke/Buettcher 2009; the
@@ -201,18 +212,6 @@ object Retrieval {
     * joined — at any corpus size the fusion stage touches 2·K rows per
     * query; the corpus is only read inside the legs, each of which is
     * index-served at scale (inverted index / ANN layout). */
-  /** THE RRF fusion — one copy serving both hybrid entries and nDCG:
-    * full-outer join of two (doc_id, *_rank) lists, rrf = Σ 1/(60 +
-    * rank) with an absent leg contributing 0, fused top-[[FusedK]]. */
-  private def fuseRrf(lex: DataFrame, vec: DataFrame): DataFrame =
-    lex.join(vec, Seq("doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + col("vec_rank")), lit(0.0)), 6))
-      .orderBy(col("rrf").desc, col("doc_id").asc).limit(FusedK)
-      .select(col("doc_id"), col("lex_rank"), col("vec_rank"), col("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-
   def hybridRrf(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val lex = lexLeg(s, d)
@@ -225,18 +224,19 @@ object Retrieval {
     * terms' ≤3 of 64 buckets — identical ranks to [[lexLeg]], so this
     * substitution leaves the oracle untouched); the vector leg reads
     * ~nprobe/k of the corpus through the IVF layout's static partition
-    * pruning ([[Similarity.ivfVectorLeg]]); fusion is unchanged
-    * (two ≤20-row rank lists). A separate gate entry rather than a twin
-    * because the IVF-pruned top-20 is a different (approximate) leg
-    * ranking, so the fused rows differ from [[hybridRrf]]'s —
-    * RetrievalSpec pins the overlap floor between the two fused lists,
-    * the exact-hash oracle (codebook interpolated, the IVF convention)
-    * pins engine parity. */
+    * pruning ([[ivfLeg]]); fusion is unchanged (two ≤20-row rank
+    * lists). Both legs run the batch legs' code on [[HybridQuery]]. A
+    * separate gate entry rather than a twin because the IVF-pruned
+    * top-20 is a different (approximate) leg ranking, so the fused rows
+    * differ from [[hybridRrf]]'s — RetrievalSpec pins the overlap floor
+    * between the two fused lists, the exact-hash oracle (codebook
+    * interpolated, the IVF convention) pins engine parity. */
   def hybridRrfIvf(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val lex = lexLegIndexed(s, d)
-    val scored = Similarity.ivfVectorLeg(s, d, prfVector(s, d, lex))
-    fuseRrf(lex, rankTopK(scored, "doc_id", "r6", LegK, "vec_rank"))
+    val qv = prfVector(s, d, lex)
+      .select(lit(HybridQuery.head._1).as("query_id"), col("qv"))
+    fuseRrf(lex, ivfLeg(s, d, qv).drop("query_id"))
   }
 
   /** The deterministic query BATCH ([[hybridRrfBatch]]): 12 two-term
@@ -268,40 +268,11 @@ object Retrieval {
       (i + 1).toLong -> Seq(vocab(i % vocab.size), vocab((7 * i + 3) % vocab.size)))
   }
 
-  /** `hybrid_rrf_batch` gate entry — the hybrid stack generalized from
-    * ONE hardcoded query to a 12-query BATCH, both legs index-served
-    * (r12 verdict #3: the O(queries·K) fusion claim and the posting
-    * layout's pruning under a term-set UNION, measured rather than
-    * asserted).
-    *
-    * Leg shapes at scale:
-    *  - LEXICAL: one pruned posting fetch for the UNION of the batch's
-    *    terms (static `tb IN (...)` partition pruning — ≤ |terms| of 64
-    *    bucket dirs read once, shared by all queries), BM25 idf/norm
-    *    computed once per term/doc ([[Quality.bm25ScoreBatch]]), then a
-    *    broadcast (query_id, term) fan-out and ONE (query_id, doc_id)
-    *    aggregate. Adding a query adds only its terms' posting rows —
-    *    leg cost scales with Σ df(term), never with corpus × queries.
-    *  - VECTOR: per-query Rocchio PRF vectors (12 bounded rows) probed
-    *    through the IVF layout with the probed-cell UNION as the scan's
-    *    pruning literal ([[Similarity.ivfVectorLegBatch]]); each query
-    *    scores only its own nprobe cells via the broadcast pair table.
-    *  - RANK/FUSION: per-query top-[[LegK]] via the bounded
-    *    [[Similarity.topKPerQuery]] aggregate (KBs exchanged), then the
-    *    (query_id, doc_id)-keyed full-outer RRF join over 2·K·|queries|
-    *    rows — fusion cost is O(queries·K) regardless of corpus size.
-    * Output: per-query fused top-[[FusedK]] as (query_id, doc_id,
-    * lex_rank, vec_rank, rrf, fused_rank). Exact oracle: the batch is a
-    * VALUES literal, BM25/PRF/cell-probing/fusion replayed per query in
-    * DuckDB with the layout's codebook ([[Similarity.ivfCodebook]]). */
-  /** The batch's pruned posting fetch — the UNION of the 24 terms'
-    * bucket hashes as the scan's static `tb IN (...)` partition-pruning
-    * literal (≤ |terms| of 64 dirs read once, shared by all queries).
-    * Split out so RetrievalSpec can pin the PartitionFilters on the
-    * pre-checkpoint plan. */
-  private[graft] def batchPostingTf(s: SparkSession, d: String): DataFrame =
-    batchPostingTf(s, d, BatchQueries)
-
+  /** The batch's pruned posting fetch — the UNION of the queries'
+    * term-bucket hashes as the scan's static `tb IN (...)`
+    * partition-pruning literal (≤ |terms| of 64 dirs read once, shared
+    * by all queries). Split out so RetrievalSpec can pin the
+    * PartitionFilters on the pre-checkpoint plan. */
   private[graft] def batchPostingTf(s: SparkSession, d: String,
                                     queries: Seq[(Long, Seq[String])])
       : DataFrame = {
@@ -319,6 +290,24 @@ object Retrieval {
       .select("doc_id", "term", "tf", "dl")
   }
 
+  /** Per-query top-[[LegK]] of a fused kernel's (query_id, doc_id,
+    * `score`) candidates as a (query_id, doc_id, `rankName`) rank frame
+    * — the bounded [[Similarity.rankedTopK]] tail over ≤
+    * partitions·|queries|·K candidate rows. */
+  private def legRanks(cands: DataFrame, score: String,
+                       rankName: String): DataFrame =
+    Similarity.rankedTopK(
+      cands.select(col("query_id"), col("doc_id").as("vec_id"),
+        col(score).as("cos")), LegK)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"),
+        col("rank").as(rankName))
+
+  /** The IVF vector leg for a (query_id, qv) frame: the fused
+    * [[Similarity.ivfBatchCandidates]] kernel over the layout's probed
+    * cells, ranked per query as (query_id, doc_id, vec_rank). */
+  private def ivfLeg(s: SparkSession, d: String, qvs: DataFrame): DataFrame =
+    legRanks(Similarity.ivfBatchCandidates(s, d, qvs, LegK), "r6", "vec_rank")
+
   /** The two index-served BATCH legs as (query_id, doc_id, *_rank)
     * rank frames — ONE copy shared by [[hybridRrfBatch]] and
     * [[retrievalNdcgBatch]] (and the |queries|-scaling probe via
@@ -326,19 +315,10 @@ object Retrieval {
   private[graft] def batchLegs(s: SparkSession, d: String,
                                queries: Seq[(Long, Seq[String])])
       : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val layout = buildPostingLayout(s, d)
-    val stats = s.read.parquet(s"${layout}_stats")
+    val stats = s.read.parquet(s"${buildPostingLayout(s, d)}_stats")
     val tf = batchPostingTf(s, d, queries)
-    // scoring + per-partition partial top-k fused (r14, the
-    // ivfBatchCandidates rationale — see Quality.bm25BatchCandidates);
-    // the rank tail over the bounded candidates is unchanged
-    val lexB = Similarity.topKPerQuery(
-      Quality.bm25BatchCandidates(tf, queries, stats, LegK)
-        .select(col("query_id"), col("doc_id").as("vec_id"),
-          col("r4").as("cos")), LegK)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("lex_rank"))
+    val lexB = legRanks(
+      Quality.bm25BatchCandidates(tf, queries, stats, LegK), "r4", "lex_rank")
       // bounded (|queries|·20 rows); consumed by the PRF seed AND the
       // fusion (nDCG adds grade anchors) — driver-local (BoundedLocal)
       .transform(graft.util.BoundedLocal.apply)
@@ -353,24 +333,54 @@ object Retrieval {
       .groupBy("query_id")
       .agg(expr("transform(array_sort(collect_list(struct(pos, m)))," +
         " p -> p.m)").as("qv"))
-      // bounded (|queries| rows); ivfVectorLegBatch collects it for the
-      // probed-cell literals AND embeds it in the returned plan — the
-      // materialization keeps the corpus-wide PRF derivation from
-      // running twice (the same r12-advice class as lexB/vecLeg)
+      // bounded (|queries| rows); ivfBatchCandidates collects it for the
+      // probed-cell literals — the materialization keeps the corpus-wide
+      // PRF derivation from running twice (the same r12-advice class as
+      // lexB/vecLeg)
       .transform(graft.util.BoundedLocal.apply)
-    // scoring + per-partition partial top-k fused into one partition
-    // kernel (r14: the join+aggregate form paid ~20x the dot itself in
-    // per-pair operator machinery — see ivfBatchCandidates); the final
-    // rank tail over the ≤ partitions·|Q|·K candidates is unchanged
-    val vecB = Similarity.topKPerQuery(
-      Similarity.ivfBatchCandidates(s, d, qvs, LegK)
-        .select(col("query_id"), col("doc_id").as("vec_id"),
-          col("r6").as("cos")), LegK)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"),
-        col("rank").as("vec_rank"))
-    (lexB, vecB)
+    (lexB, ivfLeg(s, d, qvs))
   }
 
+  /** THE batch RRF fusion — one copy serving [[hybridRrfBatchN]] and
+    * [[retrievalNdcgBatch]]: the (query_id, doc_id)-keyed full-outer
+    * join of the two rank frames over ≤ 2·K rows per query, [[rrf]],
+    * and the per-query fused_rank ≤ [[FusedK]] (the window partitions
+    * ≤ 40-row groups). */
+  private def fuseRrfBatch(lexB: DataFrame, vecB: DataFrame): DataFrame =
+    lexB.join(vecB, Seq("query_id", "doc_id"), "full_outer")
+      .withColumn("rrf", rrf)
+      .withColumn("fused_rank", row_number().over(
+        Window.partitionBy("query_id")
+          .orderBy(col("rrf").desc, col("doc_id").asc)))
+      .filter(col("fused_rank") <= FusedK)
+
+  /** `hybrid_rrf_batch` gate entry — the hybrid stack generalized from
+    * ONE hardcoded query to a 12-query BATCH, both legs index-served
+    * (r12 verdict #3: the O(queries·K) fusion claim and the posting
+    * layout's pruning under a term-set UNION, measured rather than
+    * asserted).
+    *
+    * Leg shapes at scale:
+    *  - LEXICAL: one pruned posting fetch for the UNION of the batch's
+    *    terms (static `tb IN (...)` partition pruning — ≤ |terms| of 64
+    *    bucket dirs read once, shared by all queries), BM25 idf/norm
+    *    computed once per term/doc, then one doc-clustered partition
+    *    kernel scoring every query and keeping its per-partition top-K
+    *    ([[Quality.bm25BatchCandidates]]). Adding a query adds only its
+    *    terms' posting rows — leg cost scales with Σ df(term), never
+    *    with corpus × queries.
+    *  - VECTOR: per-query Rocchio PRF vectors (12 bounded rows) probed
+    *    through the IVF layout with the probed-cell UNION as the scan's
+    *    pruning literal; each query scores only its own nprobe cells
+    *    inside one partition kernel ([[Similarity.ivfBatchCandidates]]).
+    *  - RANK/FUSION: per-query top-[[LegK]] via the bounded
+    *    [[Similarity.rankedTopK]] aggregate (KBs exchanged), then the
+    *    (query_id, doc_id)-keyed full-outer RRF join over 2·K·|queries|
+    *    rows — fusion cost is O(queries·K) regardless of corpus size.
+    * Output: per-query fused top-[[FusedK]] as (query_id, doc_id,
+    * lex_rank, vec_rank, rrf, fused_rank). Exact oracle: the batch is a
+    * VALUES literal, BM25/PRF/cell-probing/fusion replayed per query in
+    * DuckDB with the layout's codebook ([[Similarity.ivfCodebook]]). */
   def hybridRrfBatch(s: SparkSession, d: String): DataFrame =
     hybridRrfBatchN(s, d, BatchQueries)
 
@@ -393,16 +403,7 @@ object Retrieval {
       : DataFrame = {
     reg(s)
     val (lexB, vecB) = batchLegs(s, d, queries)
-    // (query_id, doc_id)-keyed RRF fusion over ≤ 2·K rows per query;
-    // the per-query fused rank window partitions ≤ 40-row groups
-    lexB.join(vecB, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + col("vec_rank")), lit(0.0)), 6))
-      .withColumn("fused_rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("rrf").desc, col("doc_id").asc)))
-      .filter(col("fused_rank") <= FusedK)
+    fuseRrfBatch(lexB, vecB)
       .select(col("query_id"), col("doc_id"), col("lex_rank"),
         col("vec_rank"), col("rrf"), col("fused_rank"))
       .orderBy("query_id", "fused_rank")
@@ -413,27 +414,6 @@ object Retrieval {
   private val MmrQueryId = 42L
   private val MmrK = 5
 
-  /** Spark's `round(x, 6)` for doubles, replicated for the driver-local
-    * greedy: the interpreted path is
-    * `BigDecimal(d).setScale(6, HALF_UP).toDouble` (RoundBase), and
-    * codegen is pinned to agree with it by Spark's own expression
-    * tests — so this is the one rounding every engine-side 6-dp value
-    * already went through. */
-  private def round6(x: Double): Double =
-    scala.math.BigDecimal(x)
-      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** The sequential dot-product fold of the `vec_dot` kernel
-    * ([[graft.functions.VectorExprs.VecDot]]: ascending-index `s +=
-    * a(i)*b(i)`), replicated for the driver-local greedy — identical
-    * IEEE result by construction. */
-  private def dotLocal(a: Array[Double], b: Array[Double]): Double = {
-    val n = math.min(a.length, b.length)
-    var s = 0.0; var i = 0
-    while (i < n) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
   /** Driver-local MMR greedy over a bounded per-query shortlist (r14
     * optimization): the [[MmrK]] rounds previously ran as driver-
     * SCHEDULED join/window rounds — measured at sf0.1,
@@ -443,9 +423,8 @@ object Retrieval {
     * SAME IEEE ops the Spark loop ran (λ·rel − (1−λ)·max sim — JVM
     * doubles either way), so it runs on the driver in O(queries·K²).
     * `quant` is applied to each round's mmr before comparing/emitting
-    * (the single-query twin quantizes to 6 dp inside the loop per its
-    * oracle; the batch keeps full mantissa — identity). Ties break to
-    * the lowest vec_id, exactly as the `row_number` ordering did.
+    * (see [[mmrPicks]]). Ties break to the lowest vec_id, exactly as
+    * the `row_number` ordering did.
     * Returns (query_id, pick, vec_id, rel, mmr) rows in (query, pick)
     * order. */
   private def mmrGreedy(
@@ -470,6 +449,64 @@ object Retrieval {
       selected.map { case (r, id, rel, mmr) => (q, r, id, rel, mmr) }
     }
 
+  /** Greedy MMR picks for each query id in `ids` (the query is that
+    * vec_id's own embedding) as (query_id, pick, vec_id, rel, mmr) rows,
+    * rel and mmr rounded to 6 dp on output — the one path serving
+    * [[retrievalMmr]] (a batch of one) and [[retrievalMmrBatch]].
+    * Candidate discovery is ONE corpus scan broadcast-joined against the
+    * query vectors with the bounded [[Similarity.rankedTopK]] tail
+    * (per-query top-[[LegK]] by the 6dp-rounded cosine, ties to the
+    * lowest vec_id — the oracles' `cand` ranking); rel and the raw
+    * vectors are then re-derived for just the |ids|·LegK shortlist
+    * rows, collected (bounded: vectors included, K and |ids| are code
+    * constants), and the [[MmrK]] greedy rounds run driver-locally
+    * ([[mmrGreedy]]) over each query's own shortlist.
+    *
+    * `quant` is applied to rel, to every pairwise sim (the ascending
+    * [[graft.functions.VectorKernels.dot]] fold, bit-identical to
+    * `vec_dot`) and to each round's mmr before the greedy compares them.
+    * The single-query entry's oracle rounds all three to 6 dp; the
+    * batch keeps FULL MANTISSA (identity): a 6dp-rounded rel is an exact
+    * 1e-6 multiple, so λ·rel lands EXACTLY on a 7th-decimal rounding
+    * half-boundary whenever rel's last digit is odd — where Spark's
+    * shortest-repr HALF_UP and DuckDB's true-double rounding disagree
+    * (caught in pre-validation at sf0.01). Sequential dot/sqrt folds are
+    * bit-identical across engines, so unrounded scores keep
+    * full-mantissa distance from every boundary; only the output
+    * columns round. */
+  private def mmrPicks(s: SparkSession, d: String, ids: Seq[Long],
+                       quant: Double => Double): DataFrame = {
+    import graft.functions.VectorKernels.{dot => dotV, norm}
+    val e = emb(s, d)
+    val qs = e.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        sqrt(dot(col("v"), col("v"))).as("qn"))
+    def relTo(df: DataFrame): DataFrame = df
+      .withColumn("rel",
+        dot(col("v"), col("qv")) / (sqrt(dot(col("v"), col("v"))) * col("qn")))
+    val scored = relTo(e.crossJoin(broadcast(qs))
+      .filter(col("vec_id") =!= col("query_id")))
+      .select(col("query_id"), col("vec_id"), col("rel").as("cos"))
+    val top = Similarity.rankedTopK(scored, LegK)
+      .select(col("query_id"), col("neighbor_id").as("vec_id"))
+    val cand = relTo(e.join(broadcast(top), Seq("vec_id"))
+      .join(broadcast(qs), Seq("query_id")))
+      .select(col("query_id"), col("vec_id"), col("v"), col("rel"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        r.getSeq[Double](2).toArray, r.getDouble(3)))
+    val vOf = cand.map(c => (c._1, c._2) -> c._3).toMap
+    def sim(q0: Long, a: Long, b: Long): Double = {
+      val va = vOf((q0, a)); val vb = vOf((q0, b))
+      quant(dotV(va, vb) / (norm(va) * norm(vb)))
+    }
+    import s.implicits._
+    mmrGreedy(cand.toSeq.map(c => (c._1, c._2, quant(c._4))), sim, quant)
+      .toDF("query_id", "pick", "vec_id", "rel", "mmr")
+      .select(col("query_id"), col("pick"), col("vec_id"),
+        round(col("rel"), 6).as("rel"), round(col("mmr"), 6).as("mmr"))
+  }
+
   /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein 1998):
     * greedily pick 5 of the query's top-20 cosine candidates, each round
     * choosing the candidate maximizing λ·rel − (1−λ)·max(sim to already
@@ -481,45 +518,15 @@ object Retrieval {
     * CTEs (the ann_hnsw beam convention). Output: (pick 1..5, vec_id,
     * rel, mmr) where round 1's mmr is λ·rel (empty selected set).
     *
-    * Plan shape: ONE corpus-shaped stage (the top-20 candidate scan —
-    * at scale, any ANN index); everything after operates on the 20-row
-    * candidate frame (20×19 pairwise sims, 5 driver-scheduled bounded
-    * rounds — k and K are constants, so the loop is O(1) tiny-frame
-    * jobs, no collect, no corpus work). */
-  /** KEPT as the documented oracle twin of [[retrievalMmrBatch]] (r13
-    * verdict #2): same greedy, 6dp-quantized scores (the batch keeps
-    * full mantissa — see its boundary note); RetrievalSpec pins the
-    * pick-sequence agreement on the shared query id 42. */
+    * [[retrievalMmrBatch]]'s path as a batch of one, with every score
+    * 6dp-rounded by `fastRound` (Spark's own `round`); RetrievalSpec
+    * pins the pick-sequence agreement with the batch on id 42. */
   def retrievalMmr(s: SparkSession, d: String): DataFrame = {
     reg(s)
-    import s.implicits._
-    val e = emb(s, d)
-    val q = e.filter(col("vec_id") === MmrQueryId)
-      .select(col("v").as("qv"), sqrt(dot(col("v"), col("v"))).as("qn"))
-    // the ONE corpus-shaped stage: top-20 candidates by 6dp cosine.
-    // Bounded collect (LegK rows incl. vectors) — the 5 greedy rounds
-    // then run driver-locally ([[mmrGreedy]]); the round loop used to
-    // cost ~25 tiny driver jobs with a per-round lineage double.
-    val cand = e.filter(col("vec_id") =!= MmrQueryId)
-      .crossJoin(broadcast(q))
-      .withColumn("rel", round(
-        dot(col("v"), col("qv")) / (sqrt(dot(col("v"), col("v"))) * col("qn")),
-        6))
-      .orderBy(col("rel").desc, col("vec_id").asc).limit(LegK)
-      .select(col("vec_id"), col("v"), col("rel"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    // pairwise 6dp sims over the 20-row shortlist, same quantized
-    // arithmetic the in-frame round()/vec_dot produced
-    val vOf = cand.map(c => c._1 -> c._2).toMap
-    def sim(q0: Long, a: Long, b: Long): Double = {
-      val va = vOf(a); val vb = vOf(b)
-      round6(dotLocal(va, vb) /
-        (math.sqrt(dotLocal(va, va)) * math.sqrt(dotLocal(vb, vb))))
-    }
-    mmrGreedy(cand.toSeq.map(c => (MmrQueryId, c._1, c._3)), sim, round6)
-      .map { case (_, pick, id, rel, mmr) => (pick, id, rel, mmr) }
-      .toDF("pick", "vec_id", "rel", "mmr")
+    val pow6 = math.pow(10.0, 6)
+    mmrPicks(s, d, Seq(MmrQueryId),
+      graft.functions.VectorKernels.fastRound(_, pow6, 6))
+      .select("pick", "vec_id", "rel", "mmr")
       .orderBy("pick")
   }
 
@@ -563,17 +570,13 @@ object Retrieval {
       .select(col("vec_id").as("doc_id"), col("r6"))
     val grades = rankTopK(graded, "doc_id", "r6", FusedK, "grank")
       .select(col("doc_id"), (lit(11) - col("grank")).cast("double").as("grade"))
-    // IDCG over the distinct grades 10..1 — a closed-form constant
-    val idcg = (1 to FusedK)
-      .map(i => (math.pow(2.0, 11.0 - i) - 1.0) / (math.log(i + 1.0) / math.log(2.0)))
-      .sum
     def legNdcg(leg: DataFrame, rankCol: String, name: String): DataFrame =
       leg.filter(col(rankCol) <= FusedK)
         .join(broadcast(grades), Seq("doc_id"), "left_outer")
         .withColumn("g", coalesce(col("grade"), lit(0.0)))
         .agg(round(
           sum((pow(lit(2.0), col("g")) - 1.0) /
-            (log(col(rankCol) + 1.0) / log(lit(2.0)))) / lit(idcg), 6)
+            (log(col(rankCol) + 1.0) / log(lit(2.0)))) / lit(Idcg), 6)
           .as("ndcg"))
         .select(lit(name).as("leg"), col("ndcg"))
     legNdcg(lex, "lex_rank", "lex")
@@ -591,66 +594,18 @@ object Retrieval {
 
   /** `retrieval_mmr_batch` gate entry — [[retrievalMmr]] generalized to
     * a 10-query batch (r13 verdict #2): per-query greedy MMR over each
-    * query's OWN ≤[[LegK]]-row shortlist. Candidate discovery is ONE
-    * corpus scan broadcast-joined against the 10 query vectors with the
-    * bounded [[Similarity.topKPerQuery]] tail (no per-query full-stream
-    * window); everything after — the 200-row candidate frame, the
-    * per-query 20×19 pairwise sims, the [[MmrK]] greedy rounds — is
-    * bounded by queries·K², so the loop stays O(1) tiny-frame jobs at
-    * any corpus size. Output: (query_id, pick 1..5, vec_id, rel, mmr).
-    * Exact static oracle: the rounds unroll as per-query-partitioned
-    * CTEs ([[mmrBatchOracle]]). */
+    * query's OWN ≤[[LegK]]-row shortlist at full mantissa
+    * ([[mmrPicks]]). Everything after the one corpus scan — the 200-row
+    * candidate frame, the per-query 20×19 pairwise sims, the [[MmrK]]
+    * greedy rounds — is bounded by queries·K², so it stays driver-local
+    * at any corpus size (the Spark round loop it replaced cost ~25 tiny
+    * driver jobs: 4.2 s of job wall on 0.2 s of task CPU at sf0.1).
+    * Output: (query_id, pick 1..5, vec_id, rel, mmr). Exact static
+    * oracle: the rounds unroll as per-query-partitioned CTEs
+    * ([[mmrBatchOracle]]). */
   def retrievalMmrBatch(s: SparkSession, d: String): DataFrame = {
     reg(s)
-    val e = emb(s, d)
-    val qs = e.filter(col("vec_id").isin(MmrBatchIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        sqrt(dot(col("v"), col("v"))).as("qn"))
-    // FULL-MANTISSA internals (unlike the single-query twin, which
-    // rounds rel/sim to 6dp before the greedy arithmetic): a 6dp-rounded
-    // rel is an exact 1e-6 multiple, so λ·rel lands EXACTLY on a
-    // 7th-decimal rounding half-boundary whenever rel's last digit is
-    // odd — where Spark's shortest-repr HALF_UP and DuckDB's
-    // true-double rounding disagree (caught in pre-validation at
-    // sf0.01). Sequential dot/sqrt folds are bit-identical across
-    // engines, so unrounded scores keep full-mantissa distance from
-    // every boundary; only the OUTPUT columns round.
-    def relTo(df: DataFrame): DataFrame = df
-      .withColumn("rel",
-        dot(col("v"), col("qv")) / (sqrt(dot(col("v"), col("v"))) * col("qn")))
-    val scored = relTo(e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id")))
-      .select(col("query_id"), col("vec_id"), col("rel").as("cos"))
-    // per-query top-20 ids via the bounded aggregate (which ranks by
-    // the 6dp-ROUNDED cosine, ties to lowest vec_id — replayed as the
-    // oracle cand CTE's ranking), then rel and the raw vectors
-    // re-derived for just the 10·20 shortlist rows
-    val top = Similarity.topKPerQuery(scored, LegK)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-    // bounded collect (|queries|·LegK rows incl. vectors): the
-    // [[MmrK]] greedy rounds run driver-locally over each query's own
-    // shortlist ([[mmrGreedy]] — full mantissa per the note above);
-    // the Spark round loop previously cost ~25 tiny driver jobs
-    // (measured 4.2 s of job wall on 0.2 s of task CPU at sf0.1)
-    val cand = relTo(e.join(broadcast(top), Seq("vec_id"))
-      .join(broadcast(qs), Seq("query_id")))
-      .select(col("query_id"), col("vec_id"), col("v"), col("rel"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        r.getSeq[Double](2).toArray, r.getDouble(3)))
-    val vOf = cand.map(c => (c._1, c._2) -> c._3).toMap
-    // full-mantissa pairwise sims — the vec_dot/sqrt fold verbatim
-    def sim(q0: Long, a: Long, b: Long): Double = {
-      val va = vOf((q0, a)); val vb = vOf((q0, b))
-      dotLocal(va, vb) /
-        (math.sqrt(dotLocal(va, va)) * math.sqrt(dotLocal(vb, vb)))
-    }
-    import s.implicits._
-    mmrGreedy(cand.toSeq.map(c => (c._1, c._2, c._4)), sim, identity)
-      .toDF("query_id", "pick", "vec_id", "rel", "mmr")
-      .select(col("query_id"), col("pick"), col("vec_id"),
-        round(col("rel"), 6).as("rel"), round(col("mmr"), 6).as("mmr"))
-      .orderBy("query_id", "pick")
+    mmrPicks(s, d, MmrBatchIds, identity).orderBy("query_id", "pick")
   }
 
   /** `retrieval_ndcg_batch` gate entry — [[retrievalNdcg]] generalized
@@ -663,19 +618,12 @@ object Retrieval {
     * query_id = −1 per-leg MEAN rows — the tracking metric an eval
     * dashboard actually plots. Grade anchors are |queries| bounded
     * rows; the exact grade scan is corpus × |queries| map-only work
-    * with a bounded [[Similarity.topKPerQuery]] tail (the offline-eval
+    * with a bounded [[Similarity.rankedTopK]] tail (the offline-eval
     * twin of the serving legs' index-pruned scans). */
   def retrievalNdcgBatch(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val (lexB, vecB) = batchLegs(s, d, BatchQueries)
-    val fused = lexB.join(vecB, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(RrfK) + col("lex_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + col("vec_rank")), lit(0.0)), 6))
-      .withColumn("fused_rank", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("rrf").desc, col("doc_id").asc)))
-      .filter(col("fused_rank") <= FusedK)
+    val fused = fuseRrfBatch(lexB, vecB)
       .select("query_id", "doc_id", "fused_rank")
     val anchors = lexB.filter(col("lex_rank") === 1)
       .select(col("query_id"), col("doc_id").as("vec_id"))
@@ -689,12 +637,9 @@ object Retrieval {
         6))
       .select(col("query_id"), col("vec_id"), col("r6").as("cos"))
     val grades = graft.util.BoundedLocal(
-      Similarity.topKPerQuery(graded, FusedK)
+      Similarity.rankedTopK(graded, FusedK)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           (lit(11) - col("rank")).cast("double").as("grade")))
-    val idcg = (1 to FusedK)
-      .map(i => (math.pow(2.0, 11.0 - i) - 1.0) / (math.log(i + 1.0) / math.log(2.0)))
-      .sum
     // ndcg stays FULL-MANTISSA through the mean: a mean of 6dp-rounded
     // values is a rational with denominator 12e6 that lands EXACTLY on
     // a rounding half-boundary for ~1/12 of leg draws (the MMR-batch
@@ -706,7 +651,7 @@ object Retrieval {
         .withColumn("g", coalesce(col("grade"), lit(0.0)))
         .groupBy("query_id")
         .agg((sum((pow(lit(2.0), col("g")) - 1.0) /
-            (log(col(rankCol) + 1.0) / log(lit(2.0)))) / lit(idcg))
+            (log(col(rankCol) + 1.0) / log(lit(2.0)))) / lit(Idcg))
           .as("ndcg_full"))
         .select(col("query_id"), lit(name).as("leg"), col("ndcg_full"))
     val per = graft.util.BoundedLocal(
@@ -828,10 +773,7 @@ object Retrieval {
      SELECT pick, vec_id, rel, mmr FROM sel$MmrK ORDER BY pick"""
   }
 
-  private val ndcgOracle: String = {
-    val idcg = (1 to FusedK)
-      .map(i => (math.pow(2.0, 11.0 - i) - 1.0) / (math.log(i + 1.0) / math.log(2.0)))
-      .sum
+  private val ndcgOracle: String =
     s"""WITH $legCtes,
      fused0 AS (
        SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
@@ -865,10 +807,15 @@ object Retrieval {
        SELECT 'fused' AS leg, doc_id, fused_rank AS rnk FROM fused)
      SELECT l.leg,
        round(sum((pow(2.0, coalesce(g.grade, 0.0)) - 1.0)
-         / (ln(l.rnk + 1.0) / ln(2.0))) / $idcg, 6) AS ndcg
+         / (ln(l.rnk + 1.0) / ln(2.0))) / $Idcg, 6) AS ndcg
      FROM legs l LEFT JOIN grades g USING (doc_id)
      GROUP BY l.leg ORDER BY l.leg"""
-  }
+
+  /** The IVF codebook as the oracles' `cells(cell, c)` VALUES rows. */
+  private def cellValues(cents: Array[Array[Double]]): String =
+    cents.zipWithIndex
+      .map { case (c, i) => s"($i, ${c.mkString("[", ",", "]")})" }
+      .mkString(",\n")
 
   /** DuckDB replay of [[hybridRrfIvf]]: the leg CTEs (BM25 ranks + PRF
     * vector), then the IVF codebook as a VALUES literal — cell
@@ -876,12 +823,9 @@ object Retrieval {
     * nprobe nearest cells, cosine over candidates in probed cells, and
     * the identical RRF fusion. */
   private def hybridIvfOracle(cents: Array[Array[Double]]): String = {
-    val vals = cents.zipWithIndex
-      .map { case (c, i) => s"($i, ${c.mkString("[", ",", "]")})" }
-      .mkString(",\n")
     val np = Similarity.IvfNProbe
     s"""WITH $legCtes,
-     cells(cell, c) AS (VALUES $vals),
+     cells(cell, c) AS (VALUES ${cellValues(cents)}),
      dist AS (
        SELECT e.vec_id, e.v, cl.cell,
          list_sum(list_transform(generate_series(1, len(cl.c)),
@@ -954,9 +898,6 @@ object Retrieval {
       .mkString(", ")
     val termList = queries.flatMap(_._2).distinct
       .map(t => s"'$t'").mkString(", ")
-    val cvals = cents.zipWithIndex
-      .map { case (c, i) => s"($i, ${c.mkString("[", ",", "]")})" }
-      .mkString(",\n")
     val np = Similarity.IvfNProbe
     s"""queries AS (
        SELECT CAST(q AS BIGINT) AS query_id, t AS term
@@ -997,7 +938,7 @@ object Retrieval {
          SELECT query_id, pos, round(avg(x), 6) AS m FROM qvx
          GROUP BY 1, 2)
        GROUP BY query_id),
-     cells(cell, c) AS (VALUES $cvals),
+     cells(cell, c) AS (VALUES ${cellValues(cents)}),
      dist AS (
        SELECT e.vec_id, e.v, cl.cell,
          list_sum(list_transform(generate_series(1, len(cl.c)),
@@ -1035,7 +976,7 @@ object Retrieval {
 
   /** DuckDB replay of [[retrievalMmrBatch]]: the [[mmrOracle]] greedy
     * rounds with every CTE partitioned by query_id — candidates ranked
-    * per query (by the 6dp-rounded cosine, the topKPerQuery ranking),
+    * per query (by the 6dp-rounded cosine, the rankedTopK ranking),
     * pairwise sims within each query's shortlist, each round picking
     * every query's argmax simultaneously. Scores stay FULL-MANTISSA
     * through the greedy arithmetic (see the Spark side's boundary
@@ -1101,10 +1042,7 @@ object Retrieval {
     * per-query fused ranks, per-query grade standards (exact cosine to
     * each query's lexical top-1 embedding), nDCG per (query, leg), and
     * the query_id = −1 per-leg means. */
-  private def ndcgBatchOracle(cents: Array[Array[Double]]): String = {
-    val idcg = (1 to FusedK)
-      .map(i => (math.pow(2.0, 11.0 - i) - 1.0) / (math.log(i + 1.0) / math.log(2.0)))
-      .sum
+  private def ndcgBatchOracle(cents: Array[Array[Double]]): String =
     s"""WITH ${batchLegCtes(cents)},
      fused0 AS (
        SELECT coalesce(lex.query_id, vec.query_id) AS query_id,
@@ -1145,7 +1083,7 @@ object Retrieval {
      per AS (
        SELECT l.query_id, l.leg,
          sum((pow(2.0, coalesce(g.grade, 0.0)) - 1.0)
-           / (ln(l.rnk + 1.0) / ln(2.0))) / $idcg AS ndcg_full
+           / (ln(l.rnk + 1.0) / ln(2.0))) / $Idcg AS ndcg_full
        FROM legs l LEFT JOIN grades g
          ON g.query_id = l.query_id AND g.doc_id = l.doc_id
        GROUP BY 1, 2)
@@ -1155,7 +1093,6 @@ object Retrieval {
        round(avg(ndcg_full), 6) AS ndcg
      FROM per GROUP BY leg
      ORDER BY query_id, leg"""
-  }
 
   /** Oracles of dataset `d`; the IVF-leg entries interpolate the
     * codebook their layout serves from ([[Similarity.ivfCodebook]]). */

@@ -186,50 +186,16 @@ object Similarity extends SimilarityIvf with SimilarityQuant
     rankedTopK(scored, 5)
   }
 
-  /** Bounded per-group top-k as a MERGEABLE partial+final aggregate —
-    * the scale-correct form of
-    * `row_number() OVER (PARTITION BY g ORDER BY key, id) <= k`: the
-    * window shuffles EVERY scored row to its group's reducer
-    * (corpus-proportional in the ANN family), where this keeps at most
-    * k (key, id, payload) triples per group per partition, so the only
-    * exchange carries k-bounded partial states (~KBs). Ordering is
-    * (key asc, id asc) — callers negate the key for descending; the
-    * payload rides along for output (e.g. the unrounded cosine). */
-  private[operators] final class TopKOrdered(cap: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Double, Long, Double), Array[Double], Array[(Long, Double)]] {
-    // Buffer = FLAT primitive Array[Double] of (key, id, payload)
-    // triples, ascending by (key, id) — ~1/3 the boxed-tuple footprint
-    // (r13: the 2M-wide shortlist state at 1M hash-aggregate groups per
-    // task OOM'd the 24g probe heap under the boxed encoding; flat
-    // k=16 costs what boxed k=8 did). Ids ride as doubles — exact for
-    // ids < 2^53, the same representation the sort KEY already used.
-    // State logic is the shared [[graft.functions.TopKOrderedAgg]]
-    // core — this Aggregator form is the equivalence-test twin of the
-    // native expression the query paths run (r14: the udaf wrapper's
-    // per-row encoder machinery was ~half the batch scoring stage CPU).
-    def zero: Array[Double] = Array.empty
-    def reduce(buf: Array[Double], x: (Double, Long, Double)): Array[Double] =
-      graft.functions.TopKOrderedAgg.insert(buf, cap, x._1, x._2.toDouble, x._3)
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-      graft.functions.TopKOrderedAgg.mergeSorted(a, b, cap)
-    def finish(buf: Array[Double]): Array[(Long, Double)] =
-      Array.tabulate(buf.length / 3)(i =>
-        (buf(3 * i + 1).toLong, buf(3 * i + 2)))
-    def bufferEncoder: org.apache.spark.sql.Encoder[Array[Double]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[Double]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[(Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Array[(Long, Double)]]()
-  }
-
   /** The standard ANN result tail — per-query top-k by
     * (round(cos, 6) desc, vec_id asc) emitting (query_id, rank,
-    * neighbor_id, round(cos, 5)) — via [[TopKOrdered]] instead of a
-    * row_number window. Row-identical to the window form (same ordering
-    * and tie-break); the per-partition partial keeps k rows per query,
-    * so at 50M vectors the exchange carries KBs, not the scored set.
+    * neighbor_id, round(cos, 5)) — as the bounded `topk_ordered`
+    * partial+final aggregate ([[graft.functions.TopKOrderedAgg]]), the
+    * scale-correct form of `row_number() OVER (PARTITION BY query_id
+    * ORDER BY ...) <= k`. Row-identical to the window form (same
+    * ordering and tie-break), but the window shuffles EVERY scored row
+    * to its query's reducer, where the per-partition partial keeps k
+    * rows per query, so at 50M vectors the exchange carries KBs, not
+    * the scored set.
     *
     * FALLBACK CAVEAT (r12 probe forensics): ObjectHashAggregate falls
     * back to SORT-based aggregation past
@@ -238,11 +204,12 @@ object Similarity extends SimilarityIvf with SimilarityQuant
     * (the graph BUILD's per-vector top-M; queries group by 10 ids and
     * never hit this) the fallback SORTS the whole scored stream per
     * partition (measured: 2.7 GB of sorter spill at a 50k-vector build,
-    * ~full-stream disk at 500k). Because TopKOrdered's state is
-    * k-BOUNDED, the hash map costs only ~400 B x groups-per-partition,
-    * so the session mains raise the threshold to 1M (~400 MB/task worst
-    * case) and the build streams through the map with zero sort — a
-    * production deployment should carry the same setting on build jobs. */
+    * ~full-stream disk at 500k). Because the state is k-BOUNDED, the
+    * hash map costs only ~400 B x groups-per-partition, so the entries
+    * that group by vector declare a 65536 threshold, set per query
+    * through `SparkEntry.hashAggregated`, and the build streams through
+    * the map with zero sort — a production deployment should carry the
+    * same setting on build jobs. */
   private[operators] def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
     // key/id/payload pre-projected to plain columns: the key arithmetic
     // runs in the upstream codegen span and the aggregate reads

@@ -24,7 +24,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * shuffle equi-join on the bucket id — each bucket's candidates
     * co-locate, candidate volume is sum over buckets of
     * |bucket| x |probers|, never corpus^2, and the per-query top-3 is
-    * the bounded [[TopKOrdered]] aggregate (the exchange carries <= 3
+    * the bounded `topk_ordered` aggregate (the exchange carries <= 3
     * rows per query — output-sized). Each (query, neighbor) pair matches at
     * most once (a vector lives in ONE bucket; the 9 probed ids are
     * distinct), so no dedup step is needed. Interpolated plane
@@ -306,7 +306,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * the biggest bucket O(n) rows in a single-task sort that no
     * plane-count growth fixes, since identical vectors share every
     * sign bit at any P). Here each partition keeps at most cap ids per
-    * bucket ([[TopKOrdered]]), the one exchange carries cap-bounded
+    * bucket (`topk_ordered`), the one exchange carries cap-bounded
     * ids-only partial states, and callers re-join vectors only for the
     * capped representatives. The selected set is identical by
     * construction (same lowest-ids-per-bucket rule; the double sort
@@ -331,7 +331,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     * bucket-keyed shuffle of (P+1) ids+vector probe rows per vector
     * (≈ n·(P+1) rows — linear in n with a log-n factor), candidates
     * scored inside the joined stage by the native kernel, and the
-    * per-vector top-M taken by the BOUNDED [[TopKOrdered]] partial+final
+    * per-vector top-M taken by the BOUNDED `topk_ordered` partial+final
     * aggregate — the scored pair stream is never shuffled. Undirected
     * closure is one ids-only exchange of n·M edges. This is the build
     * the fixed-family gate variant's auditAtBase note promises: candidate
@@ -383,7 +383,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     // once: the XOR mask is determined by bq^bc) while (a) each
     // query's packed vector crosses the wire ONCE instead of (P+1)
     // times, and (b) every candidate for a query lands in the query's
-    // OWN bucket partition, so the bounded TopKOrdered partial
+    // OWN bucket partition, so the bounded topk_ordered partial
     // aggregate emits ONE state per query instead of one per probed
     // partition — measured at 500k vectors: the r13 query-side-exploded
     // form shuffled 2.44 GB (probe stream 7M×~270 B + ~(P+1) partial
@@ -405,7 +405,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     // stream (hundreds of MB of sorter spill per decade for rows the
     // join could stream); hashing the per-partition slice of the query
     // side (~n/partitions rows) costs MBs and the candidate stream is
-    // never sorted. The scored output feeds the bounded TopKOrdered
+    // never sorted. The scored output feeds the bounded topk_ordered
     // partial aggregate map-side (see [[rankedTopK]]'s fallback note).
     rankedTopK(
       qside.hint("shuffle_hash").join(candSide, Seq("bkt"))
@@ -548,7 +548,7 @@ private[operators] trait SimilarityGraph { this: Similarity.type =>
     // the exact build, codes re-joined for capped representatives only;
     // probe explosion INVERTED onto the capped side (flip symmetry —
     // see [[graphFwdEdgesScaled]]), so each query's code crosses the
-    // wire once and its TopKOrdered partial state is emitted once
+    // wire once and its topk_ordered partial state is emitted once
     val capped = eb.select(col("vec_id"), col("code"), col("n"))
       .join(
         cappedBucketIds(eb).select(col("vec_id").as("capped_id"), col("bkt")),

@@ -10,7 +10,7 @@ import graft.util.Tables
   * by family (r12 verdict #7 — pure move, no behavior change): k-means
   * codebook training, IVF search + the cell-partitioned write-time
   * layout, metadata-filtered ANN (pre-filter below the cell join), the
-  * hybrid retrieval stack's single-query and batch IVF vector legs,
+  * hybrid retrieval stack's IVF vector leg,
   * layout introspection, and the IVF oracle builders. Mixed into
   * `object Similarity`; all gate keys and member names are
   * unchanged. */
@@ -253,16 +253,6 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
        FROM assigned GROUP BY 1 ORDER BY 1"""
   }
 
-  /** `ann_ivf_sq8` gate entry: IVF cell pruning × SQ8 packed bytes over
-    * the write-time layout. The scan reads ONLY the probed cells'
-    * packed-code rows (the probed-cell list is a driver-computed
-    * LITERAL isin filter — static partition pruning, the
-    * [[annIvfPqBucketed]] convention) and scores them with the fused
-    * `sq8_dot` decode-dot kernel; the 64-id shortlist is the bounded
-    * [[TopKOrdered]] aggregate and only those ids touch the
-    * full-precision base table for the exact re-rank. Exact oracle:
-    * codebook + bounds interpolated ([[ivfCodebook]]), DuckDB replays cell assignment, nprobe probing, the
-    * identical quantize/dequantize arithmetic, and both rankings. */
   /** Driver-side replica of the `vec_probe_cells` kernel: the `nprobe`
     * nearest centroids of `v`, ties (d2 asc, cell asc) — used wherever
     * a probed-cell list must become a pruning LITERAL (bounded driver
@@ -333,128 +323,49 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
     rankedTopK(scored, 5)
   }
 
-  /** IVF-served vector leg for the hybrid retrieval stack
-    * ([[Retrieval.hybridRrfIvf]]): cosine scores to the 1-row query-
-    * vector frame, restricted to the query's nprobe nearest cells of
-    * the write-time IVF layout — at 100 TB the leg reads ~nprobe/k of
-    * the corpus via partition pruning where [[Retrieval.hybridRrf]]'s
-    * in-memory leg scans it all. The query vector is ONE row (the PRF
-    * mean), so the bounded collect turns the probed-cell list into a
-    * literal isin → static partition pruning at the scan (the
-    * [[annIvfSq8]] convention). Returns (doc_id, r6) scored candidates;
-    * the caller ranks and fuses. The layout's codebook is
-    * [[ivfCodebook]], so the oracle replays cell assignment + probing
-    * exactly. */
-  private[operators] def ivfVectorLeg(s: SparkSession, d: String,
-                                      qvDf: DataFrame): DataFrame = {
-    reg(s)
-    val layout = buildIvfLayout(s, d)
-    val cents = readCodebook(s, layout)
-    val qv: Array[Double] = qvDf.collect()(0).getSeq[Double](0).toArray
-    val probed: Seq[Int] = nearestCellsLocal(cents, qv, IvfNProbe)
-    // qn: sequential 64-term sum — the same IEEE result the oracle's
-    // list_dot_product produces, so the literal folds identically
-    val qn = math.sqrt(qv.map(x => x * x).sum)
-    s.read.parquet(layout.toString)
-      .filter(col("cell").isin(probed: _*))
-      .withColumn("v", col("v").cast("array<double>"))
-      .withColumn("r6", round(
-        dot(col("v"), typedLit(qv.toSeq)) / (col("n") * lit(qn)), 6))
-      .select(col("vec_id").as("doc_id"), col("r6"))
-  }
-
-  /** [[rankedTopK]] exposed to the retrieval stack: per-query top-`k`
-    * of a (query_id, vec_id, cos) scored frame as the bounded
-    * partial+final aggregate — the rank tail a query BATCH needs (a
-    * per-query row_number window would sort each query's full
-    * candidate stream in one task; this keeps k rows per query per
-    * partition and exchanges KBs). */
-  private[operators] def topKPerQuery(scored: DataFrame,
-                                      k: Int): DataFrame =
-    rankedTopK(scored, k)
-
-  /** [[ivfVectorLeg]] generalized to a query BATCH
-    * ([[graft.operators.Retrieval.hybridRrfBatch]]): `qvs` is a small
-    * (query_id, qv) frame (one PRF vector per query). The probed-cell
-    * UNION becomes the layout scan's static pruning literal — the scan
-    * reads ≤ |queries|·nprobe of the cell directories ONCE, shared by
-    * every query — and each query scores only its OWN cells' rows via
-    * the broadcast (query_id, cell) pair table, so candidate volume per
-    * query stays nprobe/k of the corpus exactly as in the single-query
-    * leg. Returns (query_id, doc_id, r6); the caller ranks and fuses.
+  /** The IVF vector leg of the hybrid retrieval stack
+    * ([[Retrieval.hybridRrfIvf]] as a batch of one, the batch entries
+    * through [[Retrieval.batchLegs]]): `qvs` is a small (query_id, qv)
+    * frame, one PRF vector per query. The probed-cell UNION becomes the
+    * layout scan's static pruning literal — the scan reads ≤
+    * |queries|·nprobe of the cell directories ONCE, shared by every
+    * query — and each query scores only its OWN cells' rows, so
+    * candidate volume per query stays nprobe/k of the corpus. Returns
+    * (query_id, doc_id, r6) candidates for the caller's [[rankedTopK]].
     *
-    * KEPT as the equivalence-test twin of [[ivfBatchCandidates]] (the
-    * fused partition kernel the production batch path runs since r14) —
-    * RetrievalSpec pins the two legs row-identical. */
-  private[operators] def ivfVectorLegBatch(s: SparkSession, d: String,
-                                           qvs: DataFrame): DataFrame = {
-    reg(s)
-    val layout = buildIvfLayout(s, d)
-    val cents = readCodebook(s, layout)
-    // bounded collect: |queries| rows (the annFilteredBucketed shape) —
-    // per-query probed cells are computed against the driver-held
-    // 32-row codebook and shipped back as the pruning literal + the
-    // broadcast pair table
-    val qRows: Array[(Long, Array[Double])] = qvs.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    import s.implicits._
-    val probedPairs: Seq[(Long, Int)] = qRows.toSeq.flatMap { case (id, v) =>
-      nearestCellsLocal(cents, v, IvfNProbe).map(c => (id, c)) }
-    val qCells = probedPairs.toDF("query_id", "cell")
-    val allCells = probedPairs.map(_._2).distinct.sorted
-    val q = qvs
-      .select(col("query_id"), col("qv"),
-        sqrt(dot(col("qv"), col("qv"))).as("qn"))
-      .join(broadcast(qCells), Seq("query_id"))
-    s.read.parquet(layout.toString)
-      .filter(col("cell").isin(allCells: _*))
-      .withColumn("v", col("v").cast("array<double>"))
-      .join(broadcast(q), Seq("cell"))
-      .withColumn("r6",
-        round(dot(col("v"), col("qv")) / (col("n") * col("qn")), 6))
-      .select(col("query_id"), col("vec_id").as("doc_id"), col("r6"))
-  }
-
-  /** The batch leg's scoring + per-partition partial top-k FUSED into
-    * one partition kernel (r14 optimization; [[ivfVectorLegBatch]] is
-    * kept as its equivalence-test twin). The join+aggregate form paid
-    * per-PAIR operator machinery the stack profile put at ~20x the
-    * 64-term dot itself: the codegen'd broadcast join's output-row
-    * write + `copy()` + buffered append per match, then the object
-    * hash aggregate's grouping projection + hash probe + update call
-    * per scored pair, plus the per-row `CAST(array<float> ->
-    * array<double>)` that boxes every element. Here one loop over the
-    * PRUNED layout rows reads the float vector directly (float→double
-    * widening is exact, so `(double) v_f(i) * qv(i)` summed ascending
-    * is bit-identical to the cast+vec_dot form), computes the same
-    * `fastRound(dot / (n * qn), 6)` the expression path computes, and
-    * keeps at most `k` (−r6, vec_id) triples per query per partition
-    * through the SAME [[graft.functions.TopKOrderedAgg.insert]]
-    * comparator the final aggregate uses. −r6 is the final's own key
-    * (`round(r6, 6) == r6`: r6 carries ≤6 decimals, so the re-round is
+    * Scoring and the per-partition partial top-k are ONE partition
+    * kernel (r14 optimization): the join+aggregate form (kept as the
+    * equivalence twin in BatchLegTwinSpec) paid per-PAIR operator
+    * machinery the stack profile put at ~20x the 64-term dot itself —
+    * the broadcast join's output-row write + `copy()` per match, the
+    * object hash aggregate's grouping projection + probe per scored
+    * pair, and the per-row `CAST(array<float> -> array<double>)`. Here
+    * one loop over the PRUNED layout rows reads the float vector
+    * directly ([[graft.functions.VectorKernels.dot]] widens exactly, so
+    * the fold is bit-identical to the cast+vec_dot form), computes the
+    * same `fastRound(dot / (n * qn), 6)` the expression path computes,
+    * and keeps at most `k` (−r6, vec_id) triples per query per
+    * partition ([[graft.functions.TopKOrderedAgg.Buffers]]). −r6 is the
+    * final's own key (r6 carries ≤ 6 decimals, so the re-round is
     * identity), and (−r6, vec_id) is a total order over a query's
-    * candidates (a doc lives in exactly one cell, so (query, doc)
-    * pairs are unique) — every partition's kept set therefore contains
-    * each global top-k member present in that partition, and the
-    * downstream [[rankedTopK]] over the ≤ partitions·|Q|·k candidate
-    * rows returns rows identical to running it over all pairs. */
+    * candidates (a doc lives in exactly one cell), so every partition
+    * keeps each global top-k member it holds and the downstream
+    * [[rankedTopK]] over the ≤ partitions·|Q|·k candidate rows returns
+    * rows identical to running it over all pairs. */
   private[operators] def ivfBatchCandidates(s: SparkSession, d: String,
                                             qvs: DataFrame,
                                             k: Int): DataFrame = {
+    import graft.functions.{TopKOrderedAgg, VectorKernels}
     reg(s)
     val layout = buildIvfLayout(s, d)
     val cents = readCodebook(s, layout)
+    // bounded collect: |queries| rows; probed cells come from the
+    // driver-held 32-row codebook
     val qRows: Array[(Long, Array[Double])] = qvs.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val qIds: Array[Long] = qRows.map(_._1)
     val qVecs: Array[Array[Double]] = qRows.map(_._2)
-    // sqrt of the ascending self-dot fold — the exact doubles the
-    // engine's sqrt(vec_dot(qv, qv)) produced for the join form
-    val qNorms: Array[Double] = qVecs.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      math.sqrt(acc)
-    }
+    val qNorms: Array[Double] = qVecs.map(VectorKernels.norm)
     val probedPairs: Seq[(Int, Int)] = qRows.toSeq.zipWithIndex
       .flatMap { case ((_, v), qi) =>
         nearestCellsLocal(cents, v, IvfNProbe).map(c => (qi, c)) }
@@ -469,7 +380,7 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
       .toDF("_1", "_2", "_3", "_4")
       .as[(Int, Long, Array[Float], Double)]
       .mapPartitions { it =>
-        val bufs = Array.fill(qVecs.length)(Array.emptyDoubleArray)
+        val top = new TopKOrderedAgg.Buffers(qVecs.length, k)
         while (it.hasNext) {
           val (cell, vid, vf, n) = it.next()
           val qs = cellQ.getOrElse(cell, null)
@@ -477,23 +388,14 @@ private[operators] trait SimilarityIvf { this: Similarity.type =>
             var j = 0
             while (j < qs.length) {
               val qi = qs(j)
-              val qv = qVecs(qi)
-              val m = math.min(vf.length, qv.length)
-              var sdot = 0.0; var i = 0
-              while (i < m) { sdot += vf(i).toDouble * qv(i); i += 1 }
-              val r6 = graft.functions.VectorKernels.fastRound(
-                sdot / (n * qNorms(qi)), pow6, 6)
-              bufs(qi) = graft.functions.TopKOrderedAgg.insert(
-                bufs(qi), k, -r6, vid.toDouble, r6)
+              val r6 = VectorKernels.fastRound(
+                VectorKernels.dot(vf, qVecs(qi)) / (n * qNorms(qi)), pow6, 6)
+              top.offer(qi, -r6, vid, r6)
               j += 1
             }
           }
         }
-        bufs.iterator.zipWithIndex.flatMap { case (buf, qi) =>
-          val nKept = buf.length / 3
-          (0 until nKept).iterator.map(t =>
-            (qIds(qi), buf(3 * t + 1).toLong, buf(3 * t + 2)))
-        }
+        top.emit((qi, _, vid, r6) => (qIds(qi), vid, r6))
       }
       .toDF("query_id", "doc_id", "r6")
   }

@@ -293,7 +293,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     * packed-code rows (partition pruning on the driver-computed
     * probe-cell list), the ADC sum is a per-row projection against a
     * broadcast per-(query, cell) lookup array, the shortlist is a
-    * 64-bounded partial+final aggregate ([[TopKOrdered]]), and the exact
+    * 64-bounded partial+final aggregate (`topk_ordered`), and the exact
     * re-rank reads full vectors for 64 ids per query. */
   def annIvfPqBucketed(s: SparkSession, d: String): DataFrame = {
     reg(s)
@@ -313,14 +313,8 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     val qVecs: Array[(Long, Array[Double])] =
       e.filter(col("vec_id").isin(queryIds: _*)).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    def nearestCells(v: Array[Double], nprobe: Int): Seq[Int] =
-      cents.zipWithIndex.map { case (c, i) =>
-        var d2 = 0.0; var k = 0
-        while (k < v.length) { val t = v(k) - c(k); d2 += t * t; k += 1 }
-        (d2, i)
-      }.sortBy(p => (p._1, p._2)).take(nprobe).map(_._2).toSeq
     val probed: Map[Long, Seq[Int]] =
-      qVecs.map { case (id, v) => id -> nearestCells(v, IvfNProbe) }.toMap
+      qVecs.map { case (id, v) => id -> nearestCellsLocal(cents, v, IvfNProbe) }.toMap
     val allCells = probed.values.flatten.toSeq.distinct.sorted
     // per-(query, probed cell) ADC LOOKUP ARRAY (M x 256 = 2048 doubles),
     // built driver-side and BROADCAST — the scored path is then a pure
@@ -401,7 +395,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     * broadcast, corpus only scanned) except each vector reads 64 BYTES
     * + one norm instead of 256/512 — the 4-8x scan-byte cut is the
     * reason SQ8 exists at 100 TB; the shortlist is the bounded
-    * [[TopKOrdered]] partial+final aggregate and the re-rank touches 64
+    * `topk_ordered` partial+final aggregate and the re-rank touches 64
     * ids per query. Exact oracle: bounds re-derived in DuckDB (min/max
     * of the same doubles are the same doubles), identical quantize /
     * dequantize arithmetic, the same left-to-right dot fold both
@@ -456,13 +450,14 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     * .sq8ReconD]] is the ArrayData kernel statement for statement —
     * KernelSpec pins them equal; the self-dot norm is the same
     * ascending fold), per (query, row) pair the same
-    * `−round(dot(dq,qdq)/(n·qn), 6)` key, kept per partition through
-    * the SAME [[graft.functions.TopKOrderedAgg.insert]] comparator the
-    * final shortlist aggregate uses — so the ≤ partitions·|q|·k
-    * candidate rows contain every global shortlist member and the
-    * downstream [[shortlistTopK]] is row-identical to the broadcast-NLJ
-    * + aggregate form it replaces (r14: that form paid per-pair join
-    * row copy + aggregate probe machinery ~10x the reconstruct+dot).
+    * `−round(dot(dq,qdq)/(n·qn), 6)` key, kept per partition under the
+    * SAME comparator the final shortlist aggregate uses
+    * ([[graft.functions.TopKOrderedAgg.Buffers]]) — so the ≤
+    * partitions·|q|·k candidate rows contain every global shortlist
+    * member and the downstream [[shortlistTopK]] is row-identical to
+    * the broadcast-NLJ + aggregate form it replaces (r14: that form
+    * paid per-pair join row copy + aggregate probe machinery ~10x the
+    * reconstruct+dot).
     * Query vectors and bounds are bounded driver collects (|queryIds|
     * and 1 rows). */
   private[operators] def sq8ScoredCandidates(s: SparkSession, d: String,
@@ -478,11 +473,7 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val qIds = qRaw.map(_._1)
     val qDqs = qRaw.map { case (_, v) => VectorKernels.sq8ReconD(v, lo, hi) }
-    val qNs = qRaw.map { case (_, v) =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      math.sqrt(acc)
-    }
+    val qNs = qRaw.map { case (_, v) => VectorKernels.norm(v) }
     import s.implicits._
     val pow6 = math.pow(10.0, 6)
     Tables.embeddings(s, d)
@@ -490,35 +481,25 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
       .toDF("_1", "_2")
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val bufs = Array.fill(qIds.length)(Array.emptyDoubleArray)
+        val top = new TopKOrderedAgg.Buffers(qIds.length, k)
         while (it.hasNext) {
           val (vid, vf) = it.next()
           val vd = new Array[Double](vf.length)
           var i = 0
           while (i < vf.length) { vd(i) = vf(i).toDouble; i += 1 }
           val dq = VectorKernels.sq8ReconD(vd, lo, hi)
-          var acc = 0.0; i = 0
-          while (i < vd.length) { acc += vd(i) * vd(i); i += 1 }
-          val n = math.sqrt(acc)
+          val n = VectorKernels.norm(vd)
           var j = 0
           while (j < qIds.length) {
             if (vid != qIds(j)) {
-              val qdq = qDqs(j)
-              val m = math.min(dq.length, qdq.length)
-              var sdot = 0.0; i = 0
-              while (i < m) { sdot += dq(i) * qdq(i); i += 1 }
-              val d2r =
-                -VectorKernels.fastRound(sdot / (n * qNs(j)), pow6, 6)
-              bufs(j) =
-                TopKOrderedAgg.insert(bufs(j), k, d2r, vid.toDouble, 0.0)
+              val d2r = -VectorKernels.fastRound(
+                VectorKernels.dot(dq, qDqs(j)) / (n * qNs(j)), pow6, 6)
+              top.offer(j, d2r, vid, 0.0)
             }
             j += 1
           }
         }
-        bufs.iterator.zipWithIndex.flatMap { case (buf, qi) =>
-          (0 until buf.length / 3).iterator.map(t =>
-            (qIds(qi), buf(3 * t), buf(3 * t + 1).toLong))
-        }
+        top.emit((qi, d2r, vid, _) => (qIds(qi), d2r, vid))
       }
       .toDF("query_id", "d2r", "vec_id")
   }
@@ -648,6 +629,17 @@ private[operators] trait SimilarityQuant { this: Similarity.type =>
     layout
   }
 
+  /** `ann_ivf_sq8` gate entry: IVF cell pruning × SQ8 packed bytes over
+    * the write-time layout. The scan reads ONLY the probed cells'
+    * packed-code rows (the probed-cell list is a driver-computed
+    * LITERAL isin filter — static partition pruning, the
+    * [[annIvfPqBucketed]] convention) and scores them with the fused
+    * `sq8_dot` decode-dot kernel; the 64-id shortlist is the bounded
+    * `topk_ordered` aggregate and only those ids touch the
+    * full-precision base table for the exact re-rank. Exact oracle:
+    * codebook + bounds interpolated ([[ivfCodebook]]), DuckDB replays
+    * cell assignment, nprobe probing, the identical quantize/dequantize
+    * arithmetic, and both rankings. */
   def annIvfSq8(s: SparkSession, d: String): DataFrame = {
     reg(s)
     val layout = buildIvfSq8Layout(s, d)

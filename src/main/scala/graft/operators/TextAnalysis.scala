@@ -98,7 +98,7 @@ object TextAnalysis {
   /** Bounded per-doc top-k of (score desc, term asc) as a MERGEABLE
     * partial+final aggregate — the scale-correct form of
     * `row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term)
-    * <= k` (the [[graft.operators.Similarity]] TopKOrdered shape with a
+    * <= k` (the [[graft.operators.Similarity]] `topk_ordered` shape with a
     * string payload): the window shuffled and externally SORTED every
     * scored (doc, term) row — measured 3 GB spill / 1 GB peak task
     * memory at the 1000x probe — where this keeps at most k pairs per

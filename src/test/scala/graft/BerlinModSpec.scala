@@ -110,16 +110,32 @@ class BerlinModSpec extends SessionSuite {
       rows(ours("q8")))
   }
 
+  /** The hour-only diff baseline over the loaded fleet's `Segs`: each
+    * segment keyed by its hour buckets alone, with cx = cy = 0 on every
+    * row so the join's cell-equality clause always holds. */
+  private def hourOnlySegments(): Unit =
+    spark.sql(
+      """SELECT TripId, VehicleId,
+           array(x1, y1, cast(tl AS double), x2, y2, cast(tu AS double)) AS seg,
+           sxmin, sxmax, symin, symax, tl, tu, bucket,
+           0 AS cx, 0 AS cy
+         FROM Segs
+         LATERAL VIEW explode(sequence(
+           cast(floor(tl / 3600000000) AS bigint),
+           cast(floor(tu / 3600000000) AS bigint))) bk AS bucket""")
+      .createOrReplaceTempView("SegTimeHourOnly")
+
   test("q6/q10/q16 space-time cell key = hour-only key (diff at 2 scales)") {
     // the (bucket, cx, cy) join key is a pure prefilter refinement: at
     // any generator scale it must produce exactly the rows the hour-only
     // key did (the d/2-padded-cell argument in BerlinMod.load)
     for ((nv, seed) <- Seq((20, 42L), (35, 7L))) {
       BerlinMod.load(spark, nVehicles = nv, seed = seed)
-      for ((name, mk) <- Seq[(String, Boolean => String)](
+      hourOnlySegments()
+      for ((name, mk) <- Seq[(String, String => String)](
           ("q6", BerlinMod.q6Sql), ("q10", BerlinMod.q10Sql))) {
-        val withCells = spark.sql(mk(true)).collect().map(_.toString).sorted
-        val hourOnly = spark.sql(mk(false)).collect().map(_.toString).sorted
+        val withCells = spark.sql(mk("SegTime")).collect().map(_.toString).sorted
+        val hourOnly = spark.sql(mk("SegTimeHourOnly")).collect().map(_.toString).sorted
         assert(withCells.sameElements(hourOnly),
           s"$name at nVehicles=$nv: ${withCells.length} vs ${hourOnly.length}")
       }
@@ -140,9 +156,9 @@ class BerlinModSpec extends SessionSuite {
       BerlinMod.load(spark, nVehicles = 40, seed = 7L,
         tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120,
         cellSizeOverride = Some(size))
-      for ((name, mk) <- Seq[(String, Boolean => String)](
+      for ((name, mk) <- Seq[(String, String => String)](
           ("q6", BerlinMod.q6Sql), ("q10", BerlinMod.q10Sql))) {
-        val rows = spark.sql(mk(true)).collect().map(_.toString).toSeq.sorted
+        val rows = spark.sql(mk("SegTime")).collect().map(_.toString).toSeq.sorted
         baseline.get(name) match {
           case None       => baseline(name) = rows
           case Some(prev) =>

@@ -569,10 +569,18 @@ class PlanSpec extends SessionSuite {
       "operators/SimilarityQuant.scala" -> 7,
       // +2 in r14: ivfBatchCandidates' bounded codebook (32 rows) and
       // query-frame (|queries| rows) collects — the fused batch leg's
-      // driver-held probe structures, same class as ivfVectorLegBatch's;
-      // -5: the six 32-row codebook loads are one site, readCodebook
-      "operators/SimilarityIvf.scala" -> 6,
-      "operators/Retrieval.scala" -> 4,
+      // driver-held probe structures;
+      // -5: the six 32-row codebook loads are one site, readCodebook;
+      // -2: ivfVectorLeg's 1-row and ivfVectorLegBatch's |queries|-row
+      // query-vector collects went with them (hybrid_rrf_ivf runs
+      // ivfBatchCandidates as a batch of one; the join+aggregate twin
+      // lives in BatchLegTwinSpec)
+      "operators/SimilarityIvf.scala" -> 4,
+      // batchPostingTf's term→bucket hashes and mmrPicks' shortlist;
+      // -2: postingScores' 3-row term→bucket hashes (hybrid_rrf_ivf's
+      // lexical leg is batchPostingTf of a batch of one) and
+      // retrievalMmr's own shortlist (it runs mmrPicks for query 42)
+      "operators/Retrieval.scala" -> 2,
       "util/BoundedLocal.scala" -> 1,
       // +1: stream_ann_topk_sink's |queryIds|-row query vectors, collected
       // once per run into a plan literal

@@ -155,8 +155,8 @@ class RetrievalSpec extends SessionSuite {
     // the lexical leg's posting fetch must be partition-pruned to the
     // query terms' buckets (its plan is inspected pre-checkpoint — the
     // fused plan reads the 20-row checkpointed rank list)
-    val fl = Retrieval.postingScores(spark, d).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode
+    val fl = Retrieval.batchPostingTf(spark, d, Retrieval.HybridQuery)
+      .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
     assert(fl.contains("PartitionFilters: [tb") ||
       fl.contains("PartitionFilters: [isnotnull(tb"), fl.take(3000))
@@ -231,8 +231,8 @@ class RetrievalSpec extends SessionSuite {
     assert(top1.distinct.size >= 6, s"top-1 docs: $top1")
     // plan pin (r12 verdict #3): the posting scan's PartitionFilters
     // carry the unioned bucket IN-list (static pruning, ≤24 of 64 dirs)
-    val fl = Retrieval.batchPostingTf(spark, d).queryExecution
-      .explainString(org.apache.spark.sql.execution.ExplainMode
+    val fl = Retrieval.batchPostingTf(spark, d, Retrieval.BatchQueries)
+      .queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
     assert(fl.contains("PartitionFilters: [tb") ||
       fl.contains("PartitionFilters: [isnotnull(tb"), fl.take(3000))

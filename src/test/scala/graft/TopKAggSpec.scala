@@ -96,4 +96,59 @@ class TopKAggSpec extends SessionSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan.take(1500))
   }
+
+  /** Every message along `e`'s cause chain (a task failure reaches the
+    * driver wrapped in a SparkException). */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("the cap must be a positive integer literal: 0, a negative, a " +
+       "fraction and a column are rejected by name") {
+    for (cap <- Seq(lit(0), lit(-3), lit(2.5), col("g"))) {
+      val e = intercept[Exception] {
+        corpus.groupBy("g")
+          .agg(call_function("topk_ordered", cap, col("key"),
+            col("vec_id"), col("pay")).as("top"))
+          .collect()
+      }
+      assert(messages(e).exists(_.contains("topk_ordered cap")),
+        s"cap $cap: ${messages(e).mkString(" <- ")}")
+    }
+  }
+
+  test("ids within ±2^53 come back exact; an id beyond fails instead of " +
+       "coming back as its neighbour") {
+    val bound = 1L << 53
+    def top(ids: Seq[Long]): Array[Long] = {
+      val s = spark
+      import s.implicits._
+      ids.zipWithIndex.map { case (id, i) => (0L, id, i.toDouble) }
+        .toDF("g", "vec_id", "key")
+        .groupBy("g")
+        .agg(call_function("topk_ordered", lit(5), col("key"),
+          col("vec_id"), lit(0.0)).as("top"))
+        .select(explode(col("top")).as("p"))
+        .select(col("p._1")).collect().map(_.getLong(0))
+    }
+    assert(top(Seq(bound, -bound, bound - 1)).toSeq ==
+      Seq(bound, -bound, bound - 1))
+    for (id <- Seq(bound + 1, -bound - 1, Long.MaxValue)) {
+      val e = intercept[Exception](top(Seq(1L, id)))
+      assert(messages(e).exists(_.contains("outside ±2^53")),
+        s"id $id: ${messages(e).mkString(" <- ")}")
+    }
+  }
+
+  test("the fused kernels' buffers share the aggregate's cap and id " +
+       "checks and emit each query's triples in (key, id) order") {
+    import graft.functions.TopKOrderedAgg.Buffers
+    intercept[IllegalArgumentException](new Buffers(2, 0))
+    val b = new Buffers(2, 2)
+    intercept[IllegalArgumentException](b.offer(0, 0.0, (1L << 53) + 1, 0.0))
+    Seq((1, 0.5, 7L), (0, 0.2, 9L), (0, 0.2, 3L), (0, 0.1, 4L), (1, 0.5, 6L))
+      .foreach { case (q, k, id) => b.offer(q, k, id, k * 10) }
+    assert(b.emit((q, k, id, p) => (q, k, id, p)).toSeq == Seq(
+      (0, 0.1, 4L, 1.0), (0, 0.2, 3L, 2.0), (1, 0.5, 6L, 5.0), (1, 0.5, 7L, 5.0)))
+  }
 }

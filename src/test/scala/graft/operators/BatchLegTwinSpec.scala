@@ -1,23 +1,100 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SessionSuite
 import graft.util.Tables
 
-/** [[SimilarityIvf.ivfBatchCandidates]] (the fused partition kernel the
-  * batch hybrid/nDCG rows run since r14) must be ROW-IDENTICAL through
-  * the shared rank tail to its join+aggregate twin
-  * [[SimilarityIvf.ivfVectorLegBatch]] — same (query_id, rank,
-  * neighbor_id) AND bit-equal cos, on real corpus data through the real
-  * IVF layout (partition pruning, float→double widening, fastRound,
-  * the (−r6, vec_id) tie-break). Run at sf0.01 with PRF-shaped query
-  * vectors (per-dimension 6dp-rounded means of corpus embeddings — the
-  * exact frame shape batchLegs feeds both legs). */
+/** The fused partition kernels the retrieval and SQ8 rows run since r14
+  * must be ROW-IDENTICAL through the shared rank tail to the
+  * join+aggregate forms they replaced, which live here as twins:
+  * [[SimilarityIvf.ivfBatchCandidates]] against [[ivfVectorLegBatch]] —
+  * same (query_id, rank, neighbor_id) AND bit-equal cos, on real corpus
+  * data through the real IVF layout (partition pruning, float→double
+  * widening, fastRound, the (−r6, vec_id) tie-break), with PRF-shaped
+  * query vectors (per-dimension 6dp-rounded means of corpus embeddings
+  * — the exact frame shape batchLegs feeds both legs);
+  * [[Quality.bm25BatchCandidates]] against [[bm25ScoreBatch]]; and the
+  * SQ8 shortlist kernel against the broadcast-NLJ scoring form. All at
+  * sf0.01. */
 class BatchLegTwinSpec extends SessionSuite {
 
   private val d = "/root/testdata/sf0.01"
+
+  /** The join+aggregate IVF batch leg: `qvs` is a (query_id, qv) frame;
+    * the probed-cell UNION prunes the layout scan, and each query scores
+    * only its own cells' rows through the broadcast (query_id, cell)
+    * pair table. Returns (query_id, doc_id, r6). */
+  private def ivfVectorLegBatch(s: SparkSession, d: String,
+                                qvs: DataFrame): DataFrame = {
+    Similarity.reg(s)
+    val layout = Similarity.buildIvfLayout(s, d)
+    val cents = Similarity.readCodebook(s, layout)
+    val qRows: Array[(Long, Array[Double])] = qvs.collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    import s.implicits._
+    val probedPairs: Seq[(Long, Int)] = qRows.toSeq.flatMap { case (id, v) =>
+      Similarity.nearestCellsLocal(cents, v, Similarity.IvfNProbe).map(c => (id, c)) }
+    val qCells = probedPairs.toDF("query_id", "cell")
+    val allCells = probedPairs.map(_._2).distinct.sorted
+    val q = qvs
+      .select(col("query_id"), col("qv"),
+        sqrt(Similarity.dot(col("qv"), col("qv"))).as("qn"))
+      .join(broadcast(qCells), Seq("query_id"))
+    s.read.parquet(layout.toString)
+      .filter(col("cell").isin(allCells: _*))
+      .withColumn("v", col("v").cast("array<double>"))
+      .join(broadcast(q), Seq("cell"))
+      .withColumn("r6",
+        round(Similarity.dot(col("v"), col("qv")) / (col("n") * col("qn")), 6))
+      .select(col("query_id"), col("vec_id").as("doc_id"), col("r6"))
+  }
+
+  /** BM25 per (query, doc) over a query batch in the r13 forms: when
+    * every query has exactly two distinct terms, each doc's
+    * contributions fold into a |terms|-slot array (one doc-keyed
+    * aggregate) and each (query, doc) pair scores by two array lookups
+    * against a broadcast (query_id, i1, i2) table; otherwise the
+    * (query_id, term) fan-out join and one (query_id, doc_id)
+    * aggregate. Returns (query_id, doc_id, r4). */
+  private def bm25ScoreBatch(tfdl: DataFrame,
+                             queries: Seq[(Long, Seq[String])],
+                             stats: DataFrame): DataFrame = {
+    val s = tfdl.sparkSession
+    import s.implicits._
+    if (!queries.forall(_._2.distinct.size == 2)) {
+      val qterms = queries
+        .flatMap { case (q, ts) => ts.map(t => (q, t)) }
+        .toDF("query_id", "term")
+      return Quality.bm25Contrib(tfdl, stats)
+        .join(broadcast(qterms), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(round(sum(col("contrib")), 4).as("r4"))
+        .select("query_id", "doc_id", "r4")
+    }
+    val terms = queries.flatMap(_._2).distinct.sorted
+    val ti = terms.zipWithIndex.toMap
+    val nT = terms.size
+    val tiDf = terms.zipWithIndex.toDF("term", "ti")
+    val slots = (0 until nT).map(i =>
+      max(when(col("ti") === i, col("contrib"))).as(s"c$i"))
+    val perDoc = Quality.bm25Contrib(tfdl, stats)
+      .join(broadcast(tiDf), "term")
+      .groupBy("doc_id")
+      .agg(slots.head, slots.tail: _*)
+      .select(col("doc_id"),
+        array((0 until nT).map(i => col(s"c$i")): _*).as("ca"))
+    val qIdx = queries.map { case (q, ts) =>
+      val is = ts.map(ti).sorted; (q, is(0), is(1))
+    }.toDF("query_id", "i1", "i2")
+    perDoc.crossJoin(broadcast(qIdx))
+      .filter(col("ca")(col("i1")).isNotNull ||
+        col("ca")(col("i2")).isNotNull)
+      .select(col("query_id"), col("doc_id"),
+        round(coalesce(col("ca")(col("i1")), lit(0.0)) +
+          coalesce(col("ca")(col("i2")), lit(0.0)), 4).as("r4"))
+  }
 
   /** PRF-shaped (query_id, qv) frame: per-dimension round(avg, 6) of
     * three corpus embeddings per query — the derivation batchLegs uses,
@@ -40,7 +117,7 @@ class BatchLegTwinSpec extends SessionSuite {
   }
 
   private def ranked(leg: DataFrame, k: Int): Array[(Long, Int, Long, Double)] =
-    Similarity.topKPerQuery(
+    Similarity.rankedTopK(
       leg.select(col("query_id"), col("doc_id").as("vec_id"),
         col("r6").as("cos")), k)
       .orderBy("query_id", "rank")
@@ -50,8 +127,7 @@ class BatchLegTwinSpec extends SessionSuite {
   test("fused partition kernel == join+aggregate twin through the rank " +
        "tail: identical (query_id, rank, neighbor_id, cos) rows") {
     val qvs = qvsFrame(12)
-    val old = ranked(
-      Similarity.ivfVectorLegBatch(spark, d, qvs), 20)
+    val old = ranked(ivfVectorLegBatch(spark, d, qvs), 20)
     val neu = ranked(
       Similarity.ivfBatchCandidates(spark, d, qvs, 20), 20)
     assert(old.nonEmpty, "twin test must actually rank rows")
@@ -137,12 +213,12 @@ class BatchLegTwinSpec extends SessionSuite {
     val stats = spark.read.parquet(
       s"${Retrieval.buildPostingLayout(spark, d001)}_stats")
     def rank(df: DataFrame): Array[(Long, Int, Long, Double)] =
-      Similarity.topKPerQuery(
+      Similarity.rankedTopK(
         df.select(col("query_id"), col("doc_id").as("vec_id"),
           col("r4").as("cos")), 20)
         .orderBy("query_id", "rank").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    (rank(Quality.bm25ScoreBatch(tf, queries, stats)),
+    (rank(bm25ScoreBatch(tf, queries, stats)),
       rank(Quality.bm25BatchCandidates(tf, queries, stats, 20)))
   }
 
