@@ -118,7 +118,8 @@ object Dedup {
       .select(col("doc_id"), col("n_kept"), col("new_chars"), col("new_h"))
       .orderBy("doc_id")
 
-  // ---- word 3-gram shingles (shared by jaccard + minhash) ----
+  // ---- word 3-gram shingles and the set-similarity join ----
+  // ---- (shared by jaccard, containment, incremental, minhash) ----
 
   /** (doc_id, shingle-hash) pairs, distinct. Shingles are 3-word
     * windows, built directly from the split array with a higher-order
@@ -149,32 +150,160 @@ object Dedup {
     (if (parts > 0) raw.repartition(parts, col("h")) else raw).distinct()
   }
 
-  /** Partition count for the corpus-sized dedup exchanges, tracking the
-    * decade (~40k docs per partition ~ tens of MB of shingle rows) with
-    * the session setting as the floor — a cluster absorbs a decade with
-    * MORE tasks, not bigger ones. Derived from the documents rowcount
-    * (parquet metadata — no scan). */
-  private[graft] def corpusParts(s: SparkSession, d: String): Int = {
-    val nDocs = Tables.documents(s, d).count()
-    math.max(s.sessionState.conf.numShufflePartitions,
-      (nDocs / 40000L).toInt)
+  /** The persisted shingle table of a corpus and the set-similarity
+    * join over it (Bayardo et al., WWW'07), the one pipeline behind
+    * [[jaccard]], [[containment]], [[incrementalNearDup]] and (its
+    * verify tail) [[minhashLsh]]. An entry ranks the shingles
+    * ([[ranked]]), picks and pins its two sides, and fixes the join
+    * predicate and the required overlap of [[candidates]]; it then
+    * scores the `(id_a, id_b, i, sza, szb)` rows of [[verified]].
+    *
+    * 64-bit shingle hashes throughout: set intersection on sorted
+    * primitive longs, not ~30-byte strings (collision odds across a
+    * pair of ~100-element sets: ~2^-51 — immaterial, incl. vs the
+    * string-based oracles).
+    *
+    * @param nSh    the shingle row count (sizes [[pin]]'s materialization)
+    * @param cParts partition count of the corpus-sized exchanges
+    * @param pParts partition count of the candidate-PAIR exchange */
+  private final case class Shingles(sh: DataFrame, nSh: Long,
+                                    cParts: Int, pParts: Int) {
+
+    /** [[pinShared]] at this table's size. */
+    def pin(df: DataFrame): DataFrame = pinShared(nSh)(df)
+
+    /** (doc_id, h, rank, sz), rarest shingle first (see [[rankedShingles]]). */
+    def ranked: DataFrame = rankedShingles(sh, cParts)
+
+    /** Candidate pairs `(id_a, id_b)` of the prefix join of ranked sides
+      * `a` and `b`: rows sharing a shingle that pass `on` (a predicate
+      * over the aliases "a" and "b": pair order plus the per-row
+      * size/positional prunes), kept when the AGGREGATED exact bound per
+      * pair (PPJoin+ suffix filter) still reaches `overlap`, the required
+      * intersection size as a column over the pair's sizes `sza`/`szb`.
+      * Both docs' shingles are sorted by the same (df, h) total order,
+      * so with o prefix-prefix matches whose max matched ranks are (mra,
+      * mrb): every common shingle below the largest match is itself a
+      * prefix-prefix match (else its rank in the other doc would precede
+      * a prefix position — contradiction), and every one above it sits
+      * past BOTH max ranks. Hence exactly:
+      *   inter <= o + min(sza - mra, szb - mrb)
+      * The proof holds one-sided too (containment probes a whole ranked
+      * side with a prefix: matched elements have rank_a inside the
+      * prefix). This kills the junk class that 1000x exposed: short
+      * common-vocabulary docs sharing ONE high-df shingle at the tail of
+      * both prefixes (o = 1, mra ~ prefix end) passed the per-row prunes
+      * and exploded the verify phase to tens of GB of array-carrying
+      * shuffle; with the pair-level bound the verify set is the near-dup
+      * set (o tracks the true overlap), so verify cost is output-bound,
+      * not collision-bound. */
+    def candidates(a: DataFrame, b: DataFrame, on: Column,
+                   overlap: Column): DataFrame = {
+      // the per-pair bound as STREAMING WINDOWS over a pair-co-located,
+      // pre-sorted collision stream — the rankedShingles shape applied
+      // to the pipeline's largest intermediate (522M rows at 1000x).
+      // Phase-attributed profiling put the operator's whole 13-15 GB
+      // disk spill in the former groupBy: its partial and final hash
+      // maps (both co-located) each held that partition's distinct
+      // pairs and fell back to sort-based aggregation. Here the
+      // exchange (pair-count-scaled partitions) + one in-partition
+      // Tungsten sort satisfy every window below, so o/mra/mrb stream
+      // with a ~2-row group buffer and rn==1 collapses each pair
+      // without any distinct aggregate. The join itself is cheap
+      // (~20 s, zero spill measured without the aggregate).
+      val byPair = Window.partitionBy("id_a", "id_b")
+      a.as("a").join(b.as("b"), col("a.h") === col("b.h") && on)
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+          col("a.sz").as("sza"), col("b.sz").as("szb"),
+          col("a.rank").as("ra"), col("b.rank").as("rb"))
+        .repartition(pParts, col("id_a"), col("id_b"))
+        .sortWithinPartitions("id_a", "id_b", "ra")
+        .select(col("id_a"), col("id_b"), col("sza"), col("szb"),
+          count(lit(1)).over(byPair).as("o"),
+          max("ra").over(byPair).as("mra"),
+          max("rb").over(byPair).as("mrb"),
+          row_number().over(byPair.orderBy("ra")).as("rn"))
+        .filter(col("rn") === 1 && col("o") +
+          least(col("sza") - col("mra"), col("szb") - col("mrb")) >= overlap)
+        .select("id_a", "id_b")
+        // consumed twice by [[verified]] (probe + candidate-id prune),
+        // and localCheckpoint rather than persist: the pair list is tiny,
+        // and BREAKING its lineage phases the query — once candidates
+        // materialize, the self-join/prefix shuffles (the ~30 GB middle
+        // of the 1000x run) are collectable before the verify phase
+        // starts, so peak scratch is max(phase), not sum(phases)
+        .transform(ckptDisk)
+    }
+
+    /** `(id_a, id_b, i, sza, szb)` for the candidate pairs `cand`: the
+      * exact intersection size of the two docs' shingle sets and both
+      * set sizes, each entry's score filter reads it. */
+    def verified(cand: DataFrame): DataFrame = {
+      // verification only ever consults CANDIDATE docs' shingle arrays —
+      // semi-prune sh before the collect_list groupBy, so the array-
+      // building shuffle is candidate-sized, not corpus-sized (at the
+      // 1000x probe the full-corpus `sets` was the single largest
+      // shuffle, and minhash_lsh's dominant spill). candIds is the
+      // near-dup doc set — broadcastable by construction (dup rates are
+      // single-digit percents of the corpus)
+      val candIds = cand.select(col("id_a").as("doc_id"))
+        .union(cand.select(col("id_b").as("doc_id"))).distinct()
+      val sets = sh.join(broadcast(candIds), "doc_id")
+        // co-locate before aggregating (the rankedShingles pattern): sh
+        // is partitioned by (doc_id, h), so the partial collect_list
+        // would build and EXCHANGE per-partition array fragments for
+        // ~every candidate doc; repartitioned, the exchange carries
+        // narrow 16-byte rows and each array is built exactly once
+        .repartition(col("doc_id"))
+        .groupBy("doc_id")
+        .agg(sort_array(collect_list("h")).as("shs"), count(lit(1)).as("sz"))
+        // consumed twice (the two pair-side joins) — pin, or the semi-
+        // join + array build runs once per side; candidate-sized
+        .transform(pin)
+      cand
+        .join(sets.select(col("doc_id").as("id_a"), col("shs").as("sha"),
+          col("sz").as("sza")), "id_a")
+        .join(sets.select(col("doc_id").as("id_b"), col("shs").as("shb"),
+          col("sz").as("szb")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          interSorted(col("sha"), col("shb")).as("i"), col("sza"), col("szb"))
+    }
   }
 
-  /** Partition count for the candidate-PAIR exchange: the collision
-    * stream is the pipeline's largest intermediate (~100 rows per doc at
-    * the 1000x probe) and its bound aggregate builds TWO hash maps
-    * (partial + final, co-located) of partition-local pairs — ~4x the
-    * per-partition budget of the rank exchange, hence 4x the tasks. */
-  private def pairParts(s: SparkSession, d: String): Int = {
+  /** The shingle table of `d`, persisted and counted, with both
+    * partition counts derived from ONE documents rowcount (parquet
+    * metadata — no scan), the session setting as the floor of each — a
+    * cluster absorbs a decade with MORE tasks, not bigger ones:
+    *  - corpus-sized exchanges track the decade at ~40k docs per
+    *    partition (~ tens of MB of shingle rows);
+    *  - the candidate-PAIR exchange at ~10k: the collision stream is the
+    *    pipeline's largest intermediate (~100 rows per doc at the 1000x
+    *    probe), and a per-pair collapse over it (minhash_lsh's distinct)
+    *    builds TWO hash maps (partial + final, co-located) of
+    *    partition-local pairs — ~4x the per-partition budget of the rank
+    *    exchange, hence 4x the tasks. */
+  private def shingles(s: SparkSession, d: String): Shingles = {
+    reg(s)
     val nDocs = Tables.documents(s, d).count()
-    math.max(s.sessionState.conf.numShufflePartitions,
-      (nDocs / 10000L).toInt)
+    val floor = s.sessionState.conf.numShufflePartitions
+    val cParts = math.max(floor, (nDocs / 40000L).toInt)
+    val sh = shingleHashes(s, d, cParts)
+      // serialized cache blocks: the deserialized default holds ~10 GB
+      // of row objects for a 265M-row shingle table at the third
+      // decade, crowding the unified region and starving the pair
+      // exchange's shuffle sorter (measured as pure shuffle-writer
+      // spill in the phase probe); SER blocks are ~5x smaller and
+      // evictable past the protected fraction
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // pin the cache before fan-out: the downstream branches (ranked
+    // sides, sets, signatures) otherwise race to materialize it
+    // concurrently and can recompute the window+distinct per branch
+    Shingles(sh, sh.count(), cParts, math.max(floor, (nDocs / 10000L).toInt))
   }
 
   /** (doc_id, h, rank, sz): each doc's shingles ranked rarest-first by
-    * (global df, h) — the prefix-filter ordering shared by
-    * [[jaccard]]/[[containment]]/[[incrementalNearDup]]. Shape: one
-    * scale-tracking repartition by doc_id, an EXPLICIT in-partition
+    * (global df, h) — the prefix-filter ordering of [[Shingles]]. Shape:
+    * one scale-tracking repartition by doc_id, an EXPLICIT in-partition
     * Tungsten sort, and two streaming windows whose required
     * partitioning/ordering the exchange+sort already satisfy — so
     * row_number/count add no buffering beyond one doc's rows. This
@@ -185,8 +314,8 @@ object Dedup {
     * dedup_jaccard's 377 s: ObjectHashAggregate falls back to
     * sort-based past 128 groups and array_sort over struct elements
     * compares interpreted, per element, per row). Pre-sorted partitions
-    * sized by [[corpusParts]] keep the same sort ~60 MB per task —
-    * in-memory, binary, codegen'd. */
+    * sized by the corpus partition count keep the same sort ~60 MB per
+    * task — in-memory, binary, codegen'd. */
   private def rankedShingles(sh: DataFrame, parts: Int): DataFrame = {
     val byDoc = Window.partitionBy("doc_id")
     // df as an h-partitioned WINDOW, not a groupBy(h)+join (r14 opt):
@@ -243,8 +372,6 @@ object Dedup {
     * checkpoints stay unconditional — they are kilobyte-class and their
     * lineage break is what phases the query. */
   private val ckptShingleRows = 100000000L
-  private def ckptIfBig(nShingleRows: Long)(df: DataFrame): DataFrame =
-    if (nShingleRows > ckptShingleRows) ckptDisk(df) else df
 
   /** Materialize-and-pin a frame consumed by MULTIPLE downstream
     * branches (r14 opt, guide §2.4). Spark 4.1's AQE does not reuse
@@ -269,6 +396,36 @@ object Dedup {
       p
     }
 
+  /** Prefix of a doc's rarest-first shingles that any pair with required
+    * overlap ceil(t*|d|) must touch: |d| - ceil(t*|d|) + 1 (pigeonhole). */
+  private def inPrefix(t: Double): Column =
+    col("rank") <= col("sz") - ceil(col("sz") * t) + 1
+
+  /** Per-row prunes of a J >= minJ collision ("a"/"b" ranked rows):
+    *  - size compatibility: J >= minJ forces min(sz)/max(sz) >= minJ
+    *  - positional bound (PPJoin): overlap <= min(remaining suffix
+    *    lengths past this shared shingle) + 1 */
+  private def jaccardPrunes(minJ: Double): Column = {
+    val need = ceil(greatest(col("a.sz"), col("b.sz")) * minJ)
+    least(col("a.sz"), col("b.sz")) >= need &&
+      least(col("a.sz") - col("a.rank"), col("b.sz") - col("b.rank")) + 1 >= need
+  }
+
+  /** Required overlap of J >= minJ: inter >= (sza+szb) * minJ/(1+minJ).
+    * The 1e-9 slack keeps FP rounding of minJ/(1+minJ) from ever pushing
+    * ceil past the exact integer threshold (rejecting a true pair);
+    * admitting a borderline extra candidate is harmless. */
+  private def jaccardOverlap(minJ: Double): Column =
+    ceil((col("sza") + col("szb")) * (minJ / (1 + minJ)) - 1e-9)
+
+  /** [[Shingles.verified]] rows scored by Jaccard, kept at J >= minJ:
+    * `(id_a, id_b, jac)` with jac rounded to 4 dp. */
+  private def jaccardAtLeast(minJ: Double)(verified: DataFrame): DataFrame =
+    verified
+      .withColumn("j", col("i") / (col("sza") + col("szb") - col("i")))
+      .filter(col("j") >= minJ)
+      .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jac"))
+
   /** Near-duplicate pairs by exact shingle Jaccard >= 0.5, with exact
     * PREFIX FILTERING (Bayardo et al., WWW'07): order each doc's
     * shingles rarest-first by global document frequency; a pair with
@@ -280,141 +437,17 @@ object Dedup {
     * and the result is still exact because every candidate is verified
     * with the full shingle sets. */
   def jaccard(s: SparkSession, d: String): DataFrame = {
-    reg(s)
     val minJ = 0.5
-    // 64-bit shingle hashes from here on: set intersection on sorted
-    // primitive longs, not ~30-byte strings (collision odds across a
-    // pair of ~100-element sets: ~2^-51 — immaterial, incl. vs the
-    // string-based oracle)
-    val cParts = corpusParts(s, d)
-    val pParts = pairParts(s, d)
-    val sh = shingleHashes(s, d, cParts)
-      // serialized cache blocks: the deserialized default holds ~10 GB
-      // of row objects for a 265M-row shingle table at the third
-      // decade, crowding the unified region and starving the pair
-      // exchange's shuffle sorter (measured as pure shuffle-writer
-      // spill in the phase probe); SER blocks are ~5x smaller and
-      // evictable past the protected fraction
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // pin the cache before fan-out: the downstream branches (ranked
-    // prefix, sets) otherwise race to materialize it concurrently and
-    // can recompute the window+distinct per branch
-    val nSh = sh.count()
-    // localCheckpoint (the bigGraphLabels pattern), SIZE-GATED: the
-    // prefix table is consumed twice by the self-join below, and
-    // checkpointing it DROPS the df-join/rank-agg lineage — their
-    // shuffle files (~25 GB live at the 1000x probe) become collectable
-    // mid-query instead of pinned until the action ends. That matters
-    // exactly when phase scratch threatens the box's disk/heap; below
-    // [[ckptShingleRows]] the eager materialization is pure overhead
-    // (measured ~8 s at the 100x bench row for zero scratch relief), so
-    // the barrier switches on the shingle count we just computed — the
-    // same "size the plan to the decade" choice a 100 TB deployment
-    // makes via its scratch-capacity config.
-    // pinShared, not ckptIfBig: the self-join consumes prefix TWICE and
-    // AQE's cache-blind exchange reuse recomputes the whole ranked chain
-    // per side (see pinShared) — materialized once, both sides read the
-    // cache; above the size gate the checkpoint adds lineage release
-    val prefix = rankedShingles(sh, cParts)
-      .filter(col("rank") <= col("sz") - ceil(col("sz") * minJ) + 1)
-      .transform(pinShared(nSh))
-    // candidate join with two exact prunes beyond the prefix overlap:
-    //  - size compatibility: J >= minJ forces min(sz)/max(sz) >= minJ
-    //  - positional bound (PPJoin): overlap <= min(remaining suffix
-    //    lengths past this shared shingle) + 1
-    // then an AGGREGATED exact bound per pair (PPJoin+ suffix filter).
-    // Both docs' shingles are sorted by the same (df, h) total order, so
-    // with o prefix-prefix matches whose max matched ranks are (mra,
-    // mrb): every common shingle below the largest match is itself a
-    // prefix-prefix match (else its rank in the other doc would precede
-    // a prefix position — contradiction), and every one above it sits
-    // past BOTH max ranks. Hence exactly:
-    //   inter <= o + min(sza - mra, szb - mrb)
-    // and J >= minJ needs inter >= (sza+szb) * minJ/(1+minJ). This kills
-    // the junk class that 1000x exposed: short common-vocabulary docs
-    // sharing ONE high-df shingle at the tail of both prefixes (o = 1,
-    // mra ~ prefix end) passed the per-row prunes and exploded the
-    // verify phase to tens of GB of array-carrying shuffle; with the
-    // pair-level bound the verify set is the near-dup set (o tracks the
-    // true overlap), so verify cost is output-bound, not collision-bound.
-    val eqJ = minJ / (1 + minJ)
-    val cand = prefix.as("a")
-      .join(prefix.as("b"), col("a.h") === col("b.h") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        least(col("a.sz"), col("b.sz")) >=
-          ceil(greatest(col("a.sz"), col("b.sz")) * minJ) &&
-        least(col("a.sz") - col("a.rank"), col("b.sz") - col("b.rank")) + 1 >=
-          ceil(greatest(col("a.sz"), col("b.sz")) * minJ))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"),
-        col("a.rank").as("ra"), col("b.rank").as("rb"))
-      // the per-pair bound as STREAMING WINDOWS over a pair-co-located,
-      // pre-sorted collision stream — the rankedShingles shape applied
-      // to the pipeline's largest intermediate (522M rows at 1000x).
-      // Phase-attributed profiling put the operator's whole 13-15 GB
-      // disk spill in the former groupBy: its partial and final hash
-      // maps (both co-located) each held that partition's distinct
-      // pairs and fell back to sort-based aggregation. Here the
-      // exchange (pair-count-scaled partitions) + one in-partition
-      // Tungsten sort satisfy every window below, so o/mra/mrb stream
-      // with a ~2-row group buffer and rn==1 collapses each pair
-      // without any distinct aggregate. The join itself is cheap
-      // (~20 s, zero spill measured without the aggregate).
-      .transform { collisions =>
-        val byPair = Window.partitionBy("id_a", "id_b")
-        collisions
-          .repartition(pParts, col("id_a"), col("id_b"))
-          .sortWithinPartitions("id_a", "id_b", "ra")
-          .select(col("id_a"), col("id_b"), col("sza"), col("szb"),
-            count(lit(1)).over(byPair).as("o"),
-            max("ra").over(byPair).as("mra"),
-            max("rb").over(byPair).as("mrb"),
-            row_number().over(byPair.orderBy("ra")).as("rn"))
-      }
-      // the 1e-9 slack keeps FP rounding of minJ/(1+minJ) from ever
-      // pushing ceil past the exact integer threshold (rejecting a true
-      // pair); admitting a borderline extra candidate is harmless
-      .filter(col("rn") === 1 && col("o") +
-        least(col("sza") - col("mra"), col("szb") - col("mrb")) >=
-        ceil((col("sza") + col("szb")) * eqJ - 1e-9))
-      .select("id_a", "id_b")
-      // consumed twice below (verify probe + candidate-id prune), and
-      // localCheckpoint rather than persist: the pair list is tiny, and
-      // BREAKING its lineage phases the query — once candidates
-      // materialize, the self-join/prefix shuffles (the ~30 GB middle
-      // of the 1000x run) are collectable before the verify phase
-      // starts, so peak scratch is max(phase), not sum(phases)
-      .transform(ckptDisk)
-    // verification only ever consults CANDIDATE docs' shingle arrays —
-    // semi-prune sh before the collect_list groupBy, so the array-
-    // building shuffle is candidate-sized, not corpus-sized (at the
-    // 1000x probe the full-corpus `sets` was the single largest
-    // shuffle). candIds is the near-dup doc set — broadcastable by
-    // construction (dup rates are single-digit percents of the corpus)
-    val candIds = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val sets = sh.join(broadcast(candIds), "doc_id")
-      // co-locate before aggregating (the rankedShingles pattern): sh is
-      // partitioned by (doc_id, h), so the partial collect_list would
-      // build and EXCHANGE per-partition array fragments for ~every
-      // candidate doc; repartitioned, the exchange carries narrow
-      // 16-byte rows and each array is built exactly once
-      .repartition(col("doc_id"))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list("h")).as("shs"), count(lit(1)).as("sz"))
-      // consumed twice (the two pair-side joins) — pin, or the semi-join
-      // + array build runs once per side (see pinShared); candidate-sized
-      .transform(pinShared(nSh))
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("shs").as("sha"),
-        col("sz").as("sza")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("shs").as("shb"),
-        col("sz").as("szb")), "id_b")
-      .withColumn("i", interSorted(col("sha"), col("shb")))
-      .withColumn("j", col("i") / (col("sza") + col("szb") - col("i")))
-      .filter(col("j") >= minJ)
-      .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jac"))
-      .orderBy("id_a", "id_b")
+    val t = shingles(s, d)
+    // pinned: the self-join consumes prefix TWICE and AQE's cache-blind
+    // exchange reuse recomputes the whole ranked chain per side (see
+    // pinShared) — materialized once, both sides read the cache; above
+    // the size gate the checkpoint adds lineage release
+    val prefix = t.ranked.filter(inPrefix(minJ)).transform(t.pin)
+    val cand = t.candidates(prefix, prefix,
+      col("a.doc_id") < col("b.doc_id") && jaccardPrunes(minJ),
+      jaccardOverlap(minJ))
+    t.verified(cand).transform(jaccardAtLeast(minJ)).orderBy("id_a", "id_b")
   }
 
   /** Dedup threshold-tuning curve: near-dup pair counts and affected-
@@ -465,87 +498,17 @@ object Dedup {
     * 64-bit shingle sets (the jaccard collision argument); the oracle
     * replays with string shingles. */
   def containment(s: SparkSession, d: String): DataFrame = {
-    reg(s)
     val minC = 0.7
-    val cParts = corpusParts(s, d)
-    val sh = shingleHashes(s, d, cParts)
-      // serialized cache blocks: the deserialized default holds ~10 GB
-      // of row objects for a 265M-row shingle table at the third
-      // decade, crowding the unified region and starving the pair
-      // exchange's shuffle sorter (measured as pure shuffle-writer
-      // spill in the phase probe); SER blocks are ~5x smaller and
-      // evictable past the protected fraction
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val nSh = sh.count()
+    val t = shingles(s, d)
     // pinned: consumed as BOTH candidate-join sides (prefix filters it,
     // the container side probes it whole) — see pinShared
-    val ranked = rankedShingles(sh, cParts).transform(pinShared(nSh))
-    val prefix = ranked
-      .filter(col("rank") <= col("sz") - ceil(col("sz") * minC) + 1)
-    // per-pair aggregated suffix bound (the [[jaccard]] PPJoin+ proof
-    // holds one-sided too: matched elements have rank_a inside the
-    // prefix, so every common element below the largest match is itself
-    // matched, and the rest sit past both max matched ranks). Required
-    // overlap for containment >= minC is ceil(sza * minC).
-    val cand = prefix.as("a")
-      .join(ranked.as("b"), col("a.h") === col("b.h") &&
-        (col("a.sz") < col("b.sz") ||
-          (col("a.sz") === col("b.sz") &&
-            col("a.doc_id") < col("b.doc_id"))) &&
-        col("a.sz") - col("a.rank") + 1 >= ceil(col("a.sz") * minC))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"),
-        col("a.rank").as("ra"), col("b.rank").as("rb"))
-      // streaming-window pair bound over the co-located pre-sorted
-      // collision stream — see [[jaccard]]
-      .transform { collisions =>
-        val byPair = Window.partitionBy("id_a", "id_b")
-        collisions
-          .repartition(pairParts(s, d), col("id_a"), col("id_b"))
-          .sortWithinPartitions("id_a", "id_b", "ra")
-          .select(col("id_a"), col("id_b"), col("sza"), col("szb"),
-            count(lit(1)).over(byPair).as("o"),
-            max("ra").over(byPair).as("mra"),
-            max("rb").over(byPair).as("mrb"),
-            row_number().over(byPair.orderBy("ra")).as("rn"))
-      }
-      .filter(col("rn") === 1 && col("o") +
-        least(col("sza") - col("mra"), col("szb") - col("mrb")) >=
-        ceil(col("sza") * minC - 1e-9))
-      .select("id_a", "id_b")
-      // consumed twice below (verify probe + candidate-id prune), and
-      // localCheckpoint rather than persist: the pair list is tiny, and
-      // BREAKING its lineage phases the query — once candidates
-      // materialize, the self-join/prefix shuffles (the ~30 GB middle
-      // of the 1000x run) are collectable before the verify phase
-      // starts, so peak scratch is max(phase), not sum(phases)
-      .transform(ckptDisk)
-    // verification only ever consults CANDIDATE docs' shingle arrays —
-    // semi-prune sh before the collect_list groupBy, so the array-
-    // building shuffle is candidate-sized, not corpus-sized (at the
-    // 1000x probe the full-corpus `sets` was the single largest
-    // shuffle). candIds is the near-dup doc set — broadcastable by
-    // construction (dup rates are single-digit percents of the corpus)
-    val candIds = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val sets = sh.join(broadcast(candIds), "doc_id")
-      // co-locate before aggregating (the rankedShingles pattern): sh is
-      // partitioned by (doc_id, h), so the partial collect_list would
-      // build and EXCHANGE per-partition array fragments for ~every
-      // candidate doc; repartitioned, the exchange carries narrow
-      // 16-byte rows and each array is built exactly once
-      .repartition(col("doc_id"))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list("h")).as("shs"), count(lit(1)).as("sz"))
-      // consumed twice (the two pair-side joins) — pin, or the semi-join
-      // + array build runs once per side (see pinShared); candidate-sized
-      .transform(pinShared(nSh))
-    cand
-      .join(sets.select(col("doc_id").as("id_a"), col("shs").as("sha"),
-        col("sz").as("sza")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("shs").as("shb"),
-        col("sz").as("szb")), "id_b")
-      .withColumn("i", interSorted(col("sha"), col("shb")))
+    val ranked = t.ranked.transform(t.pin)
+    val cand = t.candidates(ranked.filter(inPrefix(minC)), ranked,
+      (col("a.sz") < col("b.sz") ||
+        (col("a.sz") === col("b.sz") && col("a.doc_id") < col("b.doc_id"))) &&
+        col("a.sz") - col("a.rank") + 1 >= ceil(col("a.sz") * minC),
+      ceil(col("sza") * minC - 1e-9)) // required overlap: ceil(sza * minC)
+    t.verified(cand)
       .withColumn("c", col("i") / col("sza"))
       .filter(col("c") >= minC)
       .select(col("id_a"), col("id_b"), col("sza").as("sz_a"),
@@ -568,72 +531,16 @@ object Dedup {
     * each batch probes it — this operator is that probe, expressed
     * relationally. */
   def incrementalNearDup(s: SparkSession, d: String): DataFrame = {
-    reg(s)
     val minJ = 0.5
-    val cParts = corpusParts(s, d)
-    val sh = shingleHashes(s, d, cParts)
-      // serialized cache blocks: the deserialized default holds ~10 GB
-      // of row objects for a 265M-row shingle table at the third
-      // decade, crowding the unified region and starving the pair
-      // exchange's shuffle sorter (measured as pure shuffle-writer
-      // spill in the phase probe); SER blocks are ~5x smaller and
-      // evictable past the protected fraction
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val nSh = sh.count()
+    val t = shingles(s, d)
     // pinned: BOTH candidate-join sides are filters of this frame — see
     // pinShared (the ranked chain otherwise recomputes per side)
-    val prefix = rankedShingles(sh, cParts)
-      .filter(col("rank") <= col("sz") - ceil(col("sz") * minJ) + 1)
-      .transform(pinShared(nSh))
-    val corpusPrefix = prefix.filter(col("doc_id") % 10 =!= 0)
-    val newPrefix = prefix.filter(col("doc_id") % 10 === 0)
-    // per-pair aggregated PPJoin+ suffix bound, same as [[jaccard]]
-    val eqJ = minJ / (1 + minJ)
-    val cand = corpusPrefix.as("a")
-      .join(newPrefix.as("b"), col("a.h") === col("b.h") &&
-        least(col("a.sz"), col("b.sz")) >=
-          ceil(greatest(col("a.sz"), col("b.sz")) * minJ) &&
-        least(col("a.sz") - col("a.rank"), col("b.sz") - col("b.rank")) + 1 >=
-          ceil(greatest(col("a.sz"), col("b.sz")) * minJ))
-      .select(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("new_id"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"),
-        col("a.rank").as("ra"), col("b.rank").as("rb"))
-      // streaming-window pair bound over the co-located pre-sorted
-      // collision stream — see [[jaccard]]
-      .transform { collisions =>
-        val byPair = Window.partitionBy("corpus_id", "new_id")
-        collisions
-          .repartition(pairParts(s, d), col("corpus_id"), col("new_id"))
-          .sortWithinPartitions("corpus_id", "new_id", "ra")
-          .select(col("corpus_id"), col("new_id"), col("sza"), col("szb"),
-            count(lit(1)).over(byPair).as("o"),
-            max("ra").over(byPair).as("mra"),
-            max("rb").over(byPair).as("mrb"),
-            row_number().over(byPair.orderBy("ra")).as("rn"))
-      }
-      .filter(col("rn") === 1 && col("o") +
-        least(col("sza") - col("mra"), col("szb") - col("mrb")) >=
-        ceil((col("sza") + col("szb")) * eqJ - 1e-9))
-      .select("corpus_id", "new_id")
-      .transform(ckptDisk) // consumed twice below (verify + candidate-id prune)
-    // verification arrays for CANDIDATE docs only — the jaccard semi-
-    // prune (this operator previously built the FULL corpus's arrays)
-    val candIds = cand.select(col("corpus_id").as("doc_id"))
-      .union(cand.select(col("new_id").as("doc_id"))).distinct()
-    val sets = sh.join(broadcast(candIds), "doc_id")
-      .repartition(col("doc_id")) // co-locate before the array build (see jaccard)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list("h")).as("shs"), count(lit(1)).as("sz"))
-      .transform(pinShared(nSh)) // consumed twice (see pinShared)
-    cand
-      .join(sets.select(col("doc_id").as("corpus_id"), col("shs").as("sha"),
-        col("sz").as("sza")), "corpus_id")
-      .join(sets.select(col("doc_id").as("new_id"), col("shs").as("shb"),
-        col("sz").as("szb")), "new_id")
-      .withColumn("i", interSorted(col("sha"), col("shb")))
-      .withColumn("j", col("i") / (col("sza") + col("szb") - col("i")))
-      .filter(col("j") >= minJ)
-      .select(col("corpus_id"), col("new_id"), round(col("j"), 4).as("jac"))
+    val prefix = t.ranked.filter(inPrefix(minJ)).transform(t.pin)
+    val cand = t.candidates(prefix.filter(col("doc_id") % 10 =!= 0),
+      prefix.filter(col("doc_id") % 10 === 0), jaccardPrunes(minJ),
+      jaccardOverlap(minJ))
+    t.verified(cand).transform(jaccardAtLeast(minJ))
+      .select(col("id_a").as("corpus_id"), col("id_b").as("new_id"), col("jac"))
       .orderBy("corpus_id", "new_id")
   }
 
@@ -861,7 +768,7 @@ object Dedup {
     val nEdges = symAll.count()
     val labels: DataFrame =
       if (nEdges <= smallThreshold) smallGraphLabels(s, symAll)
-      else bigGraphLabels(s, symAll, nEdges)
+      else bigGraphLabels(s, symAll, nEdges)._1
     // both paths return MATERIALIZED labels (localCheckpoint), so the
     // cached edge table can be dropped here — one cleanup point instead
     // of per-path, no leak across long-lived sessions
@@ -880,10 +787,6 @@ object Dedup {
       .transform(ckptDisk)
   }
 
-  /** Rounds the last [[bigGraphLabels]] run took — observability for
-    * the hub/chain stress spec's bounded-rounds assertion. */
-  @volatile private[graft] var lastCcRounds: Int = 0
-
   /** The distributed path: min-label propagation WITH POINTER JUMPING.
     * Each round is (a) one edge join + min aggregate — labels flow one
     * hop along graph edges — and (b) one node-sized self-join applying
@@ -900,9 +803,10 @@ object Dedup {
     * the HUB pattern (one label touching ~1% of docs) costs one
     * map-side-combined min aggregate, never a single giant task
     * (PipelineOpsSpec plants both shapes). A residual `changed` at the
-    * cap now THROWS instead of returning wrong labels. */
+    * cap now THROWS instead of returning wrong labels. Returns the
+    * labels and the number of rounds they took. */
   private[graft] def bigGraphLabels(
-      s: SparkSession, symAll: DataFrame, nEdges: Long): DataFrame = {
+      s: SparkSession, symAll: DataFrame, nEdges: Long): (DataFrame, Int) = {
     val parts = math.max(4, math.min(s.sparkContext.defaultParallelism,
       (nEdges / 500000L).toInt + 1))
     val sym = symAll.repartition(parts, col("src")).persist()
@@ -943,11 +847,10 @@ object Dedup {
       iter += 1
     }
     sym.unpersist()
-    lastCcRounds = iter
     require(changed == 0,
       s"label propagation did not converge in $iter rounds " +
         s"($changed labels still moving) — refusing to emit partial components")
-    labels
+    (labels, iter)
   }
 
   // ---- MinHash + LSH banding ----
@@ -963,12 +866,9 @@ object Dedup {
     * min-wise independent enough for banding, ~20x less work than 32
     * string hashes per shingle. */
   def minhashLsh(s: SparkSession, d: String): DataFrame = {
-    reg(s)
     val numHashes = 32
     val rowsPerBand = 4
-    val sh = shingleHashes(s, d, corpusParts(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // see jaccard
-    val nSh = sh.count() // pin before the sig/verify branches fan out
+    val t = shingles(s, d)
     // The 32-coordinate signature as a PARTIAL+FINAL min aggregate:
     // sig_k(doc) = min over shingles of mix(h ^ seed_k), and min is
     // mergeable — so the shuffle carries 32 longs per doc instead of the
@@ -987,7 +887,7 @@ object Dedup {
     // in EVERY partition — wider than the input it summarizes (measured
     // filling the 1000x probe's disk). Co-located, the aggregate is
     // single-phase and its state is partition-local docs only.
-    val sigs = sh.repartition(col("doc_id"))
+    val sigs = t.sh.repartition(col("doc_id"))
       .groupBy("doc_id").agg(mins.head, mins.tail: _*)
       .withColumn("sig",
         array((0 until numHashes).map(k => col(s"m$k")): _*))
@@ -1004,45 +904,30 @@ object Dedup {
       // join — unpinned, the whole signature pipeline (the 32-way min
       // aggregate over every shingle) recomputes per consumer (see
       // pinShared); ids-only rows, ~8 per doc
-      .transform(pinShared(nSh))
+      .transform(t.pin)
     // standard LSH hygiene: drop mega-buckets — a band value shared by
     // hundreds of docs is non-discriminative and quadratically explosive
     // (its true pairs still surface through their other 7 bands)
     val bandSizes = bands.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
     val pruned = bands.join(bandSizes.filter(col("bsz") <= 64), Seq("band", "bh"))
       // pinned: the candidate self-join consumes it twice (see pinShared)
-      .transform(pinShared(nSh))
+      .transform(t.pin)
     val cand = pruned.as("a")
       .join(pruned.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       // pair co-location before the dedup aggregate at the pair-scaled
-      // partition count — the [[jaccard]] bound-aggregate fix: a
-      // partial distinct over (band, bh)-partitioned join output holds
-      // ~every candidate pair per partition; partitioned by pair, the
-      // dedup maps are partition-local and sized to task memory
-      .repartition(pairParts(s, d), col("id_a"), col("id_b"))
+      // partition count: a partial distinct over (band, bh)-partitioned
+      // join output holds ~every candidate pair per partition;
+      // partitioned by pair, the dedup maps are partition-local and
+      // sized to task memory
+      .repartition(t.pParts, col("id_a"), col("id_b"))
       .distinct()
-      .transform(ckptDisk) // consumed twice; lineage break phases the query (see jaccard)
-    // exact-verification arrays built for CANDIDATE docs only — the
-    // same semi-prune as [[jaccard]]: the full-corpus collect_list was
-    // the operator's largest shuffle and its dominant 1000x spill
-    val candIds = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val docSh = sh.join(broadcast(candIds), "doc_id")
-      .repartition(col("doc_id")) // co-locate before the array build (see jaccard)
-      .groupBy("doc_id").agg(sort_array(collect_list("h")).as("shs"))
-      .transform(pinShared(nSh)) // consumed twice (see pinShared)
-    cand
-      .join(docSh.select(col("doc_id").as("id_a"), col("shs").as("sha")), "id_a")
-      .join(docSh.select(col("doc_id").as("id_b"), col("shs").as("shb")), "id_b")
-      .withColumn("i", interSorted(col("sha"), col("shb")))
-      .withColumn("j", col("i") /
-        (size(col("sha")) + size(col("shb")) - col("i")))
-      .filter(col("j") >= 0.5)
-      .select(col("id_a"), col("id_b"), round(col("j"), 4).as("jac"))
-      .orderBy("id_a", "id_b")
+      // consumed twice by the verify tail; the lineage break phases the
+      // query (see Shingles.candidates)
+      .transform(ckptDisk)
+    t.verified(cand).transform(jaccardAtLeast(0.5)).orderBy("id_a", "id_b")
   }
 
   // ---- SimHash ----
@@ -1483,12 +1368,12 @@ object Dedup {
            FROM scored WHERE dist <= 8 ORDER BY id_a, id_b"""
     }.toMap
 
-  /** Shared oracle CTE block: 3-gram shingles → exact Jaccard pairs at
-    * J >= 0.5 → transitive closure (recursive CTE; UNION dedups, so it
-    * terminates) → `lab(doc_id, rep)`, the min-label component map.
-    * Interpolated after `WITH RECURSIVE` by the dedup_clusters and
-    * split_leakage_safe oracles so both replay ONE definition. */
-  private val jaccClosureCtes: String =
+  /** Shared oracle CTE block of the shingle-dedup family: `sh(doc_id,
+    * sh)`, each doc's distinct 3-word shingles as strings, and
+    * `sz(doc_id, sz)`, their count — the sets the Spark side hashes.
+    * Interpolated after `WITH` (or `WITH RECURSIVE`) by every oracle
+    * that replays [[Shingles]]. */
+  private val shingleCtes: String =
     """toks AS (
            SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
                   generate_subscripts(string_split(text, ' '), 1) AS pos
@@ -1499,7 +1384,15 @@ object Dedup {
            FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
          sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
                 AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id)"""
+
+  /** Shared oracle CTE block: [[shingleCtes]] → exact Jaccard pairs at
+    * J >= 0.5 → transitive closure (recursive CTE; UNION dedups, so it
+    * terminates) → `lab(doc_id, rep)`, the min-label component map.
+    * Interpolated after `WITH RECURSIVE` by the dedup_clusters and
+    * split_leakage_safe oracles so both replay ONE definition. */
+  private val jaccClosureCtes: String =
+    s"""$shingleCtes,
          inter AS (
            SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -1517,6 +1410,22 @@ object Dedup {
            SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
          lab AS (SELECT a AS doc_id, least(a, min(b)) AS rep
                  FROM reach GROUP BY a)"""
+
+  /** Exact shingle-Jaccard pairs `(id_a, id_b, jac)` at J >= 0.5: the
+    * dedup_jaccard oracle, and dedup_minhash_lsh's (see there). */
+  private val jaccardOracle: String =
+    s"""WITH $shingleCtes,
+         inter AS (
+           SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
+           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+           GROUP BY 1, 2)
+         SELECT id_a, id_b,
+           round(i / (za.sz + zb.sz - i), 4) AS jac
+         FROM inter
+         JOIN sz za ON za.doc_id = id_a
+         JOIN sz zb ON zb.doc_id = id_b
+         WHERE i / (za.sz + zb.sz - i) >= 0.5
+         ORDER BY id_a, id_b"""
 
   private[graft] val staticOracles: Map[String, String] = Map(
     "corpus_diff" ->
@@ -1543,17 +1452,7 @@ object Dedup {
          WHERE a.h IS NULL OR b.h IS NULL OR a.h <> b.h
          ORDER BY doc_id""",
     "dedup_jaccard_curve" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+      s"""WITH $shingleCtes,
          inter AS (
            SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -1582,17 +1481,7 @@ object Dedup {
          LEFT JOIN nd ON nd.threshold = th.threshold
          ORDER BY th.threshold""",
     "dedup_containment" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+      s"""WITH $shingleCtes,
          inter AS (
            SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id <> b.doc_id
@@ -1703,69 +1592,15 @@ object Dedup {
          SELECT count(*) AS n_docs, count(DISTINCT h) AS n_unique,
            CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_removed
          FROM r""",
-    "dedup_jaccard" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           round(i / (za.sz + zb.sz - i), 4) AS jac
-         FROM inter
-         JOIN sz za ON za.doc_id = id_a
-         JOIN sz zb ON zb.doc_id = id_b
-         WHERE i / (za.sz + zb.sz - i) >= 0.5
-         ORDER BY id_a, id_b""",
+    "dedup_jaccard" -> jaccardOracle,
     // Same oracle as dedup_jaccard: LSH candidates are VERIFIED with the
     // exact Jaccard, so the output equals the exact join whenever banding
     // recall is 1.0 — which it is on the gate datasets (checked at
     // sf0.001 and sf0.01); the oracle thus also asserts the recall
     // contract, not just the verify step.
-    "dedup_minhash_lsh" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-         inter AS (
-           SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
-           FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           round(i / (za.sz + zb.sz - i), 4) AS jac
-         FROM inter
-         JOIN sz za ON za.doc_id = id_a
-         JOIN sz zb ON zb.doc_id = id_b
-         WHERE i / (za.sz + zb.sz - i) >= 0.5
-         ORDER BY id_a, id_b""",
+    "dedup_minhash_lsh" -> jaccardOracle,
     "dedup_pipeline" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+      raw"""WITH $shingleCtes,
          inter AS (
            SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -1807,17 +1642,7 @@ object Dedup {
              AS total_tokens
          FROM f2""",
     "dedup_incremental" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+      s"""WITH $shingleCtes,
          inter AS (
            SELECT a.doc_id corpus_id, b.doc_id new_id, count(*) i
            FROM sh a JOIN sh b ON a.sh = b.sh
@@ -1935,17 +1760,7 @@ object Dedup {
          WHERE list_cosine_similarity(a.v, b.v) >= 0.4
          ORDER BY id_a, id_b""",
     "dedup_ensemble" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-                  generate_subscripts(string_split(text, ' '), 1) AS pos
-           FROM documents),
-         sh3 AS (
-           SELECT doc_id,
-             tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS sh
-           FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         sh AS (SELECT DISTINCT doc_id, sh FROM sh3 WHERE sh IS NOT NULL
-                AND len(string_split(sh, ' ')) = 3),
-         sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+      s"""WITH $shingleCtes,
          inter AS (
            SELECT a.doc_id id_a, b.doc_id id_b, count(*) i
            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id

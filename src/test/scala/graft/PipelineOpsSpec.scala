@@ -52,6 +52,45 @@ class PipelineOpsSpec extends SessionSuite {
     expect.foreach { case (k, j) => assert(math.abs(got(k) - j) < 1e-4, s"$k") }
     assert(got((0L, 1L)) === 0.5) // the exact-threshold pair survived
     assert(!got.contains((2L, 3L))) // the junk-class pair is sub-threshold
+
+    // the other callers of the same set-similarity join, same corpus:
+    // containment C >= 0.7, smaller set first, lower id on a size tie
+    val expectC = (for {
+      a <- sets.keys; b <- sets.keys if a != b
+      (sa, sb) = (sets(a).size, sets(b).size) if sa < sb || (sa == sb && a < b)
+      c = (sets(a) & sets(b)).size.toDouble / sa if c >= 0.7
+    } yield (a, b) -> ((sa.toLong, sb.toLong, c))).toMap
+    val gotC = Dedup.containment(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
+    assert(gotC.keySet === expectC.keySet,
+      s"missing=${expectC.keySet -- gotC.keySet} extra=${gotC.keySet -- expectC.keySet}")
+    expectC.foreach { case (k, (sa, sb, c)) =>
+      val (ga, gb, gc) = gotC(k)
+      assert(ga === sa && gb === sb && math.abs(gc - c) < 1e-4, s"$k")
+    }
+    assert(gotC((0L, 1L)) === ((2L, 4L, 1.0))) // doc 0 sits whole in doc 1
+
+    // incremental: new docs (doc_id % 10 == 0) against the rest, J >= 0.5
+    val expectI = expect.toSeq.flatMap { case ((a, b), j) =>
+      if (a % 10 != 0 && b % 10 == 0) Some((a, b) -> j)
+      else if (b % 10 != 0 && a % 10 == 0) Some((b, a) -> j)
+      else None
+    }.toMap
+    val gotI = Dedup.incrementalNearDup(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(gotI.keySet === expectI.keySet,
+      s"missing=${expectI.keySet -- gotI.keySet} extra=${gotI.keySet -- expectI.keySet}")
+    expectI.foreach { case (k, j) => assert(math.abs(gotI(k) - j) < 1e-4, s"$k") }
+    assert(gotI((1L, 0L)) === 0.5) // the boundary pair, corpus doc 1 vs new doc 0
+
+    // minhash-LSH: banding may miss pairs, verify must not invent or
+    // misscore any; the exact duplicates always share every band
+    val gotM = Dedup.minhashLsh(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(gotM.keySet.subsetOf(expect.keySet), s"extra=${gotM.keySet -- expect.keySet}")
+    gotM.foreach { case (k, j) => assert(j === got(k), s"$k") }
+    assert(gotM.contains((4L, 5L)))
   }
 
   test("shingle3_hashes kernel == split/transform/concat_ws/xxhash64 " +
@@ -132,7 +171,7 @@ class PipelineOpsSpec extends SessionSuite {
     val sym = spark.createDataFrame(
       edges.flatMap { case (a, b) => Seq((a, b), (b, a)) })
       .toDF("src", "dst").persist()
-    val labels = Dedup.bigGraphLabels(spark, sym, edges.size * 2L)
+    val (labels, _) = Dedup.bigGraphLabels(spark, sym, edges.size * 2L)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 200000)
     got.foreach { case (n, l) =>
@@ -164,7 +203,7 @@ class PipelineOpsSpec extends SessionSuite {
     val sym = spark.createDataFrame(
       edges.flatMap { case (a, b) => Seq((a, b), (b, a)) })
       .toDF("src", "dst").persist()
-    val labels = Dedup.bigGraphLabels(spark, sym, edges.size * 2L)
+    val (labels, rounds) = Dedup.bigGraphLabels(spark, sym, edges.size * 2L)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 20001 + 512 + 3000)
     // hub: min member is leaf 5000001, center included
@@ -182,8 +221,7 @@ class PipelineOpsSpec extends SessionSuite {
     }
     // bounded rounds: log2(511) ~ 9 plus propagation slack — far under
     // the cap the chain alone would have blown one-hop
-    assert(Dedup.lastCcRounds <= 20,
-      s"took ${Dedup.lastCcRounds} rounds")
+    assert(rounds <= 20, s"took $rounds rounds")
     sym.unpersist()
   }
 
